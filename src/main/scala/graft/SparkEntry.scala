@@ -1214,11 +1214,11 @@ object SparkEntry {
         .orderBy("snap", "c_custkey")
     }),
     // small-files compaction round trip: documents staged as 64 tiny
-    // files, compacted to the byte target via the reader-safe generation
-    // swap (new gen dir + completion marker; readers resolve the highest
-    // stamped generation) — the rewritten lake must aggregate identically
-    // to the source table (file counts/GC/reader-safety are spec-pinned;
-    // content is the gate)
+    // files, compacted to the byte target by a snapshot commit (the
+    // plain dir is adopted with ONE rewrite into snapshot 1; readers
+    // resolve through its manifest) — the rewritten lake must aggregate
+    // identically to the source table (file counts/GC/reader-safety are
+    // spec-pinned; content is the gate)
     "lake_compact_files" -> ((s, d) => {
       val stage = s"/tmp/graft_lake_compact/${new java.io.File(d).getName}"
       T(s, d, "documents").repartition(64)

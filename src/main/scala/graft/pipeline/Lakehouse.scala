@@ -156,121 +156,76 @@ object Lakehouse {
     * (the canonical lake-maintenance chore); this rewrites the SAME rows
     * into ceil(bytes / targetBytes) files.
     *
-    * READER-SAFE generation layout (no live-directory renames — the
-    * r14-adjudicated flaw of the tmp+two-rename swap, whose window left
-    * NO directory at the live path and whose atomicity assumption does
-    * not hold on object stores): each compaction writes a fresh
-    * `<path>/_gen-<n>` directory and stamps it with a `_GRAFT_COMPLETE`
-    * marker AFTER the write finishes. Currency is resolved by
-    * [[resolveCompacted]] — the highest stamped generation — so the
-    * table becomes current exactly when one small marker object appears
-    * (a single create/put, atomic on HDFS, POSIX and S3-class stores
-    * alike; nothing here renames a directory). A crash mid-write leaves
-    * an unstamped partial generation that resolution ignores and the
-    * next compaction deletes.
+    * Compaction is a SNAPSHOT COMMIT ([[commitSnapshot]]), the lake's
+    * one commit protocol. On a plain parquet directory the first
+    * compaction IS the adoption: the loose files are rewritten ONCE, at
+    * the byte target, into a generation committed as snapshot 1. On a
+    * snapshot-managed root it is [[compactDrifted]]. Currency flips with
+    * the manifest put, a crash mid-write leaves only unreferenced
+    * generations, and retention belongs to [[snapshotGc]] alone.
     *
     * Reader contract: resolve through [[resolveCompacted]] /
-    * [[readCompacted]]. A resolution stays readable for ONE full
-    * compaction cycle — the GC keeps the current and previous
-    * generations and deletes older ones — so a reader is safe unless it
-    * holds a resolution across two subsequent compactions (document the
-    * cadence, e.g. daily compaction ⇒ resolutions older than a day must
-    * re-resolve). A plain un-compacted directory (loose data files, no
-    * generations) resolves to itself, so adopting this scheme needs no
-    * migration; the loose files are GC'd one cycle after the first
-    * compaction like any superseded generation.
-    *
-    * NAIVE reads degrade stale-correct → LOUD, never silently wrong:
-    * generation dirs are underscore-hidden ([[GenName]]), so a raw
-    * recursive `spark.read.parquet(root)` sees only the pre-adoption
-    * loose files — the SAME rows, compaction being content-preserving —
-    * for exactly the one cycle they are kept; the moment the loose files
-    * are GC'd the compactor plants a small visible non-parquet
-    * [[Sentinel]] file, which the naive read trips over with a
-    * footer-parse error naming this contract (instead of returning an
-    * empty/partial table). Managed readers resolve to a generation dir
-    * and never list the root as data.
+    * [[readCompacted]]; a resolution stays readable until [[snapshotGc]]
+    * drops the snapshot that committed it. NAIVE reads degrade
+    * stale-correct → LOUD, never silently wrong: generations are
+    * listing-hidden, so a raw `spark.read.parquet(root)` sees the
+    * pre-adoption loose files (the SAME rows) until the first
+    * [[snapshotGc]] reclaims them and plants the [[Sentinel]], which the
+    * naive read trips over with a footer-parse error.
     *
     * Idempotent: a table already at or under the target file count
-    * returns untouched. Returns (filesBefore, filesAfter, bytes). */
+    * returns untouched. Returns (filesBefore, filesAfter, bytes), summed
+    * over every entry of a managed lake. */
   def compactFiles(spark: org.apache.spark.sql.SparkSession, path: String,
                    targetBytes: Long = 128L << 20): (Int, Int, Long) = {
-    val conf = spark.sparkContext.hadoopConfiguration
     val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(conf)
-    require(!fs.exists(new org.apache.hadoop.fs.Path(root, LakeDir)),
-      s"$path is snapshot-managed ($LakeDir exists): compact it through " +
-        "compactDrifted/commitSnapshot so the manifest stays the single " +
-        "commit point — marker-based compaction would orphan its references")
-    val before = dataFiles(fs, new org.apache.hadoop.fs.Path(
-      resolveCompacted(spark, path)))
-    val bytes = before.map(_.getLen).sum
-    val target = math.max(1, ((bytes + targetBytes - 1) / targetBytes).toInt)
-    if (before.length <= target) return (before.length, before.length, bytes)
-
-    val n = currentGenDir(fs, root).map(_._1).getOrElse(0) + 1
-    val next = new org.apache.hadoop.fs.Path(root, f"_gen-$n%08d")
-    fs.delete(next, true) // an unstamped partial from a crashed run
-    spark.read.parquet(resolveCompacted(spark, path)).repartition(target)
-      .write.mode("overwrite").parquet(next.toString)
-    fs.create(new org.apache.hadoop.fs.Path(next, CompleteMarker), true).close()
-    // GC everything older than the PREVIOUS generation: stamped gens
-    // <= n-2 (legacy visible `gen-` names included), every unstamped
-    // partial below n, and (once the previous generation is itself a gen
-    // dir, n >= 2) the pre-adoption loose files at the root
-    fs.listStatus(root).foreach { st =>
-      genNum(st.getPath.getName) match {
-        case Some(g) if st.isDirectory &&
-          (g <= n - 2 || (g < n && !stamped(fs, st.getPath))) =>
-          fs.delete(st.getPath, true)
-        case _ => ()
-      }
+    val fs = fsOf(spark, root)
+    if (fs.exists(new org.apache.hadoop.fs.Path(root, LakeDir))) {
+      val swept = sweepSnapshot(spark, path, targetBytes)
+      return (swept.map(_._2).sum, swept.map(_._3).sum, swept.map(_._4).sum)
     }
-    if (n >= 2) {
-      dataFiles(fs, root).foreach(st => fs.delete(st.getPath, false))
-      // the loose files were the last thing a naive read could see
-      // (generations are listing-hidden): from here a raw read of the
-      // root must fail LOUDLY on the sentinel, never return empty
-      plantSentinel(fs, root)
-    }
-    (before.length, dataFiles(fs, next).length, bytes)
+    requireNoMarkerLayout(fs, root)
+    val loose = dataFiles(fs, root)
+    val bytes = loose.map(_.getLen).sum
+    val target = fileTarget(bytes, targetBytes)
+    if (loose.length <= target) return (loose.length, loose.length, bytes)
+    val id = commitSnapshot(spark, path,
+      Seq("" -> spark.read.parquet(path).repartition(target)))
+    (loose.length, manifestAt(spark, path, Some(id)).files("").size, bytes)
   }
 
-  private val CompleteMarker = "_GRAFT_COMPLETE"
-  /** Generation dirs are UNDERSCORE-hidden: Spark/Hadoop listing filters
-    * skip `_`-names, so a naive recursive read of a managed root sees
-    * only the pre-adoption loose files (stale but CORRECT — compaction
-    * is content-preserving) instead of double-counting generations;
-    * explicitly-resolved generation paths read normally (input roots are
-    * not filtered, only discovered children). */
-  private val GenName = "^_gen-(\\d{8})$".r
-  /** Pre-r16 layout used VISIBLE `gen-<n>` names; recognizing them keeps a
-    * table compacted under the old format resolvable (silently resolving
-    * to the bare root — empty or doubled rows — was the failure mode). */
-  private val LegacyGenName = "^gen-(\\d{8})$".r
+  /** Files a `bytes`-sized entry should hold at `targetBytes` each. */
+  private def fileTarget(bytes: Long, targetBytes: Long): Int =
+    math.max(1L, (bytes - 1) / targetBytes + 1).toInt
 
-  /** Marker-managed generation number of `name`, current or legacy. */
-  private def genNum(name: String): Option[Int] = name match {
-    case GenName(g)       => Some(g.toInt)
-    case LegacyGenName(g) => Some(g.toInt)
-    case _                => None
+  /** Sequentially numbered generations (`_gen-00000001`, visible
+    * `gen-00000001` before it) were written only by the retired
+    * marker-generation compaction, and such a root keeps its current rows
+    * in one of them: reading it as loose files, or adopting it as an
+    * empty base, would silently serve stale or no rows — refuse loudly.
+    * Writer-unique `_gen-<nonce>` dirs and the sentinel on an unmanaged
+    * root are relics of a crashed first snapshot commit, not this. */
+  private val MarkerGenName = "^_?gen-\\d{8}$".r
+  private def requireNoMarkerLayout(fs: org.apache.hadoop.fs.FileSystem,
+                                    r: org.apache.hadoop.fs.Path): Unit = {
+    val old = fs.listStatus(r).toSeq.filter(_.isDirectory)
+      .map(_.getPath.getName).filter(MarkerGenName.matches).sorted
+    if (old.nonEmpty) throw new IllegalStateException(
+      s"$r was compacted by the retired marker-generation layout " +
+        s"(${old.mkString(", ")}): copy its newest generation out as a " +
+        "plain parquet directory and compact or commit that instead")
   }
 
-  /** Any generation directory name, either scheme: marker-managed
-    * sequential (`_gen-00000003`, legacy `gen-00000003`) or snapshot
-    * writer-unique (`_gen-<nonce>`). Used by GC walks, which must reclaim
-    * relics of every naming era. */
-  private def isGenDirName(name: String): Boolean =
-    name.startsWith("_gen-") || LegacyGenName.matches(name)
-
-  /** Generation name for SNAPSHOT-managed data dirs: WRITER-UNIQUE (a
-    * random nonce), never listing-max+1. Currency comes from the manifest
-    * alone, so names carry no order — and sequential naming let two
-    * concurrent same-partition committers pick the SAME dir, where the
-    * loser's overwrite corrupts the data the winner's manifest references
-    * BEFORE the manifest CAS can object (the r16 lost-update hole). With a
-    * nonce every writer's dirs are disjoint by construction; the manifest
-    * CAS arbitrates the commit and the loser's orphan dirs are
+  /** Generation name for snapshot data dirs: UNDERSCORE-hidden, so a
+    * naive recursive read of a managed root never lists generations
+    * (explicitly resolved generation paths read normally); and
+    * WRITER-UNIQUE (a random nonce), never listing-max+1. Currency comes from the manifest alone, so
+    * names carry no order — and sequential naming let two concurrent
+    * same-partition committers pick the SAME dir, where the loser's
+    * overwrite corrupts the data the winner's manifest references
+    * BEFORE the manifest CAS can object (the r16 lost-update hole). With
+    * a nonce every writer's dirs are disjoint by construction; the
+    * manifest CAS arbitrates the commit and the loser's orphan dirs are
     * [[snapshotGc]] relics. */
   private def snapGenName(): String = {
     val u = java.util.UUID.randomUUID()
@@ -283,27 +238,23 @@ object Lakehouse {
     * footer parse with the file name in the error. */
   private[graft] val Sentinel = "GRAFT_MANAGED_TABLE_SEE_resolveCompacted"
 
-  private def plantSentinel(fs: org.apache.hadoop.fs.FileSystem,
-                            dir: org.apache.hadoop.fs.Path): Unit = {
+  /** Plant the sentinel unless the dir still holds loose data files a
+    * naive reader legitimately reads (the stale-but-correct adoption
+    * window — adoption is content-preserving, so until the loose copies
+    * are GC'd a raw read returns the right rows). */
+  private def plantSentinelIfBare(fs: org.apache.hadoop.fs.FileSystem,
+                                  dir: org.apache.hadoop.fs.Path): Unit = {
     val p = new org.apache.hadoop.fs.Path(dir, Sentinel)
-    if (!fs.exists(p)) {
+    if (dataFiles(fs, dir).isEmpty && !fs.exists(p)) {
       val out = fs.create(p, true)
-      out.write(("this table is generation-managed by graft: read it " +
-        "through Lakehouse.resolveCompacted/readCompacted (or " +
-        "readSnapshot for a snapshot-managed lake) — its data lives in " +
-        "listing-hidden generation directories a raw recursive parquet " +
-        "read cannot see\n").getBytes("UTF-8"))
+      out.write(("this table is snapshot-managed by graft: read it " +
+        "through Lakehouse.readSnapshot (or resolveCompacted/" +
+        "readCompacted) — its data lives in listing-hidden generation " +
+        "directories a raw recursive parquet read cannot see\n")
+        .getBytes("UTF-8"))
       out.close()
     }
   }
-
-  /** Plant the sentinel unless the dir still holds loose data files a
-    * naive reader legitimately reads (the stale-but-correct adoption
-    * window — compaction/adoption is content-preserving, so until the
-    * loose copies are GC'd a raw read returns the right rows). */
-  private def plantSentinelIfBare(fs: org.apache.hadoop.fs.FileSystem,
-                                  dir: org.apache.hadoop.fs.Path): Unit =
-    if (dataFiles(fs, dir).isEmpty) plantSentinel(fs, dir)
 
   private def dataFiles(fs: org.apache.hadoop.fs.FileSystem,
                         p: org.apache.hadoop.fs.Path) =
@@ -312,62 +263,38 @@ object Lakehouse {
       st.isFile && !n.startsWith("_") && !n.startsWith(".") && n != Sentinel
     }
 
-  private def stamped(fs: org.apache.hadoop.fs.FileSystem,
-                      p: org.apache.hadoop.fs.Path): Boolean =
-    fs.exists(new org.apache.hadoop.fs.Path(p, CompleteMarker))
-
-  /** Highest COMPLETE generation under `root` — (number, dir), if any.
-    * Matches current `_gen-` AND legacy visible `gen-` names, so a table
-    * last compacted by the pre-r16 layout still resolves to its newest
-    * stamped generation instead of silently falling back to the bare
-    * root. */
-  private def currentGenDir(fs: org.apache.hadoop.fs.FileSystem,
-                            root: org.apache.hadoop.fs.Path
-                           ): Option[(Int, org.apache.hadoop.fs.Path)] = {
-    val gens = fs.listStatus(root).collect {
-      case st if st.isDirectory && genNum(st.getPath.getName).isDefined &&
-        stamped(fs, st.getPath) =>
-        (genNum(st.getPath.getName).get, st.getPath)
-    }
-    if (gens.isEmpty) None else Some(gens.maxBy(_._1))
-  }
-
   /** The directory currently holding `path`'s data: for a
-    * SNAPSHOT-managed table ([[commitSnapshot]]' layout) the data dir
-    * the current manifest commits; otherwise the highest complete
-    * generation ([[compactFiles]]' layout), or `path` itself when no
-    * generation exists (a plain parquet directory). Resolution is a
-    * directory listing plus one marker existence check per generation —
-    * cheap, and the returned path stays valid for one full compaction
-    * cycle (see [[compactFiles]]' reader contract). */
+    * snapshot-managed table the one data dir its current manifest
+    * commits (a lake with any partitioned entry throws — one directory
+    * cannot represent it; read it through [[readSnapshot]]); otherwise
+    * `path` itself, a plain parquet directory. A resolution stays
+    * readable until [[snapshotGc]] drops the snapshot that committed it
+    * (see [[compactFiles]]' reader contract). */
   def resolveCompacted(spark: org.apache.spark.sql.SparkSession,
                        path: String): String = {
     val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(root, LakeDir))) {
-      // ONLY an exactly-one-entry, root-keyed manifest resolves to a
-      // single directory. A manifest with ANY other partition — even
-      // alongside a "" entry (the adopt-then-partitioned-commit layout) —
-      // throws: returning just the root entry's dir would be a silently
-      // PARTIAL table, the worst of the three outcomes
-      val m = currentManifest(spark, path)
-      return m.toSeq match {
-        case Seq(("", gen)) =>
-          new org.apache.hadoop.fs.Path(root, gen).toString
-        case _ => throw new IllegalStateException(
-          s"$path is a snapshot-managed PARTITIONED lake " +
-            s"(${m.size} partitions): one directory cannot represent " +
-            "it — read through readSnapshot(root)")
-      }
+    val fs = fsOf(spark, root)
+    if (!fs.exists(new org.apache.hadoop.fs.Path(root, LakeDir))) {
+      if (fs.exists(root)) requireNoMarkerLayout(fs, root)
+      return path
     }
-    currentGenDir(fs, root) match {
-      case Some((_, dir)) => dir.toString
-      case None           => path
+    // ONLY an exactly-one-entry, root-keyed manifest resolves to a single
+    // directory. A manifest with ANY other partition — even alongside a
+    // "" entry (the adopt-then-partitioned-commit layout) — throws:
+    // returning just the root entry's dir would be a silently PARTIAL
+    // table, the worst of the three outcomes
+    val m = currentManifest(spark, path)
+    m.toSeq match {
+      case Seq(("", gen)) => new org.apache.hadoop.fs.Path(root, gen).toString
+      case _ => throw new IllegalStateException(
+        s"$path is a snapshot-managed PARTITIONED lake " +
+          s"(${m.size} partitions): one directory cannot represent " +
+          "it — read through readSnapshot(root)")
     }
   }
 
   /** `spark.read.parquet` over [[resolveCompacted]] — how readers open a
-    * compaction-managed table. */
+    * compacted table. */
   def readCompacted(spark: org.apache.spark.sql.SparkSession,
                     path: String): DataFrame =
     spark.read.parquet(resolveCompacted(spark, path))
@@ -1153,16 +1080,16 @@ object Lakehouse {
           "characters, traversal, or a hidden-prefix collision) — clean " +
           "or bucket the column before committing")
 
-  /** Lake-wide ATOMIC multi-partition commit — the transaction the
-    * generation machinery alone lacks: a content-CHANGING write touching
-    * several partitions ([[applyCdc]]/[[mergeUpsert]]/[[scd2Apply]]
-    * outputs) must never expose partition A's new state with partition
-    * B's old one. Each write lands in a fresh UNSTAMPED generation dir
-    * under its partition; currency flips for ALL of them at once when
-    * [[commitManifest]] puts the one manifest file — until that instant
-    * every reader resolves the previous snapshot in full, and a crash
-    * mid-write leaves unreferenced generations the next [[snapshotGc]]
-    * removes (the old snapshot stays intact: crash-relic contract).
+  /** Lake-wide ATOMIC multi-partition commit — the lake's one commit
+    * protocol: a content-CHANGING write touching several partitions
+    * ([[applyCdc]]/[[mergeUpsert]]/[[scd2Apply]] outputs) must never
+    * expose partition A's new state with partition B's old one. Each
+    * write lands in a fresh generation dir under its partition; currency
+    * flips for ALL of them at once when [[commitManifest]] puts the one
+    * manifest file — until that instant every reader resolves the
+    * previous snapshot in full, and a crash mid-write leaves
+    * unreferenced generations the next [[snapshotGc]] removes (the old
+    * snapshot stays intact: crash-relic contract).
     *
     * `writes` maps a partition-relative dir (`"lang=en"`; `""` for an
     * unpartitioned table) to its FULL new content. Unnamed partitions
@@ -1173,8 +1100,8 @@ object Lakehouse {
     * Contract: partition VALUES ride in the data columns (the manifest
     * key is bookkeeping, not hive inference — that is what lets
     * [[readSnapshot]] plan ONE multi-root scan instead of a union per
-    * partition). Adopting a plain parquet dir rewrites it once into
-    * `_gen-00000001` as snapshot 1's base; a hive-partitioned lake whose
+    * partition). Adopting a plain parquet dir rewrites it once into a
+    * generation as snapshot 1's base; a hive-partitioned lake whose
     * files lack the partition columns must be committed explicitly,
     * partition by partition, with the values materialized.
     *
@@ -1184,8 +1111,13 @@ object Lakehouse {
     * explicit-schema contract); a same-name TYPE conflict throws loudly
     * (a type change is a rewrite, not an evolution). Readers never pay
     * per-file footer merging, and time travel reads each snapshot under
-    * the schema it was committed with. Returns the committed snapshot
-    * id. */
+    * the schema it was committed with.
+    *
+    * SKIP LAYER: the rewritten partitions record per-file stats on
+    * `statsCols` and bloom sidecars on `bloomCols`; left empty, each
+    * falls back to the columns the base manifest already skips on, then
+    * to the session default ([[skipCols]]), so no rewrite silently
+    * strips the layer. Returns the committed snapshot id. */
   def commitSnapshot(spark: org.apache.spark.sql.SparkSession, root: String,
                      writes: Seq[(String, DataFrame)],
                      expectedSnapshot: Option[Int] = None,
@@ -1219,12 +1151,6 @@ object Lakehouse {
     val r = new org.apache.hadoop.fs.Path(root)
     val fs = fsOf(spark, r)
     requireCasCapable(spark, fs, root) // fail BEFORE writing any data
-    val effStats = effectiveStatsCols(spark, statsCols)
-    val effBloom = effectiveBloomCols(spark, bloomCols)
-    writes.foreach { case (rel, df) =>
-      requireStatsSupported(effStats, df, rel)
-      requireBloomSupported(effBloom, df, rel)
-    }
     // `expectedSnapshot` pins the base this commit derives from (the
     // caller read its inputs under it) — optimistic concurrency: if a
     // competitor committed base+1 meanwhile, fail fast BEFORE writing
@@ -1247,6 +1173,14 @@ object Lakehouse {
     val prior: Option[Manifest] =
       if (baseId == 0) None
       else Some(readManifest(fs, snapFile(r, baseId, branch)))
+    val effStats = skipCols(spark, statsCols,
+      prior.toSeq.flatMap(manifestStatsCols), StatsColsConf)
+    val effBloom = skipCols(spark, bloomCols,
+      prior.toSeq.flatMap(manifestBloomCols), BloomColsConf)
+    writes.foreach { case (rel, df) =>
+      requireStatsSupported(effStats, df, rel)
+      requireBloomSupported(effBloom, df, rel)
+    }
     val base: Map[String, String] = prior.map(_.mapping).getOrElse(
       adoptLoose(spark, fs, r, writes.exists(_._1.isEmpty)))
     // base schema: the prior snapshot's recorded one; a pre-schema or
@@ -1528,22 +1462,30 @@ object Lakehouse {
     }
   }
 
-  /** Stats columns for this commit: the explicit param, else the session
-    * default `graft.lake.statsCols` (comma-separated), else none. */
-  private def effectiveStatsCols(spark: org.apache.spark.sql.SparkSession,
-                                 statsCols: Seq[String]): Seq[String] =
-    if (statsCols.nonEmpty) statsCols
-    else spark.conf.get("graft.lake.statsCols", "")
+  private val StatsColsConf = "graft.lake.statsCols"
+  private val BloomColsConf = "graft.lake.bloomCols"
+
+  /** The skip-layer columns (stats or blooms) a rewrite records, decided
+    * in ONE place: the explicit argument, else the columns the base
+    * manifest already skips on (a rewrite must never strip the layer
+    * from the partitions it replaces), else the session default `conf`
+    * (comma-separated), else none. */
+  private def skipCols(spark: org.apache.spark.sql.SparkSession,
+                       explicit: Seq[String], fromBase: Seq[String],
+                       conf: String): Seq[String] =
+    if (explicit.nonEmpty) explicit
+    else if (fromBase.nonEmpty) fromBase
+    else spark.conf.get(conf, "")
       .split(",").map(_.trim).filter(_.nonEmpty).toSeq
+
+  /** Columns a manifest currently skips on — the middle rung of
+    * [[skipCols]]. */
+  private def manifestStatsCols(m: Manifest): Seq[String] =
+    m.stats.values.flatMap(_.values.flatMap(_.keys)).toSeq.distinct.sorted
+  private def manifestBloomCols(m: Manifest): Seq[String] =
+    m.blooms.values.flatten.toSeq.distinct.sorted
 
   // ---- per-file BLOOM sidecars: the point-lookup skip layer -----------------
-
-  /** Like stats columns: explicit param, else `graft.lake.bloomCols`. */
-  private def effectiveBloomCols(spark: org.apache.spark.sql.SparkSession,
-                                 bloomCols: Seq[String]): Seq[String] =
-    if (bloomCols.nonEmpty) bloomCols
-    else spark.conf.get("graft.lake.bloomCols", "")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSeq
 
   /** Bloom columns are point-lookup domains: integral or string (a
     * float/decimal equality probe is a modeling bug, not a skip case). */
@@ -1811,15 +1753,16 @@ object Lakehouse {
       if (seen(f.name) < sources.size) f.copy(nullable = true) else f))
   }
 
-  /** First-commit adoption: a plain unpartitioned parquet dir (loose
-    * files, or a marker-managed current generation) becomes the `""`
-    * entry of the base mapping by ONE content-preserving rewrite into a
-    * generation dir — snapshot data always lives in (listing-hidden)
-    * generations, so no manifest ever references a directory the
-    * sentinel could also land in.
+  /** First-commit adoption: a plain unpartitioned parquet dir's loose
+    * files become the `""` entry of the base mapping by ONE
+    * content-preserving rewrite into a generation dir — snapshot data
+    * always lives in (listing-hidden) generations, so no manifest ever
+    * references a directory the sentinel could also land in.
     * Skipped when this very commit overwrites `""` anyway. Partitioned
     * pre-snapshot lakes must be committed explicitly (their hive files
-    * lack the partition columns — see [[commitSnapshot]]). */
+    * lack the partition columns — see [[commitSnapshot]]), and a root
+    * left by the retired marker-generation layout is refused
+    * ([[requireNoMarkerLayout]]). */
   private def adoptLoose(spark: org.apache.spark.sql.SparkSession,
                          fs: org.apache.hadoop.fs.FileSystem,
                          r: org.apache.hadoop.fs.Path,
@@ -1831,14 +1774,12 @@ object Lakehouse {
       s"$r is hive-partitioned and not yet snapshot-managed: adopt it by " +
         "committing each partition explicitly with its partition values " +
         "as data columns (hive files do not carry them)")
-    if (rootRewritten) return Map.empty // this commit replaces "" anyway
-    val hasData = dataFiles(fs, r).nonEmpty ||
-      currentGenDir(fs, r).isDefined
-    if (!hasData) Map.empty
+    requireNoMarkerLayout(fs, r)
+    // this commit replaces "" anyway, or there is nothing to adopt
+    if (rootRewritten || dataFiles(fs, r).isEmpty) Map.empty
     else {
       val gen = snapGenName()
-      spark.read.parquet(resolveCompacted(spark, r.toString))
-        .write.mode("overwrite")
+      spark.read.parquet(r.toString).write.mode("overwrite")
         .parquet(new org.apache.hadoop.fs.Path(r, gen).toString)
       Map("" -> gen)
     }
@@ -2200,10 +2141,6 @@ object Lakehouse {
     } finally if (pinChanges) changes.unpersist(blocking = false)
   }
 
-  /** Columns the manifest currently skips on. DML rewrites pass these
-    * back to [[commitSnapshot]] so a DELETE/UPDATE never silently strips
-    * the stats/bloom layer from the partitions it touches — untouched
-    * entries keep their committed stats verbatim either way. */
   /** Determinism is only knowable AFTER analysis (an unresolved
     * `rand() < 0.5` reports deterministic), so the guard inspects the
     * analyzed plan of the probe frame the caller built over the
@@ -2238,11 +2175,6 @@ object Lakehouse {
         "flips between them would be missed in an un-touched partition" +
         " — bind the instant to a literal first")
   }
-
-  private def manifestStatsCols(m: Manifest): Seq[String] =
-    m.stats.values.flatMap(_.values.flatMap(_.keys)).toSeq.distinct.sorted
-  private def manifestBloomCols(m: Manifest): Seq[String] =
-    m.blooms.values.flatten.toSeq.distinct.sorted
 
   /** Manifest entries whose committed files can contain a row matching
     * `predicate`, resolved by ONE scan: the snapshot read (with the
@@ -2316,7 +2248,6 @@ object Lakehouse {
         .filter(!(predicate <=> lit(true)))
     }
     commitSnapshot(spark, root, writes, expectedSnapshot = Some(baseId),
-      statsCols = manifestStatsCols(man), bloomCols = manifestBloomCols(man),
       branch = branch)
   }
 
@@ -2388,7 +2319,6 @@ object Lakehouse {
       }: _*)
     }
     commitSnapshot(spark, root, writes, expectedSnapshot = Some(baseId),
-      statsCols = manifestStatsCols(man), bloomCols = manifestBloomCols(man),
       branch = branch)
   }
 
@@ -2508,16 +2438,10 @@ object Lakehouse {
     fs.delete(staging, true) // only the _SUCCESS marker remains
     plantSentinelIfBare(fs, r)
     val schema = snap.schema
-    val effStats = (if (statsCols.nonEmpty) statsCols
-                    else manifestStatsCols(man) match {
-                      case Nil => effectiveStatsCols(spark, Nil)
-                      case mc  => mc
-                    }).filter(schema.fieldNames.contains)
-    val effBloom = (if (bloomCols.nonEmpty) bloomCols
-                    else manifestBloomCols(man) match {
-                      case Nil => effectiveBloomCols(spark, Nil)
-                      case mc  => mc
-                    }).filter(schema.fieldNames.contains)
+    val effStats = skipCols(spark, statsCols, manifestStatsCols(man),
+      StatsColsConf).filter(schema.fieldNames.contains)
+    val effBloom = skipCols(spark, bloomCols, manifestBloomCols(man),
+      BloomColsConf).filter(schema.fieldNames.contains)
     val dirToRel = updated.map { case (rel, gen) =>
       fs.makeQualified(dataDir(r, rel, gen)).toString -> rel }.toMap
     val stats = fileStats(spark, fs, dirToRel, effStats, Some(schema))
@@ -3883,9 +3807,9 @@ object Lakehouse {
     * and its partition dirs) no kept manifest references — superseded
     * data AND crash relics of never-committed writes. A reader of a
     * kept snapshot is never affected; time travel past the kept window
-    * is gone by design (the retention policy is the cadence contract,
-    * as with [[compactFiles]]). Returns (snapshots deleted, data dirs
-    * deleted). */
+    * is gone by design (the retention policy is the cadence contract of
+    * every resolution, [[compactFiles]]' included). Returns (snapshots
+    * deleted, data dirs deleted). */
   def snapshotGc(spark: org.apache.spark.sql.SparkSession, root: String,
                  keepSnapshots: Int = 2): (Int, Int) = {
     require(keepSnapshots >= 1, s"must keep >= 1 snapshot, got $keepSnapshots")
@@ -4018,10 +3942,8 @@ object Lakehouse {
         val name = st.getPath.getName
         if (st.isDirectory) {
           // generation dirs are underscore-hidden, so match them BEFORE
-          // the hidden-dir skip; never descend into them or _-metadata.
-          // isGenDirName covers every naming era: marker-sequential,
-          // legacy visible, and writer-unique snapshot nonces
-          if (isGenDirName(name)) {
+          // the hidden-dir skip; never descend into them or _-metadata
+          if (name.startsWith("_gen-")) {
             if (!referenced.contains(fs.makeQualified(st.getPath).toString)) {
               fs.delete(st.getPath, true)
               removed += 1
@@ -4040,88 +3962,32 @@ object Lakehouse {
     (drop.size, removed)
   }
 
-  /** Compact every DRIFTED partition of a hive-partitioned lake — the
-    * 100 TB composition: the unit of compaction is one `key=value`
-    * partition directory, never the whole lake in one job (SCALE.md;
-    * `DataQuality.partitionManifest` is the drift detector when
-    * comparing snapshots). Each drifted partition gets its own
-    * [[compactFiles]] generation swap, so reader safety and
-    * crash-safety hold per partition and an interrupted sweep leaves
-    * every partition in a complete state. Partitions at or under their
+  /** Compact every DRIFTED entry of a lake — the 100 TB composition:
+    * the unit of compaction is one partition, never the whole lake in
+    * one job (SCALE.md; `DataQuality.partitionManifest` is the drift
+    * detector when comparing snapshots). Entries at or under their
     * byte-implied file target are untouched. Returns one
-    * (partitionDir, filesBefore, filesAfter) row per REWRITTEN
-    * partition. Readers of a managed partition resolve through
-    * [[resolveCompacted]]`(root + "/key=value")`; whole-root naive reads
-    * follow [[compactFiles]]' ladder — stale-correct on the kept loose
-    * files for one cycle, then LOUD on the sentinel.
+    * (partitionDir, filesBefore, filesAfter) row per REWRITTEN entry.
     *
-    * On a SNAPSHOT-managed lake ([[commitSnapshot]]) the sweep resolves
-    * every partition through the current manifest, writes unstamped
-    * generations, and commits ONE new snapshot at the end — the whole
-    * sweep flips atomically, readers mid-sweep see the previous snapshot
-    * in full, and an interrupted sweep leaves only unreferenced relics
-    * for [[snapshotGc]] (compaction is content-preserving, so one
-    * manifest flip for the batch is strictly safer than per-partition
-    * currency). */
+    * On a SNAPSHOT-managed lake the drifted entries, read under the
+    * current manifest, are rewritten by ONE [[commitSnapshot]] pinned to
+    * that base: the sweep flips atomically, readers mid-sweep see the
+    * previous snapshot in full, an interrupted sweep leaves only relics
+    * for [[snapshotGc]], and a competing commit fails it loudly. Being
+    * content-preserving, it carries the schema, the skip layer (stats
+    * and blooms recomputed on the manifest's columns) and the `#prop`
+    * lines. On a plain hive-partitioned root each `key=value` dir is
+    * compacted by [[compactFiles]] (its first compaction adopts it);
+    * readers resolve through [[resolveCompacted]]`(root + "/key=value")`. */
   def compactDrifted(spark: org.apache.spark.sql.SparkSession,
                      root: String,
                      targetBytes: Long = 128L << 20): Seq[(String, Int, Int)] = {
     val rootP = new org.apache.hadoop.fs.Path(root)
-    val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(rootP, LakeDir))) {
-      val baseId = currentSnapshotId(spark, root).getOrElse(
-        throw new IllegalStateException(s"$root has no committed snapshot"))
-      val m = manifestAt(spark, root, Some(baseId))
-      val base = m.mapping
-      val rewritten = base.toSeq.sortBy(_._1).flatMap { case (rel, gen) =>
-        val dir = dataDir(rootP, rel, gen)
-        val files = dataFiles(fs, dir)
-        val bytes = files.map(_.getLen).sum
-        val target = math.max(1,
-          ((bytes + targetBytes - 1) / targetBytes).toInt)
-        if (files.length <= target) None
-        else {
-          val part = if (rel.isEmpty) rootP
-            else new org.apache.hadoop.fs.Path(rootP, rel)
-          val next = snapGenName()
-          val nextP = new org.apache.hadoop.fs.Path(part, next)
-          spark.read.parquet(dir.toString).repartition(target)
-            .write.mode("overwrite").parquet(nextP.toString)
-          // a rewritten partition's file set changed: recompute its
-          // per-file stats over the SAME columns its old stats covered
-          // (compaction is content-preserving, so the column set is too),
-          // and rebuild its bloom sidecars into the new generation (the
-          // manifest's #bloom declaration carries — sidecars ride gens)
-          val statCols = m.stats.get(rel)
-            .map(_.values.flatMap(_.keys).toSeq.distinct.sorted)
-            .getOrElse(Nil)
-          writeBlooms(spark, fs,
-            Map(fs.makeQualified(nextP).toString -> rel),
-            m.blooms.getOrElse(rel, Set.empty).toSeq.sorted, m.schema)
-          Some((rel, next, files.length, dataFiles(fs, nextP).length,
-            fileStats(spark, fs,
-              Map(fs.makeQualified(nextP).toString -> rel), statCols,
-              m.schema).getOrElse(rel, Map.empty)))
-        }
+    val fs = fsOf(spark, rootP)
+    if (fs.exists(new org.apache.hadoop.fs.Path(rootP, LakeDir)))
+      return sweepSnapshot(spark, root, targetBytes).collect {
+        case (rel, before, after, _) if after < before => (rel, before, after)
       }
-      if (rewritten.nonEmpty) {
-        val newStats = m.stats --
-          rewritten.map(_._1) ++
-          rewritten.collect { case (rel, _, _, _, st) if st.nonEmpty =>
-            rel -> st }
-        val newFiles = m.files -- rewritten.map(_._1) ++
-          rewritten.map { case (rel, gen, _, _, _) =>
-            rel -> fileEntries(fs, dataDir(rootP, rel, gen)) }
-        commitManifest(spark, root,
-          Manifest(
-            base ++ rewritten.map { case (rel, gen, _, _, _) => rel -> gen },
-            // content-preserving: schema AND bloom declarations carry
-            // (the rebuilt sidecars live inside the new generations)
-            m.schema, newStats, m.blooms, newFiles),
-          baseId)
-      }
-      return rewritten.map { case (rel, _, b, a, _) => (rel, b, a) }
-    }
     fs.listStatus(rootP).toSeq
       .filter(st => st.isDirectory && st.getPath.getName.contains("="))
       .sortBy(_.getPath.getName)
@@ -4130,6 +3996,39 @@ object Lakehouse {
           compactFiles(spark, st.getPath.toString, targetBytes)
         Option.when(after < before)((st.getPath.getName, before, after))
       }
+  }
+
+  /** The compaction sweep of a snapshot-managed lake: one listing per
+    * entry finds the drifted ones, ONE commit rewrites them. Returns
+    * (rel, filesBefore, filesAfter, bytes) for EVERY entry. */
+  private def sweepSnapshot(spark: org.apache.spark.sql.SparkSession,
+                            root: String, targetBytes: Long
+                           ): Seq[(String, Int, Int, Long)] = {
+    val r = new org.apache.hadoop.fs.Path(root)
+    val fs = fsOf(spark, r)
+    val baseId = currentSnapshotId(spark, root).getOrElse(
+      throw new IllegalStateException(s"$root has no committed snapshot"))
+    val m = manifestAt(spark, root, Some(baseId))
+    val entries = m.mapping.toSeq.sortBy(_._1).map { case (rel, gen) =>
+      val files = dataFiles(fs, dataDir(r, rel, gen))
+      (rel, gen, files.length, files.map(_.getLen).sum)
+    }
+    val drifted = entries.filter { case (_, _, n, bytes) =>
+      n > fileTarget(bytes, targetBytes) }
+    val after: Map[String, Int] =
+      if (drifted.isEmpty) Map.empty
+      else {
+        val id = commitSnapshot(spark, root,
+          drifted.map { case (rel, gen, _, bytes) =>
+            rel -> readPart(spark, m, dataDir(r, rel, gen).toString)
+              .repartition(fileTarget(bytes, targetBytes))
+          },
+          expectedSnapshot = Some(baseId), props = m.props)
+        val files = manifestAt(spark, root, Some(id)).files
+        drifted.map { case (rel, _, _, _) => rel -> files(rel).size }.toMap
+      }
+    entries.map { case (rel, _, n, bytes) =>
+      (rel, n, after.getOrElse(rel, n), bytes) }
   }
 
   /** OPTIMIZE ZORDER for a snapshot lake — the layout half of the skip
@@ -4149,7 +4048,8 @@ object Lakehouse {
     * `bits` (e.g. `_ / 3600e9.toLong` for nano-timestamps → hours);
     * stats stay on the RAW columns, so quantization never affects
     * pruning correctness — only curve locality. Content-preserving:
-    * same rows, new layout. Returns the committed snapshot id. */
+    * same rows, new layout, and the snapshot's `#prop` lines carry.
+    * Returns the committed snapshot id. */
   def zorderSnapshot(spark: org.apache.spark.sql.SparkSession, root: String,
                      a: String, b: String,
                      quantA: Column => Column = identity,
@@ -4162,31 +4062,24 @@ object Lakehouse {
     val man = manifestAt(spark, root, Some(baseId))
     val r = new org.apache.hadoop.fs.Path(root)
     val fs = fsOf(spark, r)
-    // stats: the z columns (the point of the rewrite) ∪ whatever each
-    // partition already tracked ∪ the caller's explicit set
-    val carriedCols = man.stats.values
-      .flatMap(_.values.flatMap(_.keys)).toSeq
-    val effStats = (Seq(a, b) ++ carriedCols ++
-      effectiveStatsCols(spark, statsCols)).distinct
-    val carriedBlooms = man.blooms.values.flatten.toSeq.distinct
+    // stats: the z columns (the point of the rewrite) ∪ whatever the
+    // lake already tracked ∪ the caller's set (else the session
+    // default); bloom columns carry through commitSnapshot's ladder
+    val effStats = (Seq(a, b) ++ manifestStatsCols(man) ++
+      skipCols(spark, statsCols, Nil, StatsColsConf)).distinct
     val writes = man.mapping.toSeq.sortBy(_._1).map { case (rel, gen) =>
       val dir = dataDir(r, rel, gen)
-      val bytes = dataFiles(fs, dir).map(_.getLen).sum
-      val nFiles = math.max(1,
-        ((bytes + targetBytes - 1) / targetBytes).toInt)
-      val df = man.schema match {
-        case Some(sc) => spark.read.schema(sc).parquet(dir.toString)
-        case None     => spark.read.parquet(dir.toString)
-      }
+      val nFiles = fileTarget(dataFiles(fs, dir).map(_.getLen).sum,
+        targetBytes)
       val z = graft.sources.Zorder.zValue(
         quantA(col(a)), quantB(col(b)), bits)
-      rel -> df.withColumn("__z", z)
+      rel -> readPart(spark, man, dir.toString).withColumn("__z", z)
         .repartitionByRange(nFiles, col("__z"))
         .sortWithinPartitions("__z")
         .drop("__z")
     }
     commitSnapshot(spark, root, writes, expectedSnapshot = Some(baseId),
-      statsCols = effStats, bloomCols = carriedBlooms)
+      statsCols = effStats, props = man.props)
   }
 
   private def anyDiffers(updAlias: String, dimAlias: String,

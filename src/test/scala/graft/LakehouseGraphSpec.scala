@@ -172,10 +172,14 @@ class LakehouseGraphSpec extends SparkTestBase {
     val back = Lakehouse.readCompacted(spark, dir).collect()
       .map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
     assert(back == rows.sorted)
-    // already compact: untouched, same stats back
+    // the compaction adopted the dir: snapshot 1's manifest commits the
+    // one-file generation the table now resolves to
+    assert(Lakehouse.currentSnapshotId(spark, dir).contains(1))
+    val gen = Lakehouse.currentManifest(spark, dir)("")
+    assert(Lakehouse.resolveCompacted(spark, dir).endsWith(gen))
+    // already compact: untouched, same stats back, no new snapshot
     assert(Lakehouse.compactFiles(spark, dir, Long.MaxValue)._1 == 1)
-    // the compacted data lives in a stamped generation dir
-    assert(Lakehouse.resolveCompacted(spark, dir).endsWith("gen-00000001"))
+    assert(Lakehouse.currentSnapshotId(spark, dir).contains(1))
   }
 
   test("compactFiles is reader-safe: a resolution held across the swap " +
@@ -191,15 +195,17 @@ class LakehouseGraphSpec extends SparkTestBase {
     assert(preSwap == dir)
     Lakehouse.compactFiles(spark, dir, targetBytes = 4096L) // -> several files
     // ...and that resolution still reads the full table after the swap:
-    // the previous layout is GC'd one CYCLE later, never at swap time
+    // the loose files go at the first snapshotGc, never at swap time
     assert(spark.read.parquet(preSwap).count() == 500L)
 
-    // second compaction (tighter target forces gen-2): gen-1 becomes the
-    // kept previous generation, the loose pre-adoption files are GC'd
+    // second compaction (looser target forces snapshot 2): snapshot 1's
+    // generation stays readable while GC keeps it
     val gen1 = Lakehouse.resolveCompacted(spark, dir)
-    assert(gen1.endsWith("gen-00000001"))
     Lakehouse.compactFiles(spark, dir, targetBytes = Long.MaxValue)
-    assert(Lakehouse.resolveCompacted(spark, dir).endsWith("gen-00000002"))
+    assert(Lakehouse.currentSnapshotId(spark, dir).contains(2))
+    assert(Lakehouse.resolveCompacted(spark, dir) != gen1)
+    // GC keeping current + previous reclaims only the loose files
+    assert(Lakehouse.snapshotGc(spark, dir, keepSnapshots = 2) == (0, 0))
     assert(spark.read.parquet(gen1).count() == 500L) // previous kept
     val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
@@ -208,7 +214,11 @@ class LakehouseGraphSpec extends SparkTestBase {
         !st.getPath.getName.startsWith(".") &&
         st.getPath.getName != Lakehouse.Sentinel) // metadata, not data
     assert(looseData.isEmpty, "pre-adoption loose files must be GC'd " +
-      "once two generations exist")
+      "by the first snapshotGc")
+    assert(Lakehouse.readCompacted(spark, dir).count() == 500L)
+    // past retention the previous generation goes
+    assert(Lakehouse.snapshotGc(spark, dir, keepSnapshots = 1) == (1, 1))
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(gen1)))
     assert(Lakehouse.readCompacted(spark, dir).count() == 500L)
   }
 
@@ -230,27 +240,6 @@ class LakehouseGraphSpec extends SparkTestBase {
       == s"$root/lang=fr")
     // idempotent: a second sweep rewrites nothing
     assert(Lakehouse.compactDrifted(spark, root, Long.MaxValue).isEmpty)
-  }
-
-  test("compactFiles ignores an unstamped partial generation (crash relic) " +
-    "and deletes it on the next run") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact_crash")
-      .toString + "/t"
-    (1L to 100L).map(i => (i, i.toString)).toDF("id", "v")
-      .repartition(8).write.parquet(dir)
-    // simulate a crashed compaction: a gen dir with data but NO marker
-    val partial = new org.apache.hadoop.fs.Path(dir, "_gen-00000001")
-    val fs = partial.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    (1L to 3L).map(i => (i, "junk")).toDF("id", "v")
-      .write.parquet(partial.toString)
-    fs.delete(new org.apache.hadoop.fs.Path(partial, "_SUCCESS"), false)
-    assert(Lakehouse.resolveCompacted(spark, dir) == dir) // unstamped: ignored
-    Lakehouse.compactFiles(spark, dir, targetBytes = Long.MaxValue)
-    // the retry OVERWROTE the partial with the real compaction of the
-    // loose files — current resolves to it and holds the true rows
-    assert(Lakehouse.resolveCompacted(spark, dir).endsWith("gen-00000001"))
-    assert(Lakehouse.readCompacted(spark, dir).count() == 100L)
   }
 
   // ---- asOf -----------------------------------------------------------------

@@ -197,32 +197,38 @@ class Round16Spec extends SparkTestBase {
 
   test("naive whole-root reads degrade STALE-CORRECT then LOUD, never " +
     "silently wrong: hidden generations + the sentinel; managed reads " +
-    "untouched; compactFiles refuses a snapshot-managed root") {
+    "untouched; compactFiles on a snapshot-managed root is compactDrifted") {
     import spark.implicits._
     // fresh snapshot lake: data only in hidden generations → naive read
     // fails immediately (sentinel at the bare root)
     val root = freshDir("snapnaive")
-    Lakehouse.commitSnapshot(spark, root, Seq("p=a" -> part("a", 1L to 4L)))
+    Lakehouse.commitSnapshot(spark, root,
+      Seq("p=a" -> part("a", 1L to 40L).repartition(4)))
     val e = intercept[Exception] { spark.read.parquet(root).collect() }
     assert(e.getMessage != null, "naive read must fail, not return rows")
-    assert(Lakehouse.readSnapshot(spark, root).count() == 4L)
-    intercept[IllegalArgumentException] {
-      Lakehouse.compactFiles(spark, root, 1L << 20)
-    }
-    // marker-compacted table: after gen 1 the loose files are KEPT for
-    // one cycle, so a naive read is stale-but-CORRECT (content-preserving
-    // rewrite, hidden gen invisible to the listing)...
+    assert(Lakehouse.readSnapshot(spark, root).count() == 40L)
+    // compacting the managed root is one more snapshot commit
+    val (nb, na, _) = Lakehouse.compactFiles(spark, root, 1L << 20)
+    assert(nb > na && na == 1, (nb, na))
+    assert(Lakehouse.currentSnapshotId(spark, root).contains(2))
+    assert(Lakehouse.readSnapshot(spark, root).count() == 40L)
+    // plain dir: the compaction adopts it with ONE rewrite into snapshot
+    // 1, and the loose files stay until snapshotGc, so a naive read is
+    // stale-but-CORRECT (content-preserving rewrite, hidden gen
+    // invisible to the listing)...
     val dir = freshDir("comnaive")
     (1L to 400L).map(i => (i, s"s$i")).toDF("id", "s")
       .repartition(32).write.parquet(dir)
     Lakehouse.compactFiles(spark, dir, targetBytes = Long.MaxValue)
+    assert(Lakehouse.currentSnapshotId(spark, dir).contains(1))
     assert(spark.read.parquet(dir).count() == 400L,
       "adoption window: naive reads still see the loose copies")
-    // ...and the moment the loose files are GC'd (second compaction) the
-    // sentinel makes naive reads fail loudly instead of returning nothing
-    (401L to 500L).map(i => (i, s"s$i")).toDF("id", "s").coalesce(1)
-      .write.mode("append").parquet(Lakehouse.resolveCompacted(spark, dir))
-    Lakehouse.compactFiles(spark, dir, targetBytes = Long.MaxValue)
+    // ...and once snapshotGc reclaims the loose files the sentinel makes
+    // naive reads fail loudly instead of returning stale rows
+    Lakehouse.commitSnapshot(spark, dir, Seq("" ->
+      Lakehouse.readCompacted(spark, dir).unionByName(
+        (401L to 500L).map(i => (i, s"s$i")).toDF("id", "s"))))
+    Lakehouse.snapshotGc(spark, dir, keepSnapshots = 2)
     intercept[Exception] { spark.read.parquet(dir).collect() }
     assert(Lakehouse.readCompacted(spark, dir).count() == 500L)
   }

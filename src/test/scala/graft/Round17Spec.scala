@@ -175,7 +175,18 @@ class Round17Spec extends SparkTestBase {
       Lakehouse.commitSnapshot(spark, root,
         Seq("p=a" -> part("a", 1L to 3L)))
       assert(Lakehouse.readSnapshot(spark, root).count() == 3L)
+      Lakehouse.commitSnapshot(spark, root,
+        Seq("p=b" -> part("b", 1L to 40L).repartition(4)))
     } finally spark.conf.unset("graft.lake.renameAtomicSchemes")
+    // a compaction is a commit too: with the scheme undeclared again, a
+    // sweep over the drifted p=b is refused before it writes anything
+    val gensBefore = genDirs(local, "p=b")
+    val ec = intercept[IllegalStateException] {
+      Lakehouse.compactDrifted(spark, root, targetBytes = Long.MaxValue)
+    }
+    assert(ec.getMessage.contains("renameAtomicSchemes"), ec.getMessage)
+    assert(genDirs(local, "p=b") == gensBefore,
+      s"the refused sweep wrote ${genDirs(local, "p=b")}")
   }
 
   // ---- per-file min/max stats: the manifest's data-skipping layer ----------
@@ -233,9 +244,12 @@ class Round17Spec extends SparkTestBase {
     assert(!afterNull.inputFiles.exists(_.contains("p=2")),
       "all-null file must be pruned under a null-excluding range")
 
-    // a partition committed WITHOUT stats is never pruned (superset)
+    // a partition WITHOUT stats on the ranged column is never pruned
+    // (superset); an explicit set replaces the carried one, so this
+    // commit records stats on `s` only
     Lakehouse.commitSnapshot(spark, root, Seq(
-      "p=3" -> Seq((9999L, 3, "zzz")).toDF("id", "p", "s")))
+      "p=3" -> Seq((9999L, 3, "zzz")).toDF("id", "p", "s")),
+      statsCols = Seq("s"))
     val mixed = Lakehouse.readSnapshot(spark, root,
       fileRanges = Seq(Lakehouse.ColRange("id", Some(0L), Some(10L))))
     assert(mixed.inputFiles.exists(_.contains("p=3")),
@@ -645,27 +659,70 @@ class Round17Spec extends SparkTestBase {
     } finally spark.conf.unset("graft.lake.statsCols")
   }
 
-  // ---- legacy generation names (r16 ADVICE low) -----------------------------
-
-  test("a table compacted under the legacy VISIBLE gen-<n> layout still " +
-    "resolves to its stamped generation; the next compaction continues " +
-    "the numbering under the current hidden scheme") {
+  test("mergeSnapshot keeps the skip layer of a lake committed with " +
+    "explicit statsCols and no session default: the merged partition " +
+    "still records per-file stats and a point read prunes its files") {
     import spark.implicits._
-    val root = freshDir("legacy")
-    val gen2 = s"$root/gen-00000002"
-    (1L to 300L).map(i => (i, s"s$i")).toDF("id", "s")
-      .repartition(40).write.parquet(gen2)
+    val root = freshDir("statscarry")
+    assert(spark.conf.getOption("graft.lake.statsCols").isEmpty)
+    def side(lang: String, ids: Seq[Long]) =
+      part(lang, ids).repartitionByRange(8, col("id"))
+    Lakehouse.commitSnapshot(spark, root, Seq(
+      "lang=a" -> side("a", 0L until 400L),
+      "lang=b" -> side("b", 400L until 800L)), statsCols = Seq("id"))
+    Lakehouse.mergeSnapshot(spark, root,
+      Seq((5L, "a", "upd"), (900L, "a", "new")).toDF("id", "lang", "v"),
+      Seq("id"), "lang")
+    // every committed file of the merged partition has an `id` stats line
+    val src = scala.io.Source.fromFile(s"$root/_graft_lake/snap-00000002")
+    val lines = try src.getLines().toList finally src.close()
+    def filesOn(tag: String) = lines.map(_.split("\t", -1))
+      .collect { case f if f(0) == tag && f(1) == "lang=a" => f }
+    val files = filesOn("#file").map(_(2)).toSet
+    val statted = filesOn("#stats").filter(_(3) == "id").map(_(2)).toSet
+    assert(files.nonEmpty && statted == files,
+      s"the merged partition lost its stats: $statted of $files")
+    def filesOfA(ranges: Seq[Lakehouse.ColRange]) =
+      Lakehouse.readSnapshot(spark, root, partitionFilter = _ == "lang=a",
+        fileRanges = ranges).inputFiles.length
+    val all = filesOfA(Nil)
+    val point = filesOfA(Seq(Lakehouse.ColRange("id", Some(5L), Some(5L))))
+    assert(point < all, s"point read opened $point of $all files")
+    assert(Lakehouse.readSnapshot(spark, root)
+      .filter(col("id") === 5L).collect().map(_.getString(2)).toSeq ==
+      Seq("upd"))
+  }
+
+  // ---- the retired marker-generation layout -------------------------------
+
+  test("a root left by the retired marker-generation layout is refused " +
+    "loudly by resolution, compaction and adoption; a crashed first " +
+    "snapshot commit's relics are not mistaken for it") {
+    import spark.implicits._
+    def rows(n: Long) = (1L to n).map(i => (i, s"s$i")).toDF("id", "s")
+    for (gen <- Seq("_gen-00000002", "gen-00000002")) {
+      val root = freshDir("legacy")
+      rows(300L).repartition(4).write.parquet(s"$root/$gen")
+      rows(10L).write.mode("append").parquet(root) // stale loose files
+      val errs = Seq(
+        intercept[IllegalStateException] {
+          Lakehouse.resolveCompacted(spark, root) },
+        intercept[IllegalStateException] {
+          Lakehouse.compactFiles(spark, root, 1L << 26) },
+        intercept[IllegalStateException] {
+          Lakehouse.commitSnapshot(spark, root, Seq("" -> rows(5L))) })
+      errs.foreach(e => assert(e.getMessage.contains(gen), e.getMessage))
+      assert(Lakehouse.currentSnapshotId(spark, root).isEmpty)
+    }
+    // a first "" commit that crashed before its manifest put leaves a
+    // writer-unique generation and the sentinel: the retry adopts
+    val root = freshDir("crashedfirst")
+    rows(3L).write.parquet(s"$root/_gen-${"0" * 31}1")
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.create(new org.apache.hadoop.fs.Path(gen2, "_GRAFT_COMPLETE"), true)
-      .close()
-    assert(Lakehouse.resolveCompacted(spark, root).endsWith("gen-00000002"))
-    assert(Lakehouse.readCompacted(spark, root).count() == 300L)
-    // compaction picks up at n=3 in the CURRENT hidden naming
-    val (before, after, _) = Lakehouse.compactFiles(spark, root, 1L << 26)
-    assert(before == 40 && after == 1)
-    assert(Lakehouse.resolveCompacted(spark, root).endsWith("_gen-00000003"))
-    assert(Lakehouse.readCompacted(spark, root).count() == 300L)
+    fs.create(new org.apache.hadoop.fs.Path(root, Lakehouse.Sentinel)).close()
+    assert(Lakehouse.commitSnapshot(spark, root, Seq("" -> rows(5L))) == 1)
+    assert(Lakehouse.readCompacted(spark, root).count() == 5L)
   }
 
   // ---- OPTIONAL over a remote SERVICE: the left-outer bind join ------------

@@ -236,6 +236,44 @@ class Round20Spec extends SparkTestBase {
       s"wrong foreign-commit failure: ${foreign.getMessage}")
   }
 
+  test("compactDrifted on a maintained-aggregate state lake carries the " +
+    "IVM watermark: the next fold continues where it left off and " +
+    "equals a full recompute") {
+    val root = freshDir("ivmsweep")
+    val tableDir = freshDir("ivmsweeptbl")
+    val base = docs(1L to 400L, i => s"g${i % 100}", _ * 10)
+    Lakehouse.commitSnapshot(spark, root,
+      (0 to 1).map(i => s"p=$i" -> base.filter(col("p") === i)))
+    def fold(e: Int): Unit = Lakehouse.ivmFold(spark, root, "", tableDir,
+      Seq("lang"), Seq("len"), Nil, Nil, e, isBootstrap = false,
+      Lakehouse.snapshotChanges(spark, root, e - 1, e, Seq("id")), 16)
+    // un-coalesced shuffles leave several small files per state bucket
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    try {
+      val q = Lakehouse.maintainAggregate(spark, root, Seq("id"),
+        Seq("lang"), Seq("len"), tableDir, freshDir("ivmsweepck"))
+      try q.processAllAvailable() finally q.stop() // watermark 1
+      Lakehouse.mergeSnapshot(spark, root,
+        base.filter(col("id") <= 50L).withColumn("len", col("len") + 1L),
+        Seq("id"), "p") // epoch 2
+      fold(2)
+    } finally spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
+    val swept = Lakehouse.compactDrifted(spark, tableDir, Long.MaxValue)
+    assert(swept.nonEmpty, "expected drifted state buckets")
+    assert(Lakehouse.snapshotProps(spark, tableDir)(
+      Lakehouse.IvmEpochProp) == "2", "the sweep dropped the watermark")
+    Lakehouse.deleteSnapshot(spark, root, col("id") === 3L) // epoch 3
+    fold(3)
+    val got = Lakehouse.readAggregate(spark, tableDir)
+      .orderBy("lang").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
+    val want = Lakehouse.readSnapshot(spark, root).groupBy("lang")
+      .agg(count(lit(1)).as("n_rows"), sum(col("len")).as("sum_len"))
+      .orderBy("lang").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(got == want)
+  }
+
   test("maintainAggregate eager schema validation: a typo'd group or " +
     "sum column fails SYNCHRONOUSLY naming the column, and a " +
     "non-numeric sum column is refused — never an AnalysisException " +
