@@ -1,12 +1,211 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+
+import com.fasterxml.jackson.databind.ObjectMapper
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler._
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.V2WriteCommand
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Results are forced through the `noop` sink so the
   * full plan executes (a bare `count()` would let Catalyst prune the
-  * projections that are the whole point of the text/pipeline operators). */
+  * projections that are the whole point of the text/pipeline operators).
+  * Each row also leaves its runs' execution counters and its last run's
+  * jobs (`target/bench_raw_runs.json`) and executed plan
+  * (`target/bench_plans/<row>.txt`). A row with a throwing run is listed
+  * under `failed`, never timed. */
 object Bench {
+  type Row = (SparkSession, String) => DataFrame
+
+  /** One timed run: its window on the driver clock Spark stamps job starts
+    * and planning phases with, its seconds, and what it threw. */
+  final case class Run(startMs: Long, endMs: Long, sec: Double, error: Option[String])
+
+  /** The execution counters summed over a run's jobs, in this order. */
+  private val ExecKeys: Seq[String] = Seq("jobs", "stages", "tasks", "task_ms", "gc_ms",
+    "shuffle_read_bytes", "shuffle_write_bytes", "spill_bytes")
+  private def sum(xs: Iterable[Seq[Long]]): Seq[Long] =
+    xs.foldLeft(Seq.fill(ExecKeys.size)(0L))(_.lazyZip(_).map(_ + _))
+
+  private final case class Job(startMs: Long, endMs: Long, callSite: String, stages: Int)
+
+  /** The listener bus's reports, placed in runs by time: a job in the run
+    * whose window holds its start, a stage with the first job listing it,
+    * a plan by when its write was planned. Not by job group: a long-lived
+    * pool (Dedup's edge pool) inherits whichever group was set when its
+    * threads were made. Read only after `spark.stop()` drained the bus. */
+  final class ExecLog extends SparkListener with QueryExecutionListener {
+    private val jobs = new ConcurrentHashMap[Int, Job]
+    private val stageJob = new ConcurrentHashMap[Int, Int]
+    private val stageExec = new ConcurrentHashMap[Int, Seq[Long]]
+    private val plans = new ConcurrentLinkedQueue[(Long, String)]
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      // the result stage, created last, is named after the action's call site
+      val callSite = e.stageInfos.sortBy(_.stageId).lastOption.fold("?")(_.name)
+      jobs.put(e.jobId, Job(e.time, e.time, callSite, e.stageIds.size))
+      e.stageIds.foreach(stageJob.putIfAbsent(_, e.jobId))
+    }
+
+    override def onJobEnd(e: SparkListenerJobEnd): Unit =
+      jobs.computeIfPresent(e.jobId, (_, j) => j.copy(endMs = e.time))
+
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+      val i = e.stageInfo
+      val metrics = Option(i.taskMetrics).fold(Seq.fill(5)(0L))(m => Seq(
+        m.executorRunTime, m.jvmGCTime, m.shuffleReadMetrics.totalBytesRead,
+        m.shuffleWriteMetrics.bytesWritten, m.memoryBytesSpilled + m.diskBytesSpilled))
+      stageExec.merge(i.stageId, Seq(0L, 1L, i.numTasks.toLong) ++ metrics,
+        (a, b) => sum(Seq(a, b)))
+    }
+
+    // a noop write is the bench's own; its plan is rendered as executed
+    // (an adaptive plan at its final shape), so no row is planned twice
+    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+      qe.logical match {
+        case w: V2WriteCommand if w.table.name == "noop-table" =>
+          qe.tracker.phases.values.map(_.endTimeMs).maxOption
+            .foreach(t => plans.add(t -> qe.explainString(FormattedMode)))
+        case _ => ()
+      }
+
+    override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+
+    private def within(r: Run, ms: Long) = ms >= r.startMs && ms <= r.endMs
+
+    private def jobsOf(r: Run): Seq[(Int, Job)] =
+      jobs.asScala.toSeq.filter { case (_, j) => within(r, j.startMs) }.sortBy(_._1)
+
+    /** `r`'s counters, in [[ExecKeys]] order. */
+    def exec(r: Run): Seq[Long] = {
+      val ids = jobsOf(r).map(_._1).toSet
+      sum(stageJob.asScala.collect {
+        case (s, j) if ids(j) && stageExec.containsKey(s) => stageExec.get(s)
+      }).updated(0, ids.size.toLong)
+    }
+
+    /** (call site, wall ms, stage count) of every job `r` started. */
+    def jobList(r: Run): Seq[(String, Long, Int)] =
+      jobsOf(r).map { case (_, j) => (j.callSite, j.endMs - j.startMs, j.stages) }
+
+    /** The executed plan of the noop write that ended `r`. */
+    def plan(r: Run): Option[String] =
+      plans.asScala.filter(p => within(r, p._1)).maxByOption(_._1).map(_._2)
+  }
+
+  /** `nRuns` timed noop-sink runs of every row, in order. */
+  def timeRows(spark: SparkSession, sfDir: String, rows: Seq[(String, Row)],
+               nRuns: Int): Seq[(String, Seq[Run])] = {
+    var lastEndMs = 0L
+    rows.map { case (name, fn) =>
+      val runs = (1 to nRuns).map { _ =>
+        // run windows never share a millisecond: a job belongs to one run
+        while (System.currentTimeMillis() <= lastEndMs) {}
+        val startMs = System.currentTimeMillis()
+        val t0 = System.nanoTime()
+        val error =
+          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); None }
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] $name failed: ${e.getMessage}")
+            Some(e.toString)
+          }
+        val t = (System.nanoTime() - t0) / 1e9
+        lastEndMs = System.currentTimeMillis()
+        // outside the timer: drop blocks the finished run left behind
+        // (result-lifecycle localCheckpoints are freed only by GC-driven
+        // ContextCleaner otherwise, and its periodic GC is 30 min — longer
+        // than the whole bench; round 4's path_closure 4.4× regression was
+        // ~150 prior runs' leaked blocks evicting the live frontier). The
+        // engine keeps no intentional cross-query persisted RDDs: catalogs
+        // memoize driver-side objects, table reads are lazy.
+        spark.sparkContext.getPersistentRDDs.values
+          .foreach(_.unpersist(blocking = false))
+        // heavy runs also get the cleaner's GC trigger BETWEEN runs (still
+        // outside the timer): a multi-stage composition leaves dozens of
+        // shuffles + broadcasts whose cleanup is reference-triggered, and
+        // with gc only per query GROUP, run 2 and 3 of the same heavy
+        // query pay rising eviction/GC tax — round-8's full bench
+        // measured doc_prepare_corpus growing monotonically [2.9 → 6.7 →
+        // 13.5 s] across its three runs. Sub-second queries skip it (a
+        // full GC costs more than they do).
+        if (t > 2.0) System.gc()
+        Run(startMs, lastEndMs, t, error)
+      }
+      // also outside the timer: give ContextCleaner its GC trigger. Shuffle
+      // files and broadcast state are reclaimed only when their driver-side
+      // objects are collected; the cleaner's own periodic GC is 30 min —
+      // longer than the bench — so without this, 100+ queries × 3 runs of
+      // shuffle state pile onto disk and heap and later queries pay rising
+      // GC/eviction tax (run times DECLINING within a query is the tell).
+      System.gc()
+      name -> runs
+    }
+  }
+
+  private val json = new ObjectMapper()
+  /** A JSON string literal. */
+  private def js(s: String): String = json.writeValueAsString(s)
+
+  /** The full summary line (every median) and the compact final line.
+    * Rows with a failed run are listed under `failed`, never timed. */
+  def summaryLines(timed: Seq[(String, Seq[Run])], nRuns: Int, calib: Double,
+                   sfDir: String): (String, String) = {
+    val (failedRows, okRows) = timed.partition(_._2.exists(_.error.nonEmpty))
+    val results = okRows.map { case (k, runs) => (k, runs.map(_.sec).sorted.apply(nRuns / 2)) }
+    val failed = failedRows.map(r => js(r._1)).mkString("[", ",", "]")
+    val qs = results.map { case (k, v) => js(k) + f":$v%.3f" }.mkString("{", ",", "}")
+    val total = results.map(_._2).sum
+    val head = f""""metric":"total","value":$total%.3f,"unit":"sec","runs":$nRuns,"n_queries":${results.size},"calib_sec":$calib%.3f"""
+    // a reader that keeps only the last ~2000 chars of output clips the
+    // FRONT of a long line (round 6 lost "total" that way), and
+    // the full 214-row map is ~6 KB: the complete summary goes to
+    // bench_summary.json, and the line printed LAST carries the scalars
+    // plus the most expensive rows up to a byte budget — the rows a
+    // per-query comparison is about. Existing fields stay (additions only).
+    val byCost = results.sortBy(-_._2).map { case (k, v) => js(k) + f":$v%.3f" }
+    // chars for the inline map; with `failed`, the line stays < 1700
+    val budget = math.max(0, 1400 - failedRows.map(r => js(r._1).length + 1).sum)
+    val inline = byCost.foldLeft((List.empty[String], 0)) {
+      case ((acc, used), e) =>
+        if (used + e.length + 1 <= budget) (e :: acc, used + e.length + 1)
+        else (acc, budget + 1) // budget exhausted: keep the top prefix only
+    }._1.reverse
+    val full = s"""{$head,"queries":$qs,"sf":${js(sfDir)},"failed":$failed}"""
+    val last = s"""{$head,"sf":${js(sfDir)},"queries":${inline.mkString("{", ",", "}")},"n_queries_inline":${inline.size},"queries_file":"target/bench_summary.json","failed":$failed}"""
+    (full, last)
+  }
+
+  /** Per-run seconds, per-run counters, the last run's jobs, and what
+    * every failed run threw. */
+  private def rawJson(timed: Seq[(String, Seq[Run])], log: ExecLog, nRuns: Int,
+                      sfDir: String): String = {
+    val raw = timed.map { case (k, runs) =>
+      js(k) + ":" + runs.map(r => f"${r.sec}%.3f").mkString("[", ",", "]")
+    }.mkString("{", ",", "}")
+    val exec = timed.map { case (k, runs) =>
+      val perRun = runs.map(log.exec)
+      val counters = ExecKeys.zipWithIndex.map { case (key, i) =>
+        js(key) + ":" + perRun.map(_(i)).mkString("[", ",", "]")
+      }
+      val jobs = log.jobList(runs.last).map { case (site, ms, stages) =>
+        s"""{"call_site":${js(site)},"wall_ms":$ms,"stages":$stages}"""
+      }.mkString("[", ",", "]")
+      js(k) + ":" + (counters :+ s""""last_run_jobs":$jobs""").mkString("{", ",", "}")
+    }.mkString("{", ",", "}")
+    val failed = timed.flatMap { case (k, runs) =>
+      runs.flatMap(_.error).headOption.map(e => js(k) + ":" + js(e))
+    }.mkString("{", ",", "}")
+    s"""{"runs":$nRuns,"sf":${js(sfDir)},"raw":$raw,"exec":$exec,"failed":$failed}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -73,86 +272,28 @@ object Bench {
       .filter { case (name, _) =>
         only.exists(_.contains(name)) || !SparkEntry.benchExcluded.contains(name) }
       .filter { case (name, _) => only.forall(_.contains(name)) }
-    val results = selected.map { case (name, fn) =>
-      val times = (1 to nRuns).map { _ =>
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        }
-        val t = (System.nanoTime() - t0) / 1e9
-        // outside the timer: drop blocks the finished run left behind
-        // (result-lifecycle localCheckpoints are freed only by GC-driven
-        // ContextCleaner otherwise, and its periodic GC is 30 min — longer
-        // than the whole bench; round 4's path_closure 4.4× regression was
-        // ~150 prior runs' leaked blocks evicting the live frontier). The
-        // engine keeps no intentional cross-query persisted RDDs: catalogs
-        // memoize driver-side objects, table reads are lazy.
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        // heavy runs also get the cleaner's GC trigger BETWEEN runs (still
-        // outside the timer): a multi-stage composition leaves dozens of
-        // shuffles + broadcasts whose cleanup is reference-triggered, and
-        // with gc only per query GROUP, run 2 and 3 of the same heavy
-        // query pay rising eviction/GC tax — round-8's driver bench
-        // measured doc_prepare_corpus growing monotonically [2.9 → 6.7 →
-        // 13.5 s] across its three runs. Sub-second queries skip it (a
-        // full GC costs more than they do).
-        if (t > 2.0) System.gc()
-        t
-      }
-      // also outside the timer: give ContextCleaner its GC trigger. Shuffle
-      // files and broadcast state are reclaimed only when their driver-side
-      // objects are collected; the cleaner's own periodic GC is 30 min —
-      // longer than the bench — so without this, 100+ queries × 3 runs of
-      // shuffle state pile onto disk and heap and later queries pay rising
-      // GC/eviction tax (run times DECLINING within a query is the tell).
-      System.gc()
-      (name, times.sorted.apply(nRuns / 2), times)
-    }
-    val qs = results.map { case (k, v, _) => "\"" + k + f"\":$v%.3f" }
-      .mkString("{", ",", "}")
-    val raw = results.map { case (k, _, ts) =>
-      "\"" + k + "\":[" + ts.map(t => f"$t%.3f").mkString(",") + "]"
-    }.mkString("{", ",", "}")
-    val total = results.map(_._2).sum
+    val log = new ExecLog
+    spark.sparkContext.addSparkListener(log)
+    spark.listenerManager.register(log)
+    val timed = timeRows(spark, sfDir, selected, nRuns)
+    // stopping drains the listener bus: every event of every run is in `log`
+    spark.stop()
+
     // raw per-run forensics go to a file — inlining them made the summary
     // line so long the driver's tail window clipped it (round-3 BENCH JSON
     // arrived unparseable)
-    val rawPath = java.nio.file.Paths.get("target", "bench_raw_runs.json")
-    java.nio.file.Files.createDirectories(rawPath.getParent)
-    java.nio.file.Files.write(rawPath,
-      s"""{"runs":$nRuns,"sf":"$sfDir","raw":$raw}""".getBytes("UTF-8"))
-    // the full per-query median map ALSO outgrew the tail window at 92
-    // queries (round-6 BENCH lost "total" + 11 medians off the line's
-    // head — the window keeps the END of output, clipping the FRONT of
-    // one long line), so the complete summary lands in its own small
-    // file and the line that prints LAST carries only the scalars plus a
-    // pointer: it parses at any suite size
-    val fullSummary =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","runs":$nRuns,"n_queries":${results.size},"calib_sec":$calib%.3f,"queries":$qs,"sf":"$sfDir"}"""
-    val summaryPath = java.nio.file.Paths.get("target", "bench_summary.json")
-    java.nio.file.Files.write(summaryPath, fullSummary.getBytes("UTF-8"))
-    spark.stop()
-    // the FINAL line additionally carries a per-query map the driver's
-    // comparator can parse (r20 PERF had per_query={} because only this
-    // line survives the tail window intact). The window is ~2000 chars
-    // and the FULL 214-row map is ~6 KB — a long final line gets its
-    // HEAD clipped and stops parsing (the round-3 incident) — so the
-    // inline map holds the most expensive rows up to a byte budget
-    // (they are the rows a per-query comparison is about) and the
-    // complete map stays in bench_summary.json. Existing fields are
-    // unchanged (additions only).
-    val byCost = results.sortBy { case (_, v, _) => -v }
-      .map { case (k, v, _) => "\"" + k + f"\":$v%.3f" }
-    val budget = 1400 // chars for the inline map; line stays < 1700
-    val topQs = byCost.foldLeft((List.empty[String], 0)) {
-      case ((acc, used), e) =>
-        if (used + e.length + 1 <= budget) (e :: acc, used + e.length + 1)
-        else (acc, budget + 1) // budget exhausted: keep the top prefix only
-    }._1.reverse.mkString("{", ",", "}")
+    val target = Files.createDirectories(Paths.get("target"))
+    Files.write(target.resolve("bench_raw_runs.json"),
+      rawJson(timed, log, nRuns, sfDir).getBytes(UTF_8))
+    val planDir = Files.createDirectories(target.resolve("bench_plans"))
+    scala.util.Using.resource(Files.list(planDir))(_.iterator.asScala.toList.foreach(Files.delete))
+    timed.foreach { case (k, runs) =>
+      log.plan(runs.last).foreach(p => Files.write(planDir.resolve(s"$k.txt"), p.getBytes(UTF_8)))
+    }
+    val (full, last) = summaryLines(timed, nRuns, calib, sfDir)
+    Files.write(target.resolve("bench_summary.json"), full.getBytes(UTF_8))
     // full line first (human-readable / greppable), compact line last
-    println(fullSummary)
-    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","runs":$nRuns,"n_queries":${results.size},"calib_sec":$calib%.3f,"sf":"$sfDir","queries":$topQs,"n_queries_inline":${if (byCost.isEmpty) 0 else topQs.count(_ == ':')},"queries_file":"target/bench_summary.json"}""")
+    println(full)
+    println(last)
   }
 }

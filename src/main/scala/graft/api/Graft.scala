@@ -101,42 +101,27 @@ final class Graft(val catalog: Catalog, tableLoader: String => DataFrame,
 
   /** Decomposition + plan report — the reference CLI's primary output
     * (`run_query.py:22-44` prints the star decomposition, then the
-    * operator plan, then timings). Here the decomposition lists each
-    * star's candidate source fragments from RDF-MT source selection, and
-    * the plan is Catalyst's formatted physical plan — the thing to read
-    * for PushedFilters / join strategy / Exchange placement. */
+    * operator plan, then timings). The decomposition is the one the
+    * compiler built while routing this query (each star with its
+    * candidate source fragments from RDF-MT source selection, or a BGP
+    * that link pruning proved empty), and the plan is Catalyst's
+    * formatted physical plan — the thing to read for PushedFilters /
+    * join strategy / Exchange placement. */
   def explain(query: String): String = {
     import graft.algebra._
-    val t0 = System.nanoTime()
     val q = SparqlParser.parseUnsafe(query)
-    def bgps(p: Pattern): List[List[TriplePattern]] = p match {
-      case Pattern.Bgp(ts) if ts.nonEmpty => List(ts)
-      case Pattern.Bgp(_)             => Nil
-      case Pattern.Join(l, r)         => bgps(l) ++ bgps(r)
-      case Pattern.Union(l, r)        => bgps(l) ++ bgps(r)
-      case Pattern.LeftJoin(l, r, _)  => bgps(l) ++ bgps(r)
-      case Pattern.Filter(_, p2)      => bgps(p2)
-      case Pattern.Minus(l, r)        => bgps(l) ++ bgps(r)
-      case Pattern.Exists(l, r, _)    => bgps(l) ++ bgps(r)
-      case Pattern.Extend(p2, _, _)   => bgps(p2)
-      case Pattern.Service(_, p2, _)  => bgps(p2)
-      case Pattern.SubSelect(sq)      => bgps(sq.pattern)
-      case _: Pattern.Values          => Nil
-      case _: Pattern.Path            => Nil
-    }
-    val stars = bgps(q.pattern)
-      .flatMap(ts => graft.decomposer.Decomposer.decompose(ts, catalog))
-    val decTime = (System.nanoTime() - t0) / 1e9
-    val t1 = System.nanoTime()
-    val (routed, df) = route(q)
+    val t0 = System.nanoTime()
+    val ((routed, df), decisions) = Compiler.recordingDecisions(route(q))
     // auto-routed local compiles carry their cost reasoning in the route
     // string — keep it and enrich with what the compile actually shipped
     val dispatch =
       if (routed.startsWith("local compile"))
         describeLocal(df) + routed.stripPrefix("local compile")
       else routed
-    val planTime = (System.nanoTime() - t1) / 1e9
-    val dec = stars.zipWithIndex.map { case (s, i) =>
+    val planTime = (System.nanoTime() - t0) / 1e9
+    val decTime = decisions.map(_.decomposeNs).sum / 1e9
+    val stars = decisions.flatMap(_.stars.getOrElse(Nil))
+    val dec = (stars.zipWithIndex.map { case (s, i) =>
       val subj = s.subject match {
         case Var(n) => s"?$n"
         case Iri(v) => s"<$v>"
@@ -146,7 +131,9 @@ final class Graft(val catalog: Catalog, tableLoader: String => DataFrame,
         .map(f => s"${f.molecule.table}@${f.molecule.source}")
         .mkString("[", " ⋈ ", "]")).mkString(", ")
       s"  star $i: $subj {${s.triples.length} triples} -> $srcs"
-    }.mkString("\n")
+    } ++ decisions.collect { case d if d.stars.isEmpty =>
+      s"  bgp {${d.triples.length} triples}: provably empty (no joinable source pair)"
+    }).mkString("\n")
     s"""Decomposition (${stars.length} stars, ${f"$decTime%.3f"}s):
        |$dec
        |Dispatch: $dispatch

@@ -1239,7 +1239,8 @@ final class Compiler(catalog: Catalog, load: String => DataFrame,
     * VALUES must be one plan node, not a thousand unioned single-row
     * selects (the union form is O(rows) plan nodes; analysis goes
     * quadratic and whole-stage codegen bursts janino's 64 KB method cap —
-    * measured via ShipAb's 2500-key window before this fast path).
+    * measured with a 2500-key bind-join window before this fast path;
+    * SCALE.md "Round-16: adaptive bind-join window, measured").
     * Columns mixing term KINDS across rows (legal, rare, and always
     * small) keep the per-row literal-select union, whose coercion
     * semantics the sparql_values gate pins. */
@@ -1314,10 +1315,16 @@ final class Compiler(catalog: Catalog, load: String => DataFrame,
   private def compileBgp(ts: List[TriplePattern],
                          shipFilters: List[Expr] = Nil): Compiled = {
     require(ts.nonEmpty, "empty BGP")
+    // an open decision record (Graft.explain) gets what this BGP decided
+    val record = Option(Compiler.decisions.get)
+    val t0 = if (record.isEmpty) 0L else System.nanoTime()
+    def decided(stars: Option[List[Star]]): Unit = record.foreach(
+      _ += Compiler.BgpDecision(ts, stars, System.nanoTime() - t0))
     val stars =
       try Decomposer.decompose(ts, catalog)
       catch {
         case e: graft.decomposer.ProvablyEmptyException =>
+          decided(None)
           // pruning PROVED the join empty (no source pair has compatible
           // URI templates): the correct answer is the empty bag over the
           // pattern's variables — zero rows, not a failed query (a
@@ -1329,6 +1336,7 @@ final class Compiler(catalog: Catalog, load: String => DataFrame,
               StructType(vars.map(v => StructField(v, StringType, nullable = true)))),
             Map.empty, bcast = false, card = 0L)
       }
+    decided(Some(stars))
     val units = groupShip match {
       case Some(cfg) => shipExclusiveGroups(stars, shipFilters, cfg)
       case None      => stars.map(compileStar)
@@ -1892,4 +1900,26 @@ final class Compiler(catalog: Catalog, load: String => DataFrame,
       case DateType         => to_date(lit(lex))
       case _                => lit(lex)
     }
+}
+
+object Compiler {
+  /** What compiling one BGP decided: the stars it built, or None when
+    * join-link pruning proved the BGP empty; and the decomposition time. */
+  final case class BgpDecision(triples: List[TriplePattern],
+                               stars: Option[List[Star]], decomposeNs: Long)
+
+  // Thread-scoped, not instance state: a GraftServer shares one Compiler
+  // across concurrent requests, and SERVICE / exclusive-pattern bodies
+  // compile on child Compilers whose decisions belong to the same record.
+  private[compiler] val decisions = new ThreadLocal[mutable.ListBuffer[BgpDecision]]
+
+  /** Runs `body` with a decision record open on this thread and returns
+    * its result with every BGP decision compiled inside it, in order. */
+  def recordingDecisions[A](body: => A): (A, List[BgpDecision]) = {
+    val outer = decisions.get
+    val record = mutable.ListBuffer.empty[BgpDecision]
+    decisions.set(record)
+    try { val a = body; (a, record.toList) }
+    finally decisions.set(outer)
+  }
 }

@@ -118,7 +118,8 @@ object RoutePlanner {
     *  - document/graph stores (3): per-document/record re-serialization
     *    (BSON / Bolt records) plus cursor paging;
     *  - SPARQL endpoints (4): HTTP paging with per-page request overhead
-    *    AND row-per-binding verbosity (the ShipAb-measured pattern).
+    *    AND row-per-binding verbosity (measured in SCALE.md "Round-14:
+    *    endpoint query dispatch — transfer economics measured").
     *
     * Like every constant in this model the weight only has to RANK the
     * alternatives, not predict throughput; equal-weight stars keep the

@@ -364,10 +364,12 @@ object GraftFunctions {
     new GenericArrayData(out)
   }
 
-  /** Distinct character q-grams, bit-identical to the HOF chain
+  /** Distinct character q-grams in first-occurrence order. For strings of
+    * at least q characters this is bit-identical to the HOF chain
     * `array_distinct(transform(sequence(1, length(s) - q + 1), i ->
-    * substring(s, i, q)))` — first-occurrence order, empty array when
-    * the string is shorter than q — but ONE primitive pass per row:
+    * substring(s, i, q)))`; a shorter string yields the empty array,
+    * where the chain's descending `sequence` would not, so the callers
+    * filter `length >= q` first. The work is ONE primitive pass per row:
     * codepoint byte offsets resolved once (SQL substring counts
     * characters), each gram an O(1) byte-span view, no interpreted
     * lambda per gram, no materialized int sequence, no second

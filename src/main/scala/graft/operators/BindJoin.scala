@@ -23,7 +23,8 @@ object BindJoin {
 
   /** Batch size when the caller does not pin one, derived from the
     * MEASURED build-side key count and the endpoint's page economics
-    * (the `tools/ShipAb` request-dominance observation) instead of the
+    * (the request-dominance finding of SCALE.md "Round-16: adaptive
+    * bind-join window, measured") instead of the
     * reference's fixed `WINDOW_SIZE = 20` (`NestedHashJoinFilter.py:20`):
     *
     *  - each batch costs one remote round trip and returns about
@@ -42,7 +43,8 @@ object BindJoin {
     * reference's constant) keeps a pathological `pageSize` from
     * degrading to per-key queries, and [[MaxWindow]] caps the batch at a
     * width every remote parser/URL limit tolerates (a 2500-key VALUES is
-    * a ~60 KB query — ShipAb measured engines bursting whole-stage
+    * a ~60 KB query — SCALE.md's Round-16 bind-join A/B measured
+    * engines bursting whole-stage
     * codegen on it — while 512 keys stay ~15 KB and still cut the
     * reference's fixed-20 round trips by 25×). */
   val MaxWindow = 512

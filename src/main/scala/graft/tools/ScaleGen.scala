@@ -37,35 +37,20 @@ object ScaleGen {
 
     def t(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")
 
-    /** N copies of `df`, each with every column in `keys` shifted by
-      * copy*Stride and per-copy extra transforms applied. */
-    def replicate(df: DataFrame, keys: Seq[String],
-                  extra: (DataFrame, Int) => DataFrame = (d, _) => d): DataFrame =
-      (0 until copies).map { i =>
-        val shifted = keys.foldLeft(df)((d, k) =>
-          d.withColumn(k, col(k) + lit(i * Stride)))
-        extra(shifted, i)
-      }.reduce(_.unionByName(_))
-
-    val out: Seq[(String, DataFrame)] = Seq(
-      "region" -> t("region"),
-      "nation" -> t("nation"),
-      "customer" -> replicate(t("customer"), Seq("c_custkey"),
-        // names must stay copy-unique for the ER/golden-record families
-        (d, i) => d.withColumn("c_name",
-          concat(col("c_name"), lit(s"#c$i")))),
-      "supplier" -> replicate(t("supplier"), Seq("s_suppkey"),
-        (d, i) => d.withColumn("s_name",
-          concat(col("s_name"), lit(s"#c$i")))),
-      "part" -> replicate(t("part"), Seq("p_partkey"),
-        (d, i) => d.withColumn("p_name",
-          concat(col("p_name"), lit(s"#c$i")))),
-      "orders" -> replicate(t("orders"), Seq("o_orderkey", "o_custkey")),
-      "lineitem" -> replicate(t("lineitem"),
-        Seq("l_orderkey", "l_partkey", "l_suppkey")),
-      "events" -> replicate(t("events"), Seq("event_id", "user_id")),
-      "embeddings" -> replicate(t("embeddings"), Seq("vec_id")),
-      "documents" -> replicate(t("documents"), Seq("doc_id"), (d, i) =>
+    // (table, replicated key columns, per-copy transform)
+    val facts: Seq[(String, Seq[String], (DataFrame, Int) => DataFrame)] = Seq(
+      // names must stay copy-unique for the ER/golden-record families
+      ("customer", Seq("c_custkey"),
+        (d, i) => d.withColumn("c_name", concat(col("c_name"), lit(s"#c$i")))),
+      ("supplier", Seq("s_suppkey"),
+        (d, i) => d.withColumn("s_name", concat(col("s_name"), lit(s"#c$i")))),
+      ("part", Seq("p_partkey"),
+        (d, i) => d.withColumn("p_name", concat(col("p_name"), lit(s"#c$i")))),
+      ("orders", Seq("o_orderkey", "o_custkey"), (d, _) => d),
+      ("lineitem", Seq("l_orderkey", "l_partkey", "l_suppkey"), (d, _) => d),
+      ("events", Seq("event_id", "user_id"), (d, _) => d),
+      ("embeddings", Seq("vec_id"), (d, _) => d),
+      ("documents", Seq("doc_id"), (d, i) =>
         // token-salt: every whitespace token gets a per-copy suffix, so
         // k-grams/shingles of different copies never collide; n_chars
         // re-derived to stay consistent with the salted text
@@ -73,6 +58,31 @@ object ScaleGen {
             array_join(transform(split(col("text"), " "),
               x => concat(x, lit(s"_c$i"))), " "))
           .withColumn("n_chars", length(col("text")).cast("long"))))
+
+    // a key at or past the stride would collide with the next copy's
+    // shifted keys and silently corrupt the copies' references, so every
+    // key column's maximum is checked before anything is written
+    val maxima = facts.map { case (name, keys, _) =>
+      t(name).select(keys.map(k => max(col(k)).cast("long").as(s"$name.$k")): _*)
+    }.reduce(_.crossJoin(_)).head()
+    maxima.schema.fieldNames.zipWithIndex
+      .find { case (_, i) => !maxima.isNullAt(i) && maxima.getLong(i) >= Stride }
+      .foreach { case (k, i) => throw new IllegalArgumentException(
+        s"$k reaches ${maxima.getLong(i)}, past the copy stride $Stride: copies would collide") }
+
+    /** N copies of `df`, each with every column in `keys` shifted by
+      * copy*Stride and the per-copy transform applied. */
+    def replicate(df: DataFrame, keys: Seq[String],
+                  extra: (DataFrame, Int) => DataFrame): DataFrame =
+      (0 until copies).map { i =>
+        val shifted = keys.foldLeft(df)((d, k) =>
+          d.withColumn(k, col(k) + lit(i * Stride)))
+        extra(shifted, i)
+      }.reduce(_.unionByName(_))
+
+    val out: Seq[(String, DataFrame)] =
+      Seq("region" -> t("region"), "nation" -> t("nation")) ++
+        facts.map { case (name, keys, extra) => name -> replicate(t(name), keys, extra) }
 
     out.foreach { case (name, df) =>
       // enough files that the c8-vs-c32 probe is never capped by split

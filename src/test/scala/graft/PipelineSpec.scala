@@ -270,7 +270,14 @@ class PipelineSpec extends SparkTestBase {
 
   test("native shingle_ids is bit-identical to the HOF expression chain") {
     import org.apache.spark.sql.functions._
+    val s = spark
+    import s.implicits._
+    // edge rows beside the corpus: empty text, and fewer tokens than k
+    val edge = Seq(-1L -> "", -2L -> "solo", -3L -> "Two Words", -4L -> "  lead gap")
+      .toDF("doc_id", "text")
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      .select(col("doc_id").cast("long").as("doc_id"), col("text"))
+      .unionByName(edge)
     val hof = docs
       .withColumn("__tokens", split(lower(col("text")), "\\s+"))
       .withColumn("expected", expr(
@@ -280,8 +287,8 @@ class PipelineSpec extends SparkTestBase {
     val native = docs.select(col("doc_id"),
       graft.functions.GraftFunctions.shingle_ids(col("text"), 3).as("got"))
     val joined = hof.join(native, "doc_id")
-      .filter(not(col("expected") === col("got")))
-    assert(joined.count() == 0)
+    assert(joined.count() == docs.count())
+    assert(joined.filter(not(col("expected") === col("got"))).count() == 0)
   }
 
   test("ivfpq ADC ranks a planted near-duplicate first") {

@@ -9,8 +9,16 @@ import graft.mapping._
 class RmlSpec extends AnyFunSuite {
 
   test("parses the reference's own chebi Compound mapping file") {
-    val ttl = new String(java.nio.file.Files.readAllBytes(
+    val ttl = try new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get("/root/reference/demo/mappings/tsv/chebi/Compound.ttl")))
+    catch { case _: java.nio.file.NoSuchFileException => cancel("reference checkout not present") }
+    assertChebiCompound(ttl)
+  }
+
+  /** The reference's chebi Compound mapping shape: one class, one
+    * per-predicate triple map per TSV, a shared subject template, and an
+    * IRI-template object map on has_part. */
+  private def assertChebiCompound(ttl: String): Unit = {
     val cat = RmlLoader.loadCatalog(ttl, source = "chebi")
     assert(cat.molecules.size >= 5)
     assert(cat.molecules.forall(_.rdfType == "http://bio2rdf.org/ns/chebi#Compound"))
@@ -23,6 +31,30 @@ class RmlSpec extends AnyFunSuite {
       case TemplateMap(t) => assert(t.columns == List("has_part"))
       case other          => fail(s"expected template object map, got $other")
     }
+  }
+
+  test("parses a chebi-shaped Compound mapping (inline fixture)") {
+    def tripleMap(pred: String, obj: String) =
+      s""":Compound_$pred
+         |  rml:logicalSource [ rml:source "chebi/Compound_$pred.tsv" ;
+         |    rml:referenceFormulation ql:CSV ] ;
+         |  rr:subjectMap [ rr:template "http://bio2rdf.org/chebi:{Compound}" ;
+         |    rr:class chebi:Compound ] ;
+         |  rr:predicateObjectMap [ rr:predicate chebi:$pred ;
+         |    rr:objectMap $obj ] .
+         |""".stripMargin
+    val ttl =
+      """@prefix rr: <http://www.w3.org/ns/r2rml#> .
+        |@prefix rml: <http://semweb.mmlab.be/ns/rml#> .
+        |@prefix ql: <http://semweb.mmlab.be/ns/ql#> .
+        |@prefix chebi: <http://bio2rdf.org/ns/chebi#> .
+        |@prefix : <urn:map:chebi:> .
+        |""".stripMargin +
+        Seq("name", "formula", "mass", "charge", "inchi")
+          .map(p => tripleMap(p, s"""[ rml:reference "$p" ]""")).mkString +
+        tripleMap("has_part",
+          """[ rr:template "http://bio2rdf.org/chebi:{has_part}" ]""")
+    assertChebiCompound(ttl)
   }
 }
 

@@ -54,16 +54,33 @@ class Round14Spec extends SparkTestBase {
     assert(unpruned.find(_.subject == Var("n")).get.sources.size == 3)
   }
 
+  private val emptyRangeCatalog = Catalog(
+    List(
+      refMol("urn:g:Customer", "customer", "urn:g:name", "urn:g:nation"),
+      refMol("urn:g:Nation", "nation", "urn:g:name")),
+    // authoritative claim: nation objects are instances of NOTHING here
+    links = Map(("urn:g:Customer", "urn:g:nation") -> Nil))
+
   test("links declaring an empty range prove the join empty, not ambiguous") {
-    val cat = Catalog(
-      List(
-        refMol("urn:g:Customer", "customer", "urn:g:name", "urn:g:nation"),
-        refMol("urn:g:Nation", "nation", "urn:g:name")),
-      // authoritative claim: nation objects are instances of NOTHING here
-      links = Map(("urn:g:Customer", "urn:g:nation") -> Nil))
     intercept[ProvablyEmptyException] {
-      Decomposer.decompose(ambiguousTriples, cat)
+      Decomposer.decompose(ambiguousTriples, emptyRangeCatalog)
     }
+  }
+
+  test("explain reports a provably empty BGP as the compiler decided it") {
+    val s = spark
+    import s.implicits._
+    val g = new Graft(emptyRangeCatalog, Map(
+      "customer" -> Seq(("c1", "Ann", "n1")).toDF("s", "name", "nation"),
+      "nation" -> Seq(("n1", "Narnia")).toDF("s", "name")))(spark)
+    val q = """SELECT ?c ?nname WHERE {
+              |  ?c a <urn:g:Customer> ; <urn:g:nation> ?n .
+              |  ?n <urn:g:name> ?nname }""".stripMargin
+    assert(g.sparql(q).count() == 0)
+    val report = g.explain(q)
+    assert(report.contains("Decomposition (0 stars"), report.take(300))
+    assert(report.contains("bgp {3 triples}: provably empty"), report.take(300))
+    assert(report.contains("== Physical Plan =="))
   }
 
   test("absent link entries never prune (unknown is not authority)") {

@@ -200,7 +200,8 @@ class Round15Spec extends SparkTestBase {
     implicit val sp: org.apache.spark.sql.SparkSession = spark
     // customer + order only: both row-keyed (unique subject templates),
     // so the local wire route and the shipped route answer identically
-    // and the parity assertion below is fair (the ShipAb convention)
+    // and the parity assertion below is fair (the row-keyed convention of
+    // SCALE.md "Round-14: endpoint query dispatch")
     val types = Set("urn:g:Customer", "urn:g:Order")
     val inner = Graft.overParquetDir(Catalog(
       TpchCatalog.catalog.molecules.filter(m => types.contains(m.rdfType))),
@@ -320,7 +321,8 @@ class Round15Spec extends SparkTestBase {
       // data (not a wire local twin: a local DESCRIBE over the endpoint
       // catalog unions one paged scan per probed predicate, and under
       // local[4] those tasks would hold every slot the loopback server
-      // itself needs — the ShipAb loopback-starvation caveat; the
+      // itself needs — the loopback-starvation caveat of SCALE.md
+      // "Round-16: adaptive bind-join window, measured"; the
       // driver-gate row compares against the relational oracle instead)
       val got = g.sparql(q).orderBy("p", "o").collect().toSeq
       val want = inner.sparql(q).orderBy("p", "o").collect().toSeq
