@@ -35,7 +35,12 @@ object Bench {
   private def sum(xs: Iterable[Seq[Long]]): Seq[Long] =
     xs.foldLeft(Seq.fill(ExecKeys.size)(0L))(_.lazyZip(_).map(_ + _))
 
-  private final case class Job(startMs: Long, endMs: Long, callSite: String, stages: Int)
+  /** A job as the bus reported it. `executionId` is the SQL execution it
+    * ran for and `scope` the outermost operator scope of its last stage's
+    * final RDD (`Exchange`, `BroadcastExchange`, …): AQE query-stage jobs
+    * all share one call site, and these two name them. */
+  private final case class Job(startMs: Long, endMs: Long, callSite: String, stages: Int,
+                               executionId: Option[Long], scope: Option[String])
 
   /** The listener bus's reports, placed in runs by time: a job in the run
     * whose window holds its start, a stage with the first job listing it,
@@ -50,8 +55,16 @@ object Bench {
 
     override def onJobStart(e: SparkListenerJobStart): Unit = {
       // the result stage, created last, is named after the action's call site
-      val callSite = e.stageInfos.sortBy(_.stageId).lastOption.fold("?")(_.name)
-      jobs.put(e.jobId, Job(e.time, e.time, callSite, e.stageIds.size))
+      val last = e.stageInfos.sortBy(_.stageId).lastOption
+      val executionId = Option(e.properties)
+        .flatMap(p => Option(p.getProperty("spark.sql.execution.id"))).map(_.toLong)
+      val scope = last.flatMap(_.rddInfos.maxByOption(_.id)).flatMap(_.scope).map { s =>
+        var outer = s
+        while (outer.parent.isDefined) outer = outer.parent.get
+        outer.name
+      }
+      jobs.put(e.jobId, Job(e.time, e.time, last.fold("?")(_.name), e.stageIds.size,
+        executionId, scope))
       e.stageIds.foreach(stageJob.putIfAbsent(_, e.jobId))
     }
 
@@ -92,9 +105,8 @@ object Bench {
       }).updated(0, ids.size.toLong)
     }
 
-    /** (call site, wall ms, stage count) of every job `r` started. */
-    def jobList(r: Run): Seq[(String, Long, Int)] =
-      jobsOf(r).map { case (_, j) => (j.callSite, j.endMs - j.startMs, j.stages) }
+    /** Every job `r` started, in id order. */
+    private[Bench] def jobList(r: Run): Seq[Job] = jobsOf(r).map(_._2)
 
     /** The executed plan of the noop write that ended `r`. */
     def plan(r: Run): Option[String] =
@@ -195,8 +207,10 @@ object Bench {
       val counters = ExecKeys.zipWithIndex.map { case (key, i) =>
         js(key) + ":" + perRun.map(_(i)).mkString("[", ",", "]")
       }
-      val jobs = log.jobList(runs.last).map { case (site, ms, stages) =>
-        s"""{"call_site":${js(site)},"wall_ms":$ms,"stages":$stages}"""
+      val jobs = log.jobList(runs.last).map { j =>
+        s"""{"call_site":${js(j.callSite)},"wall_ms":${j.endMs - j.startMs},""" +
+          s""""stages":${j.stages},"execution_id":${j.executionId.fold("null")(_.toString)},""" +
+          s""""scope":${j.scope.fold("null")(js)}}"""
       }.mkString("[", ",", "]")
       js(k) + ":" + (counters :+ s""""last_run_jobs":$jobs""").mkString("{", ",", "}")
     }.mkString("{", ",", "}")

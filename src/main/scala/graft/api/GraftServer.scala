@@ -6,18 +6,20 @@ import org.apache.spark.sql.Row
 
 import java.net.{InetSocketAddress, URLDecoder}
 import java.nio.charset.StandardCharsets.UTF_8
-import java.security.MessageDigest
+import java.util.UUID
 import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
 
 /** HTTP service layer — the Spark-native rebuild of the reference's Flask
   * app (`/root/reference/app/query.py`): `GET|POST /sparql?query=…&blocking=
   * 0|1` answers a SPARQL query, and with `blocking=0` registers an
-  * incremental session (keyed by the md5 of the query, `query.py:100`)
-  * whose rows are consumed one at a time via `/nextresult?id=…`
-  * (`query.py:49-81`), ending with `result:"EOF"` and, once drained,
-  * `error:"Already finished"` — the same consumption contract
-  * [[Experiment]] implements for the dief@t metrics.
+  * incremental session whose rows are consumed one at a time via
+  * `/nextresult?id=…` (`query.py:49-81`), ending with `result:"EOF"` and,
+  * once drained, `error:"Already finished"` — the same consumption
+  * contract [[Experiment]] implements for the dief@t metrics. The session
+  * id (the `hashquery` field) is unique per registration: the reference
+  * keyed sessions by the md5 of the query text (`query.py:100`), so two
+  * clients sending the same text shared, and clobbered, one session.
   *
   * Incremental rows come from `toLocalIterator` — partitions stream to the
   * driver on demand, so a non-blocking session never materializes the full
@@ -153,16 +155,10 @@ final class GraftServer(g: Graft, port: Int = 0,
         }
         null // response already written
       } else {
-        val id = md5(query)
-        // duplicate hashquery (same query text re-registered): the reference
-        // silently overwrote and leaked the first client's session
-        // (`query.py:100`) — we replace explicitly so the old iterator is
-        // released for GC rather than pinned in the map
-        val prev = sessions.put(id, new Session(vars, df.toLocalIterator().asScala, start))
-        val replaced = prev != null
+        val id = UUID.randomUUID().toString.replace("-", "")
+        sessions.put(id, new Session(vars, df.toLocalIterator().asScala, start))
         Map("vars" -> vars, "hashquery" -> id, "result" -> Seq.empty,
-          "execTime" -> secondsSince(start), "totalRows" -> -1,
-          "replacedSession" -> replaced)
+          "execTime" -> secondsSince(start), "totalRows" -> -1)
       }
     }
   })
@@ -181,7 +177,9 @@ final class GraftServer(g: Graft, port: Int = 0,
     Option(sessions.get(id)) match {
       case None =>
         Map("result" -> "EOF", "totalRows" -> 1, "error" -> "Already finished")
-      case Some(s) =>
+      // one request at a time per session: toLocalIterator is not
+      // thread-safe, and the served count must match the rows handed out
+      case Some(s) => s.synchronized {
         s.lastAccess = System.currentTimeMillis()
         if (s.it.hasNext) {
           val row = rowMap(s.vars, s.it.next())
@@ -191,11 +189,12 @@ final class GraftServer(g: Graft, port: Int = 0,
             "execTime" -> secondsSince(s.start), "firstResult" -> s.first,
             "totalRows" -> s.served)
         } else {
-          sessions.remove(id)
+          sessions.remove(id, s)
           Map("vars" -> s.vars, "result" -> "EOF",
             "execTime" -> secondsSince(s.start), "firstResult" -> s.first,
             "totalRows" -> s.served)
         }
+      }
     }
   })
 
@@ -208,10 +207,6 @@ final class GraftServer(g: Graft, port: Int = 0,
 
   private def secondsSince(startNanos: Long): Double =
     (System.nanoTime() - startNanos) / 1e9
-
-  private def md5(s: String): String =
-    MessageDigest.getInstance("MD5").digest(s.getBytes(UTF_8))
-      .map("%02x".format(_)).mkString
 
   private def rowMap(vars: Seq[String], r: Row): Map[String, Any] =
     vars.zipWithIndex.map { case (v, i) =>

@@ -765,32 +765,22 @@ final class Compiler(catalog: Catalog, load: String => DataFrame,
     // shuffle bytes per round, multiplied by the round count. The dict is
     // frozen by an eager checkpoint (monotonically_increasing_id is only
     // stable once materialized); encode is two string joins paid once,
-    // decode two long joins on the result. `graft.path.dictEncode=false`
-    // restores the direct string iteration for A/B.
-    val dictEncode = spark.conf.get("graft.path.dictEncode", "true").toBoolean
+    // decode two long joins on the result.
     val edgesStr = keep(edges0.distinct())
-    val dict: Option[DataFrame] =
-      if (!dictEncode) None
-      else {
-        val d = edgesStr.select(col("x").as("t"))
-          .union(edgesStr.select(col("y").as("t"))).distinct()
-          .withColumn("nid", monotonically_increasing_id())
-          .localCheckpoint()
-        checkpoints += d
-        Some(d)
-      }
+    val dict = edgesStr.select(col("x").as("t"))
+      .union(edgesStr.select(col("y").as("t"))).distinct()
+      .withColumn("nid", monotonically_increasing_id())
+      .localCheckpoint()
+    checkpoints += dict
     // (r21, measured dead end: persisting this frame pre-partitioned on
     // x — the connectedComponents discipline — regressed both closure
     // rows in a back-to-back A/B, deep 5.47 → 6.14 s and shallow 1.50 →
     // 1.91 s: under AQE the tiny per-round right side goes broadcast, so
     // the cached layout buys nothing and the setup exchange is pure cost)
-    val edges = dict match {
-      case Some(d) => keep(edgesStr
-        .join(d.select(col("t").as("x"), col("nid").as("__xid")), "x")
-        .join(d.select(col("t").as("y"), col("nid").as("__yid")), "y")
-        .select(col("__xid").as("x"), col("__yid").as("y")))
-      case None => edgesStr
-    }
+    val edges = keep(edgesStr
+      .join(dict.select(col("t").as("x"), col("nid").as("__xid")), "x")
+      .join(dict.select(col("t").as("y"), col("nid").as("__yid")), "y")
+      .select(col("__xid").as("x"), col("__yid").as("y")))
     var total = edges
     var frontier = edges
     var converged = false
@@ -832,25 +822,15 @@ final class Compiler(catalog: Catalog, load: String => DataFrame,
       throw new IllegalStateException(
         s"property-path closure did not converge within $maxIters iterations; " +
           "the graph is deeper than the engine's bound — raise maxIters")
+    // zero-length pairs: the node universe is the dict's key set
     val result =
       if (!includeZero) total
-      else {
-        // zero-length pairs: with a dict the node universe is its key set
-        val nodes = dict match {
-          case Some(d) => d.select(col("nid").as("x"))
-          case None =>
-            edges.select(col("x")).union(edges.select(col("y"))).distinct()
-        }
-        total.union(nodes.select(col("x"), col("x").as("y"))).distinct()
-      }
+      else total.union(dict.select(col("nid").as("x"), col("nid").as("y"))).distinct()
     // decode ids back to term strings (result-sized, two long-key joins)
-    val decoded = dict match {
-      case Some(d) => result
-        .join(d.select(col("nid").as("x"), col("t").as("__xs")), "x")
-        .join(d.select(col("nid").as("y"), col("t").as("__ys")), "y")
-        .select(col("__xs").as("x"), col("__ys").as("y"))
-      case None => result
-    }
+    val decoded = result
+      .join(dict.select(col("nid").as("x"), col("t").as("__xs")), "x")
+      .join(dict.select(col("nid").as("y"), col("t").as("__ys")), "y")
+      .select(col("__xs").as("x"), col("__ys").as("y"))
     // materialize the fixpoint once (eager checkpoint), then free BOTH the
     // per-round caches and the per-round checkpoint blocks. The latter are
     // otherwise reclaimed only by the GC-driven ContextCleaner — in a

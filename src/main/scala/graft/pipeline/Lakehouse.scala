@@ -346,16 +346,11 @@ object Lakehouse {
     new org.apache.hadoop.fs.Path(lineageDir(root, branch),
       f"snap-$id%08d")
 
-  /** A generation dir read under its snapshot's recorded schema (old
-    * files null-fill evolved columns — the parquet explicit-schema
-    * contract); pre-schema manifests read plain. The one read shape
-    * every partition-granular writer shares. */
+  /** One committed entry of `man`, read through [[snapshotScan]] — the
+    * one read shape every partition-granular writer shares. */
   private def readPart(spark: org.apache.spark.sql.SparkSession,
-                       man: Manifest, dir: String): DataFrame =
-    man.schema match {
-      case Some(sc) => spark.read.schema(sc).parquet(dir)
-      case None     => spark.read.parquet(dir)
-    }
+                       man: Manifest, root: String, rel: String): DataFrame =
+    snapshotScan(spark, root, man, _ == rel, Nil)
 
   /** partition-relative dir ("" = the table root) + committed data
     * subdir → the absolute data directory. */
@@ -374,12 +369,11 @@ object Lakehouse {
   /** One committed data file of a generation, as recorded in the
     * manifest (`#file` lines): name, byte length, and mtime. Recording
     * these at COMMIT time (the writer just produced the files — they are
-    * one local listing away) is what lets [[ManifestFileIndex]] plan a
-    * read with ZERO filesystem calls: the `FileStatus` objects Spark
-    * needs are synthesized from the manifest instead of one blocking
-    * `listStatus` RPC per partition dir on every query (the r17
-    * plan-time scale hole). Generations are immutable, so the recorded
-    * facts can never go stale. */
+    * one local listing away) is what lets [[ManifestFileIndex]] plan
+    * every read with ZERO filesystem calls: the `FileStatus` objects
+    * Spark needs are synthesized from the manifest instead of one
+    * blocking `listStatus` RPC per partition dir. Generations are
+    * immutable, so the recorded facts can never go stale. */
   private[graft] final case class FileEntry(name: String, len: Long,
                                             mtime: Long)
 
@@ -404,9 +398,10 @@ object Lakehouse {
         * immutability and its GC for free). */
       blooms: Map[String, Set[String]] = Map.empty,
       /** rel → the committed generation's data files (`#file` lines) —
-        * the zero-RPC planning layer: with these recorded, readSnapshot
-        * never lists a data dir at plan time. Missing for pre-r18
-        * manifests; the reader falls back to (parallel) listing. */
+        * what every read plans from ([[snapshotScan]]), so no read lists
+        * a data dir. Every mapped rel has at least one (Spark writes a
+        * part file even for an empty frame); [[readManifest]] refuses a
+        * manifest that maps a rel without any. */
       files: Map[String, Seq[FileEntry]] = Map.empty,
       /** PER-SNAPSHOT properties (`#prop` lines) — small facts a commit
         * records ATOMICALLY with its manifest CAS (the Iceberg snapshot-
@@ -489,8 +484,8 @@ object Lakehouse {
     () => confLong("graft.lake.shardCacheBytes", 256L << 20),
     t => 2L * t.length + 64)
 
-  /** Timeout for driver-side metadata IO (shard GETs, legacy-listing
-    * backfills, fallback plan-time listings, bloom-sidecar fetches):
+  /** Timeout for driver-side metadata IO (shard GETs, bloom-sidecar
+    * fetches, the IVM wide-replace listing):
     * honors the session conf `graft.lake.metaIoTimeoutSec` like every
     * other graft.lake knob, falling back to the hadoop conf (settable
     * via `spark.hadoop.…`) and then 600 s. */
@@ -507,8 +502,8 @@ object Lakehouse {
     metaIoTimeoutSec(fs.getConf)
 
   /** THE driver-side parallel-IO helper — every bounded pool in the lake
-    * (shard fetch, legacy-listing backfill, commit partition writes,
-    * fallback plan-time listing, bloom-sidecar fetch) goes through here,
+    * (shard fetch, commit partition writes, bloom-sidecar fetch, IVM
+    * wide-replace listing) goes through here,
     * so the hardening is uniform by construction: daemon threads (a hung
     * store call must never pin the JVM), `shutdownNow` (stragglers are
     * interrupted, not accumulated across retries), and a timeout that
@@ -640,6 +635,15 @@ object Lakehouse {
         case _ => throw new IllegalStateException(
           s"malformed #file line in $p: '$l'")
       }
+    }
+    // only builds older than r18 committed without file lists; reads
+    // plan from the lists alone, so such a manifest is refused loudly
+    mapping.keys.toSeq.sorted.find(!files.contains(_)).foreach { rel =>
+      throw new IllegalStateException(
+        s"manifest $p maps partition '$rel' without any #file line — it " +
+          "was committed by a build older than r18, and this build reads " +
+          "only the recorded file lists: commit the lake once with an " +
+          "r18-or-later build that still backfills them")
     }
     val props = meta.filter(_.startsWith("#prop\t")).map { l =>
       l.split("\t", -1) match {
@@ -1130,11 +1134,11 @@ object Lakehouse {
     commitManifest(spark, root, man.copy(props = props), baseId, branch)
   }
 
-  /** The write phase every snapshot commit shares — data generations,
-    * sentinels, schema merge, stats, blooms — WITHOUT the manifest put:
-    * returns the manifest that WOULD become current and the base id it
-    * derives from. [[commitSnapshot]] flips it immediately;
-    * [[stageSnapshot]] parks it for write-audit-publish. */
+  /** The write phase every snapshot commit shares — data generations
+    * and their file lists, sentinels, schema merge, stats, blooms —
+    * WITHOUT the manifest put: returns the manifest that WOULD become
+    * current and the base id it derives from. [[commitSnapshot]] flips
+    * it immediately; [[stageSnapshot]] parks it for write-audit-publish. */
   private def prepareSnapshot(spark: org.apache.spark.sql.SparkSession,
                               root: String,
                               writes: Seq[(String, DataFrame)],
@@ -1181,10 +1185,10 @@ object Lakehouse {
       requireStatsSupported(effStats, df, rel)
       requireBloomSupported(effBloom, df, rel)
     }
-    val base: Map[String, String] = prior.map(_.mapping).getOrElse(
+    val (base, baseFiles) = prior.map(m => (m.mapping, m.files)).getOrElse(
       adoptLoose(spark, fs, r, writes.exists(_._1.isEmpty)))
-    // base schema: the prior snapshot's recorded one; a pre-schema or
-    // adopted base derives it from one base dir (one-time footer read)
+    // base schema: the prior snapshot's recorded one; an adopted base
+    // derives it from its dir (one-time footer read)
     val baseSchema = prior.flatMap(_.schema).orElse(
       base.headOption.map { case (rel, gen) =>
         spark.read.parquet(dataDir(r, rel, gen).toString).schema })
@@ -1239,27 +1243,11 @@ object Lakehouse {
       effBloom.filter(schema.fieldNames.contains), Some(schema))
     val carriedBlooms = prior.map(_.blooms).getOrElse(Map.empty) --
       updatedRels
-    // file lists ride the same rule; base entries a PRE-r18 manifest (or
-    // an adoption) carries without lists are backfilled with one listing
-    // each, HERE at commit time — never at plan time, and in PARALLEL
-    // (the first post-upgrade commit on a 10⁴-partition legacy lake
-    // would otherwise walk them one blocking RPC at a time)
-    val mapping = base ++ updated.map { case (rel, gen, _) => rel -> gen }
-    val carriedFiles = prior.map(_.files).getOrElse(Map.empty) --
-      updatedRels
-    val freshFiles = updated.map { case (rel, _, fe) => rel -> fe }.toMap
-    val toBackfill = (mapping.keySet -- carriedFiles.keySet --
-      freshFiles.keySet).toSeq.sorted
-    val backfill: Map[String, Seq[FileEntry]] =
-      parMap(toBackfill,
-        spark.conf.get("graft.lake.listParallelism", "16").toInt,
-        "graft-backfill-list",
-        scala.concurrent.duration.Duration(metaIoTimeoutSec(fs), "s"))(
-        rel => rel -> fileEntries(fs, dataDir(r, rel, mapping(rel)))
-      ).toMap
-    (Manifest(mapping, Some(schema), carried ++ fresh,
-      carriedBlooms ++ freshBlooms,
-      carriedFiles ++ backfill ++ freshFiles), baseId)
+    // file lists ride the same rule
+    (Manifest(base ++ updated.map { case (rel, gen, _) => rel -> gen },
+      Some(schema), carried ++ fresh, carriedBlooms ++ freshBlooms,
+      (baseFiles -- updatedRels) ++
+        updated.map { case (rel, _, fe) => rel -> fe }), baseId)
   }
 
   /** The data files of a freshly written generation dir as manifest
@@ -1323,7 +1311,7 @@ object Lakehouse {
     val fs = fsOf(spark, r)
     val f = stagedFile(r, token)
     require(fs.exists(f), s"no staged snapshot '$token' on $root")
-    readFromManifest(spark, root, readManifest(fs, f), partitionFilter,
+    snapshotScan(spark, root, readManifest(fs, f), partitionFilter,
       fileRanges)
   }
 
@@ -1614,7 +1602,7 @@ object Lakehouse {
 
   /** The POINT-EQUALITY subset of `ranges` — the only shape a bloom
     * filter can answer. */
-  private def bloomPoints(ranges: Seq[ColRange]): Seq[(String, String)] =
+  private[graft] def bloomPoints(ranges: Seq[ColRange]): Seq[(String, String)] =
     ranges.collect {
       case ColRange(c, Some(lo), Some(hi)) if lo == hi => c -> lo.toString
     }
@@ -1639,8 +1627,7 @@ object Lakehouse {
       (fs.makeQualified(d).toString, c) -> ((d, c)) }.toMap
     val have = keyed.keys.map(k => k -> bloomCache.get(k)).toMap
     val missing = keyed.toSeq.filter { case (k, _) => have(k).isEmpty }
-    val par = confLong("graft.lake.listParallelism", 16).toInt
-    val fetched = parMap(missing, par, "graft-bloom-fetch",
+    val fetched = parMap(missing, 16, "graft-bloom-fetch",
       scala.concurrent.duration.Duration(metaIoTimeoutSec(fs), "s")) {
       case (k, (d, c)) => k -> parseBloomSidecar(fs, d, c)
     }.toMap
@@ -1762,12 +1749,14 @@ object Lakehouse {
     * pre-snapshot lakes must be committed explicitly (their hive files
     * lack the partition columns — see [[commitSnapshot]]), and a root
     * left by the retired marker-generation layout is refused
-    * ([[requireNoMarkerLayout]]). */
+    * ([[requireNoMarkerLayout]]). Returns the base mapping and the file
+    * list of the generation it wrote. */
   private def adoptLoose(spark: org.apache.spark.sql.SparkSession,
                          fs: org.apache.hadoop.fs.FileSystem,
                          r: org.apache.hadoop.fs.Path,
-                         rootRewritten: Boolean): Map[String, String] = {
-    if (!fs.exists(r)) return Map.empty
+                         rootRewritten: Boolean
+                        ): (Map[String, String], Map[String, Seq[FileEntry]]) = {
+    if (!fs.exists(r)) return (Map.empty, Map.empty)
     val kvDirs = fs.listStatus(r).filter(st =>
       st.isDirectory && st.getPath.getName.contains("="))
     require(kvDirs.isEmpty,
@@ -1776,30 +1765,32 @@ object Lakehouse {
         "as data columns (hive files do not carry them)")
     requireNoMarkerLayout(fs, r)
     // this commit replaces "" anyway, or there is nothing to adopt
-    if (rootRewritten || dataFiles(fs, r).isEmpty) Map.empty
+    if (rootRewritten || dataFiles(fs, r).isEmpty) (Map.empty, Map.empty)
     else {
-      val gen = snapGenName()
+      val genP = new org.apache.hadoop.fs.Path(r, snapGenName())
       spark.read.parquet(r.toString).write.mode("overwrite")
-        .parquet(new org.apache.hadoop.fs.Path(r, gen).toString)
-      Map("" -> gen)
+        .parquet(genP.toString)
+      (Map("" -> genP.getName), Map("" -> fileEntries(fs, genP)))
     }
   }
 
-  /** Read a snapshot-managed lake: the manifest's data dirs (optionally
+  /** Read a snapshot-managed lake: the manifest's entries (optionally
     * `asOf` an older kept snapshot — file-level time travel) planned as
-    * ONE multi-root parquet scan, never a union per partition.
+    * ONE scan over their recorded files ([[snapshotScan]]), never a
+    * union per partition.
     * `partitionFilter` prunes manifest ENTRIES before planning — the
     * manifest-level partition pruning of every table format that owns
     * its file listing; a filtered scan then still row-group-prunes on
     * the materialized partition columns.
     *
     * `fileRanges` is the DATA-SKIPPING layer on top: for partitions whose
-    * manifest carries per-file stats (committed with `statsCols`), every
+    * manifest carries per-file stats (committed with `statsCols`) or
+    * bloom sidecars (`bloomCols`, point ranges only), every
     * file whose committed [min,max] cannot intersect a declared
     * [[ColRange]] is dropped before planning — an unpartitioned-column
     * predicate then opens only the files that can match, instead of every
     * file in every kept partition (the Iceberg/Delta skip contract).
-    * Files or partitions WITHOUT stats for a ranged column are kept
+    * Files or partitions WITHOUT skip metadata for a ranged column are kept
     * (pruning is always a superset); the caller still applies the real
     * filter. */
   def readSnapshot(spark: org.apache.spark.sql.SparkSession, root: String,
@@ -1807,132 +1798,42 @@ object Lakehouse {
                    partitionFilter: String => Boolean = _ => true,
                    fileRanges: Seq[ColRange] = Nil,
                    branch: String = MainBranch): DataFrame =
-    readFromManifest(spark, root, manifestAt(spark, root, asOf, branch),
+    snapshotScan(spark, root, manifestAt(spark, root, asOf, branch),
       partitionFilter, fileRanges)
 
-  private def readFromManifest(spark: org.apache.spark.sql.SparkSession,
-                               root: String, m: Manifest,
-                               partitionFilter: String => Boolean,
-                               fileRanges: Seq[ColRange]): DataFrame = {
+  /** THE snapshot scan — every read of committed data plans here
+    * ([[readSnapshot]], [[readStaged]], [[readPart]]): ONE
+    * [[ManifestFileIndex]] relation over the recorded `#file` lists of
+    * the entries `partitionFilter` keeps, so planning lists no data dir.
+    * The manifest's schema is the read schema: evolved columns null-fill
+    * in files committed before them, no per-file footer merging, and a
+    * time-traveled read keeps its OWN epoch's shape. Declared
+    * `fileRanges` pre-prune the file list by stats and blooms (so
+    * `inputFiles` is the surviving set); the scan's pushed filters prune
+    * it again at plan time. */
+  private def snapshotScan(spark: org.apache.spark.sql.SparkSession,
+                           root: String, m: Manifest,
+                           partitionFilter: String => Boolean,
+                           fileRanges: Seq[ColRange]): DataFrame = {
     val r = new org.apache.hadoop.fs.Path(root)
     val kept = m.mapping.toSeq.filter { case (rel, _) => partitionFilter(rel) }
     require(kept.nonEmpty,
       s"snapshot of $root has no partitions left after the filter")
-    val colTypes: Map[String, org.apache.spark.sql.types.DataType] =
-      m.schema.map(_.fields.map(f => f.name -> f.dataType).toMap)
-        .getOrElse(Map.empty)
-    fileRanges.foreach(rg => require(
-      m.schema.isEmpty || colTypes.contains(rg.column),
+    val schema = m.schema.getOrElse(throw new IllegalStateException(
+      s"snapshot of $root carries no #schema line"))
+    val colTypes = schema.fields.map(f => f.name -> f.dataType).toMap
+    fileRanges.foreach(rg => require(colTypes.contains(rg.column),
       s"fileRanges column '${rg.column}' is not in the committed schema"))
-    if (fileRanges.isEmpty &&
-        (m.stats.nonEmpty || m.blooms.nonEmpty || m.files.nonEmpty) &&
-        m.schema.isDefined &&
-        spark.conf.get("graft.lake.autoSkip", "true").toBoolean) {
-      // AUTOMATIC skipping: no declared ranges needed — a manifest-backed
-      // FileIndex receives the scan's pushed data filters at plan time
-      // and drops every file whose committed [min,max] cannot satisfy
-      // them (plus bloom misses on point equality); partitions without
-      // stats are never pruned. One FileSourceScan, same null-fill
-      // schema semantics as the plain path. Partitions with recorded
-      // `#file` lists plan with ZERO filesystem calls (FileStatus is
-      // synthesized from the manifest); only pre-r18 entries fall back
-      // to a (parallel) listing.
-      val dirs = kept.map { case (rel, gen) =>
-        (dataDir(r, rel, gen), m.stats.get(rel),
-          m.blooms.getOrElse(rel, Set.empty[String]), m.files.get(rel)) }
-      val index = new ManifestFileIndex(spark, dirs, colTypes)
-      val relation = org.apache.spark.sql.execution.datasources
-        .HadoopFsRelation(index,
-          org.apache.spark.sql.types.StructType(Nil), m.schema.get, None,
-          new org.apache.spark.sql.execution.datasources.parquet
-            .ParquetFileFormat(),
-          Map.empty[String, String])(
-          spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession])
-      return spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-        .baseRelationToDataFrame(relation)
-    }
-    val fs = fsOf(spark, r)
-    // declared-range pruning with recorded #file lists: survivors plan
-    // through the manifest index too — zero listings AND zero per-file
-    // status probes (`spark.read.parquet(file, file, …)` stats each
-    // path), the same scale discipline as the automatic path
-    if (fileRanges.nonEmpty && m.schema.isDefined &&
-        kept.forall { case (rel, _) => m.files.contains(rel) }) {
-      // resolve every needed bloom sidecar ONCE, across all kept dirs,
-      // in parallel — never one blocking read per dir inside the loop
-      val pointCols = bloomPoints(fileRanges).map(_._1).toSet
-      val resolved = prefetchBloomSidecars(fs, kept.collect {
-        case (rel, gen) if m.stats.contains(rel) =>
-          m.blooms.getOrElse(rel, Set.empty).intersect(pointCols).toSeq
-            .map(c => (dataDir(r, rel, gen), c))
-      }.flatten)
-      val dirs = kept.map { case (rel, gen) =>
-        val dir = dataDir(r, rel, gen)
-        val surviving: Seq[FileEntry] = m.stats.get(rel) match {
-          case Some(files) =>
-            val keepB = bloomKeep(resolved,
-              fs.makeQualified(dir).toString,
-              m.blooms.getOrElse(rel, Set.empty), fileRanges)
-            m.files(rel).filter(e => files.get(e.name).forall(cm =>
-              rangeSurvives(cm, fileRanges, colTypes)) && keepB(e.name))
-          case None => m.files(rel) // no stats: kept whole (superset)
-        }
-        (dir, m.stats.get(rel), m.blooms.getOrElse(rel, Set.empty[String]),
-          Some(surviving))
-      }
-      if (dirs.forall(_._4.exists(_.isEmpty)))
-        return spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          m.schema.get)
-      val index = new ManifestFileIndex(spark, dirs, colTypes)
-      val relation = org.apache.spark.sql.execution.datasources
-        .HadoopFsRelation(index,
-          org.apache.spark.sql.types.StructType(Nil), m.schema.get, None,
-          new org.apache.spark.sql.execution.datasources.parquet
-            .ParquetFileFormat(),
-          Map.empty[String, String])(
-          spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession])
-      return spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-        .baseRelationToDataFrame(relation)
-    }
-    val rootPointCols = bloomPoints(fileRanges).map(_._1).toSet
-    val rootResolved = prefetchBloomSidecars(fs, kept.collect {
-      case (rel, gen) if m.stats.contains(rel) && fileRanges.nonEmpty =>
-        m.blooms.getOrElse(rel, Set.empty).intersect(rootPointCols).toSeq
-          .map(c => (dataDir(r, rel, gen), c))
-    }.flatten)
-    val roots = kept.flatMap { case (rel, gen) =>
-      val dir = dataDir(r, rel, gen)
-      m.stats.get(rel) match {
-        case Some(files) if fileRanges.nonEmpty =>
-          // the stats enumerate EVERY file of the committed generation
-          // (computed over the whole dir at commit), so the survivor
-          // list is authoritative — pass individual files to the scan;
-          // point-equality ranges also probe the bloom sidecars
-          val keepB = bloomKeep(rootResolved,
-            fs.makeQualified(dir).toString,
-            m.blooms.getOrElse(rel, Set.empty), fileRanges)
-          files.toSeq.sortBy(_._1).collect {
-            case (f, cm) if rangeSurvives(cm, fileRanges, colTypes) &&
-              keepB(f) =>
-              new org.apache.hadoop.fs.Path(dir, f).toString
-          }
-        case _ => Seq(dir.toString) // no stats: the whole dir, unskipped
-      }
-    }
-    // every file pruned away ⇒ a provably-empty result, not an error
-    if (roots.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        m.schema.getOrElse(throw new IllegalStateException(
-          s"snapshot of $root pruned to zero files but carries no schema")))
-    // the manifest's schema is the read schema: evolved columns null-fill
-    // in partitions committed before them, no per-file footer merging,
-    // and a time-traveled read keeps its OWN epoch's shape
-    m.schema match {
-      case Some(s) => spark.read.schema(s).parquet(roots: _*)
-      case None    => spark.read.parquet(roots: _*)
-    }
+    val index = new ManifestFileIndex(spark, kept.map { case (rel, gen) =>
+      (dataDir(r, rel, gen), m.stats.get(rel),
+        m.blooms.getOrElse(rel, Set.empty[String]), m.files(rel)) },
+      colTypes, fileRanges)
+    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    classic.baseRelationToDataFrame(org.apache.spark.sql.execution.datasources
+      .HadoopFsRelation(index, org.apache.spark.sql.types.StructType(Nil),
+        schema, None,
+        new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat(),
+        Map.empty[String, String])(classic))
   }
 
   /** Can a file with committed stats `cm` contain a row satisfying every
@@ -2051,10 +1952,6 @@ object Lakehouse {
     val baseId = currentSnapshotId(spark, root, branch).getOrElse(
       throw new IllegalStateException(s"$root has no committed snapshot"))
     val man = manifestAt(spark, root, Some(baseId), branch)
-    val m = man.mapping
-    // partitions read under the SNAPSHOT schema so an evolved column
-    // null-fills in old files and the union with the delta stays aligned
-    val r = new org.apache.hadoop.fs.Path(root)
     // pin the delta ONCE before the per-partition fan-out: the k touched
     // partitions each filter the SAME materialized blocks instead of
     // re-running the (possibly computed — a join/aggregate output, the
@@ -2079,10 +1976,11 @@ object Lakehouse {
       val writes = touched.sorted.toSeq.map { v =>
         val rel = s"$partitionCol=$v"
         val delta = source.filter(col(partitionCol) === v)
-        val current = m.get(rel) match {
-          case Some(gen) => readPart(spark, man, dataDir(r, rel, gen).toString)
-          case None      => delta.limit(0)
-        }
+        // read under the SNAPSHOT schema: an evolved column null-fills
+        // in old files, so the union with the delta stays aligned
+        val current =
+          if (man.mapping.contains(rel)) readPart(spark, man, root, rel)
+          else delta.limit(0)
         rel -> mergeUpsert(current, delta, keys)
       }
       commitSnapshot(spark, root, writes, expectedSnapshot = Some(baseId),
@@ -2107,8 +2005,6 @@ object Lakehouse {
     val baseId = currentSnapshotId(spark, root, branch).getOrElse(
       throw new IllegalStateException(s"$root has no committed snapshot"))
     val man = manifestAt(spark, root, Some(baseId), branch)
-    val m = man.mapping
-    val r = new org.apache.hadoop.fs.Path(root)
     // same delta-pinning as mergeSnapshot: one evaluation of the change
     // batch, k cache reads — not k re-runs of the upstream plan
     val pinChanges = changes.storageLevel ==
@@ -2130,10 +2026,9 @@ object Lakehouse {
       val writes = touched.sorted.toSeq.map { v =>
         val rel = s"$partitionCol=$v"
         val delta = changes.filter(col(partitionCol) === v)
-        val current = m.get(rel) match {
-          case Some(gen) => readPart(spark, man, dataDir(r, rel, gen).toString)
-          case None      => delta.drop(opCol).limit(0)
-        }
+        val current =
+          if (man.mapping.contains(rel)) readPart(spark, man, root, rel)
+          else delta.drop(opCol).limit(0)
         rel -> applyCdc(current, delta, keys, opCol)
       }
       commitSnapshot(spark, root, writes, expectedSnapshot = Some(baseId),
@@ -2242,9 +2137,8 @@ object Lakehouse {
     val touched = touchedEntries(spark, root, baseId, man, predicate,
       branch)
     if (touched.isEmpty) return baseId // nothing matches: committed no-op
-    val r = new org.apache.hadoop.fs.Path(root)
-    val writes = touched.map { case (rel, gen) =>
-      rel -> readPart(spark, man, dataDir(r, rel, gen).toString)
+    val writes = touched.map { case (rel, _) =>
+      rel -> readPart(spark, man, root, rel)
         .filter(!(predicate <=> lit(true)))
     }
     commitSnapshot(spark, root, writes, expectedSnapshot = Some(baseId),
@@ -2307,10 +2201,9 @@ object Lakehouse {
       s"UPDATE cannot SET partition-layout column(s) " +
         s"${clash.mkString(", ")} — moving rows between partitions is a " +
         "rewrite (mergeSnapshot/commitSnapshot), not an in-place UPDATE")
-    val r = new org.apache.hadoop.fs.Path(root)
     val setMap = set.toMap
-    val writes = touched.map { case (rel, gen) =>
-      val cur = readPart(spark, man, dataDir(r, rel, gen).toString)
+    val writes = touched.map { case (rel, _) =>
+      val cur = readPart(spark, man, root, rel)
       rel -> cur.select(cur.columns.toSeq.map { c =>
         setMap.get(c) match {
           case Some(e) => when(predicate, e).otherwise(col(c)).as(c)
@@ -3516,11 +3409,9 @@ object Lakehouse {
       val folds = touched.zip(touchedRels).map { case (v, rel) =>
         val cur =
           if (replace) emptyState
-          else man.get.mapping.get(rel) match {
-            case Some(gen) =>
-              readPart(spark, man.get, dataDir(td, rel, gen).toString)
-            case None => emptyState // first group hashed into this bucket
-          }
+          else if (man.get.mapping.contains(rel))
+            readPart(spark, man.get, tableDir, rel)
+          else emptyState // first group hashed into this bucket
         (v, rel, foldAggregate(cur,
           delta.filter(col(IvmBucketCol) === v), groupCols, sumCols,
           minCols, maxCols))
@@ -3654,8 +3545,7 @@ object Lakehouse {
     require(updated.nonEmpty,
       "wide replace produced an empty state — a bootstrap epoch always " +
         "carries rows (ivmFold routes empty epochs elsewhere)")
-    val files: Map[String, Seq[FileEntry]] = parMap(updated,
-      spark.conf.get("graft.lake.listParallelism", "16").toInt,
+    val files: Map[String, Seq[FileEntry]] = parMap(updated, 16,
       "graft-ivm-wide-list",
       scala.concurrent.duration.Duration(metaIoTimeoutSec(fs), "s")) {
       case (rel, gen) => rel -> fileEntries(fs, dataDir(td, rel, gen))
@@ -3998,36 +3888,32 @@ object Lakehouse {
       }
   }
 
-  /** The compaction sweep of a snapshot-managed lake: one listing per
-    * entry finds the drifted ones, ONE commit rewrites them. Returns
+  /** The compaction sweep of a snapshot-managed lake: the recorded file
+    * lists find the drifted entries, ONE commit rewrites them. Returns
     * (rel, filesBefore, filesAfter, bytes) for EVERY entry. */
   private def sweepSnapshot(spark: org.apache.spark.sql.SparkSession,
                             root: String, targetBytes: Long
                            ): Seq[(String, Int, Int, Long)] = {
-    val r = new org.apache.hadoop.fs.Path(root)
-    val fs = fsOf(spark, r)
     val baseId = currentSnapshotId(spark, root).getOrElse(
       throw new IllegalStateException(s"$root has no committed snapshot"))
     val m = manifestAt(spark, root, Some(baseId))
-    val entries = m.mapping.toSeq.sortBy(_._1).map { case (rel, gen) =>
-      val files = dataFiles(fs, dataDir(r, rel, gen))
-      (rel, gen, files.length, files.map(_.getLen).sum)
-    }
-    val drifted = entries.filter { case (_, _, n, bytes) =>
+    val entries = m.mapping.keys.toSeq.sorted.map(rel =>
+      (rel, m.files(rel).length, m.files(rel).map(_.len).sum))
+    val drifted = entries.filter { case (_, n, bytes) =>
       n > fileTarget(bytes, targetBytes) }
     val after: Map[String, Int] =
       if (drifted.isEmpty) Map.empty
       else {
         val id = commitSnapshot(spark, root,
-          drifted.map { case (rel, gen, _, bytes) =>
-            rel -> readPart(spark, m, dataDir(r, rel, gen).toString)
+          drifted.map { case (rel, _, bytes) =>
+            rel -> readPart(spark, m, root, rel)
               .repartition(fileTarget(bytes, targetBytes))
           },
           expectedSnapshot = Some(baseId), props = m.props)
         val files = manifestAt(spark, root, Some(id)).files
-        drifted.map { case (rel, _, _, _) => rel -> files(rel).size }.toMap
+        drifted.map { case (rel, _, _) => rel -> files(rel).size }.toMap
       }
-    entries.map { case (rel, _, n, bytes) =>
+    entries.map { case (rel, n, bytes) =>
       (rel, n, after.getOrElse(rel, n), bytes) }
   }
 
@@ -4060,20 +3946,16 @@ object Lakehouse {
     val baseId = currentSnapshotId(spark, root).getOrElse(
       throw new IllegalStateException(s"$root has no committed snapshot"))
     val man = manifestAt(spark, root, Some(baseId))
-    val r = new org.apache.hadoop.fs.Path(root)
-    val fs = fsOf(spark, r)
     // stats: the z columns (the point of the rewrite) ∪ whatever the
     // lake already tracked ∪ the caller's set (else the session
     // default); bloom columns carry through commitSnapshot's ladder
     val effStats = (Seq(a, b) ++ manifestStatsCols(man) ++
       skipCols(spark, statsCols, Nil, StatsColsConf)).distinct
-    val writes = man.mapping.toSeq.sortBy(_._1).map { case (rel, gen) =>
-      val dir = dataDir(r, rel, gen)
-      val nFiles = fileTarget(dataFiles(fs, dir).map(_.getLen).sum,
-        targetBytes)
+    val writes = man.mapping.keys.toSeq.sorted.map { rel =>
+      val nFiles = fileTarget(man.files(rel).map(_.len).sum, targetBytes)
       val z = graft.sources.Zorder.zValue(
         quantA(col(a)), quantB(col(b)), bits)
-      rel -> readPart(spark, man, dir.toString).withColumn("__z", z)
+      rel -> readPart(spark, man, root, rel).withColumn("__z", z)
         .repartitionByRange(nFiles, col("__z"))
         .sortWithinPartitions("__z")
         .drop("__z")
@@ -4196,30 +4078,28 @@ object Lakehouse {
   }
 }
 
-/** FileIndex over a snapshot manifest — the AUTOMATIC data-skipping
-  * path of [[Lakehouse.readSnapshot]]: Spark's planner hands the scan's
-  * pushed data filters to `listFiles`, and every file whose committed
-  * per-file [min,max] cannot satisfy them is dropped before a single
-  * split is planned. No declared ranges, no API change — a plain
-  * `df.filter(col("id") > x)` (or the SPARQL compiler's pushed FILTER)
-  * skips files exactly like Iceberg/Delta readers do. Catalyst still
-  * applies the real predicate; pruning is a strict superset, and
-  * filter shapes the extractor doesn't recognize (casts, UDFs,
-  * disjunctions) simply skip nothing.
+/** FileIndex over a snapshot manifest — the one way a lake read plans
+  * ([[Lakehouse.snapshotScan]]). The `FileStatus` objects Spark plans
+  * over are SYNTHESIZED from the recorded `#file` lines (generations are
+  * immutable, so the lines are authoritative forever): ZERO filesystem
+  * calls at plan time, where one blocking `listStatus` per kept dir was
+  * O(partitions) driver RPCs before a task could launch. Never
+  * refreshes.
   *
-  * Null semantics are automatically correct here: a pushed comparison
-  * filter is null-excluding by SQL semantics, so pruning an all-null
-  * file under it can never drop a surviving row.
+  * Data skipping, twice over the same rule ([[prune]]): `declared`
+  * caller ranges prune the file list at construction (so `inputFiles`
+  * is the surviving set), and Spark's planner hands the scan's pushed
+  * data filters to `listFiles`, which drops every file whose committed
+  * per-file [min,max] (or bloom sidecar, for point equality) cannot
+  * satisfy them. No API change — a plain `df.filter(col("id") > x)` (or
+  * the SPARQL compiler's pushed FILTER) skips files exactly like
+  * Iceberg/Delta readers do. Catalyst still applies the real predicate;
+  * pruning is a strict superset, and filter shapes the extractor doesn't
+  * recognize (casts, UDFs, disjunctions) simply skip nothing. Null
+  * semantics are automatically correct: a pushed comparison is
+  * null-excluding by SQL semantics, so pruning an all-null file under it
+  * can never drop a surviving row.
   *
-  * Generations are immutable, so the recorded `#file` manifest lines
-  * are authoritative forever: for partitions that carry them the
-  * `FileStatus` objects Spark plans over are SYNTHESIZED from the
-  * manifest — ZERO filesystem calls at plan time, where the r17 shape
-  * (one blocking `listStatus` per kept dir, sequentially, on every
-  * `readSnapshot`) was O(partitions) driver RPCs before a task could
-  * launch. Pre-`#file` manifests fall back to listing, PARALLELIZED
-  * across a bounded pool (the same remedy Spark's own
-  * `parallelPartitionDiscovery` applies). Never refreshes.
   * Uses the stable-across-minor-versions `execution.datasources`
   * surface (`FileIndex`/`PartitionDirectory`/`HadoopFsRelation`) — the
   * documented extension point table formats plug into. */
@@ -4227,46 +4107,29 @@ private final class ManifestFileIndex(
     spark: org.apache.spark.sql.SparkSession,
     dirs: Seq[(org.apache.hadoop.fs.Path,
       Option[Map[String, Map[String, Lakehouse.ColStat]]],
-      Set[String], Option[Seq[Lakehouse.FileEntry]])],
-    colTypes: Map[String, org.apache.spark.sql.types.DataType])
+      Set[String], Seq[Lakehouse.FileEntry])],
+    colTypes: Map[String, org.apache.spark.sql.types.DataType],
+    declared: Seq[Lakehouse.ColRange])
   extends org.apache.spark.sql.execution.datasources.FileIndex {
 
   import org.apache.spark.sql.catalyst.expressions._
   import org.apache.spark.sql.execution.datasources.PartitionDirectory
 
-  private val byDir: Seq[(org.apache.hadoop.fs.Path,
+  /** A kept dir: path, per-file stats, bloom columns, files, filesystem. */
+  private type Dir = (org.apache.hadoop.fs.Path,
     Option[Map[String, Map[String, Lakehouse.ColStat]]], Set[String],
-    Array[org.apache.hadoop.fs.FileStatus],
-    org.apache.hadoop.fs.FileSystem)] = {
+    Array[org.apache.hadoop.fs.FileStatus], org.apache.hadoop.fs.FileSystem)
+
+  private val byDir: Seq[Dir] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val blockSize = 128L << 20 // advisory only: parquet splits by length
-    val (recorded, unlisted) = dirs.partition(_._4.isDefined)
-    val fromManifest = recorded.map { case (d, st, bl, Some(entries)) =>
+    prune(dirs.map { case (d, st, bl, entries) =>
       val fs = d.getFileSystem(conf)
       val qd = fs.makeQualified(d)
-      val files = entries.map(e => new org.apache.hadoop.fs.FileStatus(
+      (d, st, bl, entries.map(e => new org.apache.hadoop.fs.FileStatus(
         e.len, false, 1, blockSize, e.mtime,
-        new org.apache.hadoop.fs.Path(qd, e.name))).toArray
-      (d, st, bl, files, fs)
-    case _ => throw new MatchError("unreachable: partitioned on isDefined")
-    }
-    // fallback for pre-#file manifests: list, but in PARALLEL — never
-    // the r17 sequential one-RPC-per-dir driver walk — and BOUNDED:
-    // this is plan-time metadata IO, so one hung remote listStatus must
-    // fail loudly instead of freezing planning forever
-    val listed = Lakehouse.parMap(unlisted,
-      spark.conf.get("graft.lake.listParallelism", "16").toInt,
-      "graft-fallback-list",
-      scala.concurrent.duration.Duration(
-        Lakehouse.metaIoTimeoutSec(conf), "s")) { case (d, st, bl, _) =>
-      val fs = d.getFileSystem(conf)
-      val files = fs.listStatus(d).filter { s =>
-        val n = s.getPath.getName
-        s.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }
-      (d, st, bl, files, fs)
-    }
-    fromManifest ++ listed
+        new org.apache.hadoop.fs.Path(qd, e.name))).toArray, fs)
+    }, declared)
   }
 
   override def rootPaths: Seq[org.apache.hadoop.fs.Path] = dirs.map(_._1)
@@ -4278,45 +4141,37 @@ private final class ManifestFileIndex(
   override def refresh(): Unit = () // committed generations are immutable
 
   override def listFiles(partitionFilters: Seq[Expression],
-                         dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val ranges = dataFilters.flatMap(boundsOf)
-    // bloom sidecars for the query's point lookups resolve ONCE across
-    // every kept dir — parallel fetch + byte-bounded LRU cache; the r18
-    // shape (one blocking read per dir inside the flatMap, behind a
-    // 128-entry full-clear cache) re-walked most sidecars sequentially
-    // on every point query of a >128-partition lake
-    val pointCols =
-      if (ranges.isEmpty) Set.empty[String]
-      else ranges.collect {
-        case Lakehouse.ColRange(c, Some(lo), Some(hi)) if lo == hi => c
-      }.toSet
+                         dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+    Seq(PartitionDirectory(org.apache.spark.sql.catalyst.InternalRow.empty,
+      prune(byDir, dataFilters.flatMap(boundsOf)).flatMap(_._4).toArray))
+
+  /** `ds` without the files whose committed stats or bloom sidecars
+    * prove they hold no row inside every range; dirs without skip
+    * metadata are never pruned. The bloom sidecars the point lookups
+    * need resolve ONCE across every dir — parallel fetch + byte-bounded
+    * LRU cache ([[Lakehouse.prefetchBloomSidecars]]), never one blocking
+    * read per dir. */
+  private def prune(ds: Seq[Dir], ranges: Seq[Lakehouse.ColRange]): Seq[Dir] = {
+    if (ranges.isEmpty) return ds
+    val pointCols = Lakehouse.bloomPoints(ranges).map(_._1).toSet
+    val withBlooms = ds.filter(_._3.exists(pointCols.contains))
     val resolved =
-      if (pointCols.isEmpty) Map.empty[(String, String),
+      if (withBlooms.isEmpty) Map.empty[(String, String),
         Map[String, org.apache.spark.util.sketch.BloomFilter]]
-      else {
-        val withBlooms = byDir.filter { case (_, stOpt, blooms, _, _) =>
-          (stOpt.isDefined || blooms.nonEmpty) &&
-            blooms.exists(pointCols.contains) }
-        if (withBlooms.isEmpty) Map.empty[(String, String),
-          Map[String, org.apache.spark.util.sketch.BloomFilter]]
-        else Lakehouse.prefetchBloomSidecars(withBlooms.head._5,
-          withBlooms.flatMap { case (d, _, blooms, _, _) =>
-            blooms.intersect(pointCols).toSeq.map(c => (d, c)) })
-      }
-    val kept = byDir.flatMap {
-      case (d, stOpt, blooms, files, fs) if ranges.nonEmpty &&
-        (stOpt.isDefined || blooms.nonEmpty) =>
+      else Lakehouse.prefetchBloomSidecars(withBlooms.head._5,
+        withBlooms.flatMap { case (d, _, blooms, _, _) =>
+          blooms.intersect(pointCols).toSeq.map(c => (d, c)) })
+    ds.map {
+      case (d, stOpt, blooms, files, fs) if stOpt.isDefined || blooms.nonEmpty =>
         val keepB = Lakehouse.bloomKeep(resolved,
           fs.makeQualified(d).toString, blooms, ranges)
-        files.filter { f =>
+        (d, stOpt, blooms, files.filter { f =>
           val name = f.getPath.getName
           stOpt.forall(_.get(name).forall(cm =>
             Lakehouse.rangeSurvives(cm, ranges, colTypes))) && keepB(name)
-        }
-      case (_, _, _, files, _) => files // no skip metadata: never pruned
+        }, fs)
+      case dir => dir // no skip metadata: never pruned
     }
-    Seq(PartitionDirectory(
-      org.apache.spark.sql.catalyst.InternalRow.empty, kept.toArray))
   }
 
   /** The attribute under a pushed comparison — bare, or wrapped in a

@@ -132,9 +132,8 @@ class Round18Spec extends SparkTestBase {
     }
   }
 
-  test("pre-r18 manifests (no #file lines) still read through the " +
-    "fallback listing, and the NEXT commit backfills file lists for " +
-    "carried partitions") {
+  test("pre-r18 manifests (no #file lines) are refused loudly, naming " +
+    "the partition, by reads and commits alike") {
     val root = freshDir("legacy")
     Lakehouse.commitSnapshot(spark, root,
       Seq("p=a" -> part("a", 1L to 20L), "p=b" -> part("b", 21L to 30L)),
@@ -154,22 +153,32 @@ class Round18Spec extends SparkTestBase {
     fs.delete(snap, false)
     val out = fs.create(snap, true)
     out.write(stripped.getBytes("UTF-8")); out.close()
-    // reads fine via the parallel-listing fallback
-    assert(Lakehouse.readSnapshot(spark, root).count() == 30)
-    assert(Lakehouse.readSnapshot(spark, root)
-      .filter(col("id") > 25L).count() == 5)
-    // a commit touching ONLY p=a backfills p=b's file list too
-    Lakehouse.commitSnapshot(spark, root,
-      Seq("p=a" -> part("a", 1L to 20L)), statsCols = Seq("id"))
-    val in2 = fs.open(new org.apache.hadoop.fs.Path(root,
-      "_graft_lake/snap-00000002"))
-    val text2 = try new String(
-      org.apache.commons.io.IOUtils.toByteArray(in2), "UTF-8")
-    finally in2.close()
-    val fileRels = text2.linesIterator.filter(_.startsWith("#file\t"))
-      .map(_.split("\t")(1)).toSet
-    assert(fileRels == Set("p=a", "p=b"),
-      s"backfill missing: #file rels = $fileRels")
+    val read = intercept[IllegalStateException] {
+      Lakehouse.readSnapshot(spark, root).count()
+    }
+    assert(read.getMessage.contains("partition 'p=a'") &&
+      read.getMessage.contains("#file"), read.getMessage)
+    val commit = intercept[IllegalStateException] {
+      Lakehouse.commitSnapshot(spark, root,
+        Seq("p=a" -> part("a", 1L to 20L)), statsCols = Seq("id"))
+    }
+    assert(commit.getMessage.contains("partition 'p=a'"), commit.getMessage)
+    assert(Lakehouse.currentSnapshotId(spark, root).contains(1),
+      "a refused commit must not land")
+  }
+
+  test("a commit of an empty frame records a #file line and reads back " +
+    "as zero rows with its schema") {
+    val root = freshDir("emptyframe")
+    val empty = part("a", Nil)
+    Lakehouse.commitSnapshot(spark, root, Seq("p=a" -> empty))
+    val text = scala.io.Source.fromFile(s"$root/_graft_lake/snap-00000001")
+    val fileLines = try text.getLines().count(_.startsWith("#file\tp=a\t"))
+    finally text.close()
+    assert(fileLines >= 1, "an empty generation must still record its file")
+    val back = Lakehouse.readSnapshot(spark, root)
+    assert(back.schema == empty.schema)
+    assert(back.count() == 0)
   }
 
   test("manifest single-file ceiling, measured: a hand-built manifest " +

@@ -27,17 +27,18 @@ object CountingOpenFs {
   }
 }
 
-/** LocalFileSystem face whose DATA-DIR listStatus hangs — instrument
-  * for the plan-time metadata-IO timeout: a hung remote listing must
-  * fail loudly within `graft.lake.metaIoTimeoutSec`, never freeze
-  * planning forever (the r18 verdict's unhardened-pool finding). Only
-  * generation dirs hang; lake metadata listings stay fast. */
-class HangingListFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+/** LocalFileSystem face whose open() of a `_bloom-*` sidecar hangs —
+  * instrument for the plan-time metadata-IO timeout: the sidecar fetch
+  * a point query plans with must fail loudly within
+  * `graft.lake.metaIoTimeoutSec`, never freeze planning forever (the r18
+  * verdict's unhardened-pool finding). Manifest and data opens stay
+  * fast. */
+class HangingBloomOpenFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("hgfs:///")
-  override def listStatus(p: org.apache.hadoop.fs.Path)
-  : Array[org.apache.hadoop.fs.FileStatus] = {
-    if (p.toString.contains("_gen-")) Thread.sleep(30000)
-    super.listStatus(p)
+  override def open(p: org.apache.hadoop.fs.Path, bufferSize: Int)
+  : org.apache.hadoop.fs.FSDataInputStream = {
+    if (p.getName.startsWith("_bloom-")) Thread.sleep(30000)
+    super.open(p, bufferSize)
   }
 }
 
@@ -145,42 +146,30 @@ class Round19Spec extends SparkTestBase {
 
   // ---- plan-time metadata-IO timeout (the unhardened-pool finding) --------
 
-  test("a hung data-dir listStatus on a pre-#file manifest fails the " +
-    "plan LOUDLY within metaIoTimeoutSec instead of freezing planning " +
+  test("a hung bloom-sidecar open under a point filter fails the plan " +
+    "LOUDLY within metaIoTimeoutSec instead of freezing planning " +
     "forever") {
     val conf = spark.sparkContext.hadoopConfiguration
-    conf.set("fs.hgfs.impl", classOf[HangingListFs].getName)
+    conf.set("fs.hgfs.impl", classOf[HangingBloomOpenFs].getName)
     val local = freshDir("hang")
-    // statsCols so the stripped manifest still engages the
-    // manifest-backed FileIndex (whose pre-#file fallback listing is
-    // the pool under test) rather than the plain whole-dir reader
     Lakehouse.commitSnapshot(spark, local,
       Seq("p=a" -> part("a", 1L to 10L), "p=b" -> part("b", 11L to 20L)),
-      statsCols = Seq("id"))
-    // strip the #file lines: byte-for-byte a pre-r18 manifest, whose
-    // read path must fall back to listing the gen dirs
-    val fs = fsOf(local)
-    val snap = new org.apache.hadoop.fs.Path(local,
-      "_graft_lake/snap-00000001")
-    val in = fs.open(snap)
-    val text = try new String(
-      org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-    finally in.close()
-    val stripped = text.linesIterator
-      .filterNot(_.startsWith("#file\t")).mkString("", "\n", "\n")
-    fs.delete(snap, false)
-    val out = fs.create(snap, true)
-    out.write(stripped.getBytes("UTF-8")); out.close()
+      statsCols = Seq("id"), bloomCols = Seq("v"))
+    Lakehouse.bloomCache.clear()
     spark.conf.set("graft.lake.metaIoTimeoutSec", "1")
     try {
       val t0 = System.nanoTime()
-      val e = intercept[java.io.IOException] {
-        Lakehouse.readSnapshot(spark, s"hgfs:$local").count()
+      val e = intercept[Exception] {
+        Lakehouse.readSnapshot(spark, s"hgfs:$local")
+          .filter(col("v") === "v7").count()
       }
       val secs = (System.nanoTime() - t0) / 1e9
-      assert(e.getMessage.contains("hung store call"),
-        s"wrong diagnosis: ${e.getMessage}")
-      assert(e.getMessage.contains("graft-fallback-list"))
+      val io = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).collectFirst { case x: java.io.IOException => x }
+      assert(io.isDefined, s"not an IO diagnosis: $e")
+      assert(io.get.getMessage.contains("hung store call"),
+        s"wrong diagnosis: ${io.get.getMessage}")
+      assert(io.get.getMessage.contains("graft-bloom-fetch"))
       assert(secs < 15, s"timeout must fire near the 1s bound, took $secs s")
     } finally spark.conf.unset("graft.lake.metaIoTimeoutSec")
   }

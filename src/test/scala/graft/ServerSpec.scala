@@ -66,6 +66,40 @@ class ServerSpec extends SparkTestBase {
     } finally server.stop()
   }
 
+  test("two blocking=0 sessions with the same query text are separate " +
+    "sessions: each drains the full result from its own thread") {
+    val server = new GraftServer(g)
+    val port = server.start()
+    try {
+      val q = "PREFIX g: <urn:g:> SELECT ?n WHERE { ?x a g:Nation ; g:name ?n }"
+      val ids = (1 to 2).map(_ =>
+        get(s"http://127.0.0.1:$port/sparql?query=${enc(q)}&blocking=0")
+          .path("hashquery").asText())
+      assert(ids.distinct.size == 2, s"same text must not share a session: $ids")
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+      try {
+        val drains = ids.map(id => pool.submit(() => {
+          val names = scala.collection.mutable.ArrayBuffer[String]()
+          var eof = false
+          while (!eof) {
+            val r = get(s"http://127.0.0.1:$port/nextresult?id=$id")
+            if (r.path("result").isTextual) {
+              assert(r.path("result").asText() == "EOF", r.toString)
+              assert(r.path("totalRows").asLong() == names.size)
+              eof = true
+            } else names += r.path("result").path("n").asText()
+          }
+          names.sorted.toSeq
+        }))
+        val results = drains.map(_.get(120, java.util.concurrent.TimeUnit.SECONDS))
+        results.foreach { names =>
+          assert(names.size == 25 && names.distinct.size == 25, names)
+        }
+        assert(results(0) == results(1))
+      } finally pool.shutdownNow()
+    } finally server.stop()
+  }
+
   test("format=srj answers W3C sparql-results+json with typed terms") {
     val server = new GraftServer(g)
     val port = server.start()

@@ -119,9 +119,8 @@ class StressSpec extends SparkTestBase {
       import scala.concurrent.ExecutionContext.Implicits.global
       val runs = Future.sequence((0 until 12).map { i =>
         Future {
-          // whitespace-distinct query text per client: distinct md5 session
-          // keys (same-query clients intentionally replace each other —
-          // the reference's contract — which is not what's under test here)
+          // whitespace-distinct query text per client, so distinct texts
+          // are served side by side (ServerSpec pins same-text sessions)
           val text = qs(i % 3) + (" " * (i + 1))
           val q = URLEncoder.encode(text, UTF_8)
           if (i % 2 == 0) { // blocking client: count streamed rows
