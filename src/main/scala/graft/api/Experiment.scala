@@ -1,6 +1,6 @@
 package graft.api
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftBridge}
 
 import graft.parser.SparqlParser
 
@@ -8,15 +8,20 @@ import graft.parser.SparqlParser
   * (`/root/reference/scripts/runExperiment.py:44-63, 85, 103+` and
   * `scripts/run_dief_experiment.py:46-56`, per BASELINE.md):
   *
-  *  - `dt` decomposition time (here: parse + decompose/source-select),
-  *  - `pt` planning time (here: Catalyst analysis of the compiled frame),
-  *  - `t1` time to first answer, `tn` total execution time,
+  *  - `dt` decomposition time (here: parsing),
+  *  - `pt` planning time (here: decompose/source-select and compile, which
+  *    includes the bounded scan of a selective star the compiler inlines
+  *    as a build side, then Catalyst planning of the compiled frame),
+  *  - `t1` time to first answer (the first row of the first wave),
+  *    `tn` total execution time,
   *  - `c1`/`cn` first/total answer counts,
   *  - an answer `(time, count)` trace for dief@t curves.
   *
-  * Results stream through `toLocalIterator` — the incremental consumption
-  * path (the reference's `/nextresult` endpoint, `app/query.py:49-82`), so
-  * `t1` genuinely measures first-tuple latency, not job completion.
+  * Results stream through [[org.apache.spark.sql.GraftBridge.waveRows]],
+  * the drain the server's `/nextresult` endpoint uses (the reference's
+  * incremental consumption path, `app/query.py:49-82`): one job per wave
+  * of `defaultParallelism` partitions, so `t1` is the time to the first
+  * row of the first wave, not to the whole result.
   */
 object Experiment {
 
@@ -36,7 +41,7 @@ object Experiment {
     df.queryExecution.executedPlan // force analysis + physical planning
     val pt = secs()
 
-    val it = df.toLocalIterator()
+    val it = GraftBridge.waveRows(df)
     var n = 0L
     var t1 = 0.0
     val trace = List.newBuilder[(Double, Long)]

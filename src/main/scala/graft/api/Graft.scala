@@ -104,9 +104,13 @@ final class Graft(val catalog: Catalog, tableLoader: String => DataFrame,
     * operator plan, then timings). The decomposition is the one the
     * compiler built while routing this query (each star with its
     * candidate source fragments from RDF-MT source selection, or a BGP
-    * that link pruning proved empty), and the plan is Catalyst's
-    * formatted physical plan — the thing to read for PushedFilters /
-    * join strategy / Exchange placement. */
+    * that link pruning proved empty, and the selective side it inlined
+    * with its row count), and the plan is Catalyst's formatted physical
+    * plan — the thing to read for PushedFilters / join strategy /
+    * Exchange placement. Explain does not run the query, but compiling it
+    * runs the bounded scan of any selective side the compiler inlines
+    * (at most `RoutePlanner.BindKeyCap` + 1 rows, see `Compiler`'s
+    * inline rule), as answering it would. */
   def explain(query: String): String = {
     import graft.algebra._
     val q = SparqlParser.parseUnsafe(query)
@@ -121,6 +125,15 @@ final class Graft(val catalog: Catalog, tableLoader: String => DataFrame,
     val planTime = (System.nanoTime() - t0) / 1e9
     val decTime = decisions.map(_.decomposeNs).sum / 1e9
     val stars = decisions.flatMap(_.stars.getOrElse(Nil))
+    // star numbers run on across decisions; an inlined side names its own
+    val offsets = decisions.scanLeft(0)(_ + _.stars.fold(0)(_.length))
+    val inlined = decisions.zip(offsets).flatMap { case (d, off) =>
+      d.inlined.map { in =>
+        val rows = if (in.rows == 1) "1 row" else s"${in.rows} rows"
+        s"  star ${in.stars.map(_ + off).mkString(" ⋈ star ")} inlined ($rows): " +
+          "evaluated at compile time, joined as a local build side"
+      }
+    }
     val dec = (stars.zipWithIndex.map { case (s, i) =>
       val subj = s.subject match {
         case Var(n) => s"?$n"
@@ -131,7 +144,7 @@ final class Graft(val catalog: Catalog, tableLoader: String => DataFrame,
         .map(f => s"${f.molecule.table}@${f.molecule.source}")
         .mkString("[", " ⋈ ", "]")).mkString(", ")
       s"  star $i: $subj {${s.triples.length} triples} -> $srcs"
-    } ++ decisions.collect { case d if d.stars.isEmpty =>
+    } ++ inlined ++ decisions.collect { case d if d.stars.isEmpty =>
       s"  bgp {${d.triples.length} triples}: provably empty (no joinable source pair)"
     }).mkString("\n")
     s"""Decomposition (${stars.length} stars, ${f"$decTime%.3f"}s):

@@ -2,7 +2,7 @@ package graft.api
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{GraftBridge, Row}
 
 import java.net.{InetSocketAddress, URLDecoder}
 import java.nio.charset.StandardCharsets.UTF_8
@@ -21,10 +21,14 @@ import scala.jdk.CollectionConverters._
   * keyed sessions by the md5 of the query text (`query.py:100`), so two
   * clients sending the same text shared, and clobbered, one session.
   *
-  * Incremental rows come from `toLocalIterator` — partitions stream to the
-  * driver on demand, so a non-blocking session never materializes the full
-  * result. The server binds loopback (a serving tier would front this with
-  * a real gateway; the query engine itself is the point here).
+  * Every response drains through [[org.apache.spark.sql.GraftBridge.waveRows]]:
+  * one Spark job per wave of `defaultParallelism` partitions, started when
+  * the previous wave's rows have been written or handed out, rows in
+  * partition order. A point read whose scan fits in the task slots costs
+  * one job, and neither a blocking response nor a non-blocking session
+  * holds more than one wave of the result. The server binds loopback (a
+  * serving tier would front this with a real gateway; the query engine
+  * itself is the point here).
   */
 final class GraftServer(g: Graft, port: Int = 0,
                         /** idle sessions are reaped after this long — an
@@ -135,28 +139,28 @@ final class GraftServer(g: Graft, port: Int = 0,
             ex.sendResponseHeaders(200, 0L)
             val w = new java.io.BufferedWriter(
               new java.io.OutputStreamWriter(ex.getResponseBody, UTF_8))
-            try df.toLocalIterator().asScala
+            try GraftBridge.waveRows(df)
               .filterNot(r => r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2))
               .foreach { r =>
                 w.write(s"${r.getString(0)} ${r.getString(1)} ${r.getString(2)} .\n")
               }
             finally { w.flush(); w.close(); ex.close() }
-          case Some("xml") => streamXml(ex, vars, df.toLocalIterator().asScala)
+          case Some("xml") => streamXml(ex, vars, GraftBridge.waveRows(df))
           case Some("tsv") =>
-            streamTabular(ex, vars, df.toLocalIterator().asScala, tsv = true)
+            streamTabular(ex, vars, GraftBridge.waveRows(df), tsv = true)
           case Some("csv") =>
-            streamTabular(ex, vars, df.toLocalIterator().asScala, tsv = false)
+            streamTabular(ex, vars, GraftBridge.waveRows(df), tsv = false)
           case _ =>
-            // rows stream straight from toLocalIterator into the chunked
-            // response — one partition of driver memory, never a full
+            // rows stream from the wave drain into the chunked response —
+            // one wave of partitions in driver memory, never a full
             // collect (a large SELECT must not OOM the serving driver)
-            streamBlocking(ex, vars, df.toLocalIterator().asScala, start,
+            streamBlocking(ex, vars, GraftBridge.waveRows(df), start,
               srj = fmt.contains("srj"))
         }
         null // response already written
       } else {
         val id = UUID.randomUUID().toString.replace("-", "")
-        sessions.put(id, new Session(vars, df.toLocalIterator().asScala, start))
+        sessions.put(id, new Session(vars, GraftBridge.waveRows(df), start))
         Map("vars" -> vars, "hashquery" -> id, "result" -> Seq.empty,
           "execTime" -> secondsSince(start), "totalRows" -> -1)
       }
@@ -177,7 +181,7 @@ final class GraftServer(g: Graft, port: Int = 0,
     Option(sessions.get(id)) match {
       case None =>
         Map("result" -> "EOF", "totalRows" -> 1, "error" -> "Already finished")
-      // one request at a time per session: toLocalIterator is not
+      // one request at a time per session: the drain iterator is not
       // thread-safe, and the served count must match the rows handed out
       case Some(s) => s.synchronized {
         s.lastAccess = System.currentTimeMillis()

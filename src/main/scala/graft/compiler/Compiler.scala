@@ -36,7 +36,14 @@ final case class Compiled(df: DataFrame, sigs: Map[String, (String, List[String]
                             * BGP join ordering ranks units by card×weight,
                             * so a mixed federation pulls the cheap-transport
                             * side first. 1 = local. */
-                          weight: Long = 1L) {
+                          weight: Long = 1L,
+                          /** a constant equality restricts this subplan
+                            * (`nSelective > 0` on a non-dimension
+                            * molecule), kept through inner joins: a BGP
+                            * may evaluate it first and join its rows as a
+                            * local build side ([[Compiler]]'s inline
+                            * rule) */
+                          selective: Boolean = false) {
   def visibleVars: Seq[String] = df.columns.toSeq.filterNot(Compiled.isHidden)
   def dropHidden: DataFrame = {
     val hidden = df.columns.filter(Compiled.isHidden)
@@ -1317,29 +1324,86 @@ final class Compiler(catalog: Catalog, load: String => DataFrame,
             Map.empty, bcast = false, card = 0L)
       }
     decided(Some(stars))
+    val slot = record.map(_.size - 1)
+    // one bounded drain per BGP at most: the first selective side that
+    // meets an unselective star ([[inlineApplies]]), inlined or not
+    var drained = false
+    def inline(sel: Compiled, other: Compiled, side: List[Star]): Option[Compiled] =
+      if (drained || !inlineApplies(sel, other)) None
+      else {
+        drained = true
+        val local = inlineRows(sel)
+        for (c <- local; r <- record; i <- slot) r(i) = r(i).copy(inlined = Some(
+          Compiler.Inlined(side.map(st => stars.indexWhere(_ eq st)).sorted, c.card)))
+        local
+      }
+    // each unit with the stars it covers (a shipped group covers several)
     val units = groupShip match {
       case Some(cfg) => shipExclusiveGroups(stars, shipFilters, cfg)
-      case None      => stars.map(compileStar)
+      case None      => stars.map(st => (compileStar(st), List(st)))
     }
     val compiled = mutable.ListBuffer(units: _*)
     // rank by TRANSFER, not raw rows: card × backend weight (saturating),
     // so a mixed federation pulls the cheap-transport side first — the
     // reference's getdsscore source-type rank with real statistics
-    def est(c: Compiled): Long =
+    def est(u: (Compiled, List[Star])): Long = {
+      val c = u._1
       if (c.card < 0) Long.MaxValue
       else if (c.weight > 0 && c.card > Long.MaxValue / c.weight) Long.MaxValue
       else c.card * c.weight
+    }
     val first = compiled.minBy(est)
-    var acc = compiled.remove(compiled.indexWhere(_ eq first))
+    var (acc, accStars) = compiled.remove(compiled.indexWhere(_ eq first))
     var accVars = acc.visibleVars.toSet
     while (compiled.nonEmpty) {
-      val sharing = compiled.filter(c => c.visibleVars.exists(accVars.contains))
+      val sharing = compiled.filter(u => u._1.visibleVars.exists(accVars.contains))
       val next = if (sharing.nonEmpty) sharing.minBy(est) else compiled.head
       compiled.remove(compiled.indexWhere(_ eq next))
-      acc = join2(acc, next, "inner")
-      accVars ++= next.visibleVars
+      val (nc, nStars) = next
+      // at most one side qualifies: the rule needs the other unselective
+      val (l, r) = inline(acc, nc, accStars) match {
+        case Some(a) => (a, nc)
+        case None    => (acc, inline(nc, acc, nStars).getOrElse(nc))
+      }
+      acc = join2(l, r, "inner")
+      accVars ++= nc.visibleVars
+      accStars ++= nStars
     }
     acc
+  }
+
+  /** The selective side first, as the reference's `NestedHashJoinFilter`
+    * evaluates its selective input before the other. The first time in a
+    * BGP that a selective subplan (a constant equality on a non-dimension
+    * star, or an inner join that contains one) meets a star that is
+    * neither selective nor broadcast-hinted, with both over local
+    * molecules ([[RoutePlanner.backendWeight]] 1, so nothing remote is
+    * fetched at compile time), the compiler evaluates the selective side
+    * now ([[inlineRows]]). */
+  private def inlineApplies(sel: Compiled, other: Compiled): Boolean =
+    sel.selective && !other.selective && !other.bcast &&
+      sel.weight == 1 && other.weight == 1 &&
+      !sel.df.isStreaming && !other.df.isStreaming
+
+  /** A bounded drain ([[org.apache.spark.sql.GraftBridge.waveRows]]) of at
+    * most [[RoutePlanner.BindKeyCap]] + 1 rows — the cap RoutePlanner
+    * already uses as its definition of "selective". With at most
+    * `BindKeyCap` rows, they replace the subplan as a local relation, so
+    * Catalyst builds the join's hash table on those rows instead of
+    * broadcasting the other, unfiltered star. Otherwise the plan stays as
+    * it was.
+    *
+    * The cost of a miss: every partition of the drained subplan reads at
+    * most `BindKeyCap` + 1 rows, and the drain stops after the wave in
+    * which the total passed the cap — one wave, one job, when the
+    * subplan's scans fit in the task slots. A subplan over more
+    * partitions than slots can pay more waves before it passes the cap. */
+  private def inlineRows(sel: Compiled): Option[Compiled] = {
+    val cap = RoutePlanner.BindKeyCap.toInt
+    val rows = org.apache.spark.sql.GraftBridge.waveRows(sel.df, cap + 1).toArray
+    Option.when(rows.length <= cap)(sel.copy(
+      df = spark.createDataFrame(java.util.Arrays.asList(rows: _*), sel.df.schema),
+      card = rows.length.toLong))
   }
 
   /** Exclusive-group dispatch (FedX §5.2, the optimization the reference's
@@ -1376,7 +1440,7 @@ final class Compiler(catalog: Catalog, load: String => DataFrame,
       }))
 
   private def shipExclusiveGroups(stars: List[Star], filters: List[Expr],
-                                  cfg: QueryShip.GroupShip): List[Compiled] = {
+                                  cfg: QueryShip.GroupShip): List[(Compiled, List[Star])] = {
     def sole(st: Star): Option[String] = soleEndpointOf(st)
     def eligible(st: Star): Boolean = starShipEligible(st)
     def components(sts: List[Star]): List[List[Star]] = {
@@ -1407,9 +1471,9 @@ final class Compiler(catalog: Catalog, load: String => DataFrame,
       comp <- components(sts) if comp.size >= 2
     } yield {
       comp.foreach(consumed.add)
-      shipComponent(ep, comp, filters, cfg)
+      (shipComponent(ep, comp, filters, cfg), comp)
     }
-    shipped ++ stars.filterNot(consumed.contains).map(compileStar)
+    shipped ++ stars.filterNot(consumed.contains).map(st => (compileStar(st), List(st)))
   }
 
   /** Exclusive-PATTERN dispatch — the ladder rung between exclusive star
@@ -1735,7 +1799,8 @@ final class Compiler(catalog: Catalog, load: String => DataFrame,
     // leaves dangling hints on fragments that end up union branches
     // (HintErrorLogger noise); join2 attaches it at join construction
     Compiled(out, sigs, bcast = m.broadcastHint, card = estCard,
-      weight = RoutePlanner.backendWeight(m.source))
+      weight = RoutePlanner.backendWeight(m.source),
+      selective = nSelective > 0 && !m.broadcastHint)
   }
 
   /** Join on shared variables. Template-built vars with matching signatures
@@ -1792,7 +1857,8 @@ final class Compiler(catalog: Catalog, load: String => DataFrame,
         h.forall(joined.columns.contains)
       }
       Compiled(joined, sigs ++ rSigs, outBcast,
-        card = joinCard(cross = false), weight = math.max(l.weight, r.weight))
+        card = joinCard(cross = false), weight = math.max(l.weight, r.weight),
+        selective = how == "inner" && (l.selective || r.selective))
     }
   }
 
@@ -1869,7 +1935,8 @@ final class Compiler(catalog: Catalog, load: String => DataFrame,
     Compiled(ldf.unionByName(rdf, allowMissingColumns = true), sigs,
       l.bcast && r.bcast,
       card = if (l.card < 0 || r.card < 0) -1L else l.card + r.card,
-      weight = math.max(l.weight, r.weight))
+      weight = math.max(l.weight, r.weight),
+      selective = l.selective && r.selective)
   }
 
   private def typedLit(lex: String, dt: Option[String], target: DataType): Column =
@@ -1884,9 +1951,16 @@ final class Compiler(catalog: Catalog, load: String => DataFrame,
 
 object Compiler {
   /** What compiling one BGP decided: the stars it built, or None when
-    * join-link pruning proved the BGP empty; and the decomposition time. */
+    * join-link pruning proved the BGP empty; the decomposition time; and
+    * the selective side, if any, the join loop evaluated at compile time
+    * and joined as a local relation. */
   final case class BgpDecision(triples: List[TriplePattern],
-                               stars: Option[List[Star]], decomposeNs: Long)
+                               stars: Option[List[Star]], decomposeNs: Long,
+                               inlined: Option[Inlined] = None)
+
+  /** A side of a BGP join inlined as a local build side: the indices (in
+    * [[BgpDecision.stars]]) of the stars it covers and its row count. */
+  final case class Inlined(stars: List[Int], rows: Long)
 
   // Thread-scoped, not instance state: a GraftServer shares one Compiler
   // across concurrent requests, and SERVICE / exclusive-pattern bodies

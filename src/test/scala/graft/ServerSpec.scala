@@ -2,9 +2,14 @@ package graft
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import graft.api.{Graft, GraftServer, TpchCatalog}
+import org.apache.spark.TestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 
 import java.net.{HttpURLConnection, URI, URLEncoder}
 import java.nio.charset.StandardCharsets.UTF_8
+import scala.jdk.CollectionConverters._
 
 /** `/sparql` + `/nextresult` service-layer contract (app/query.py parity):
   * blocking answers, incremental consumption to EOF, drained-session
@@ -125,12 +130,92 @@ class ServerSpec extends SparkTestBase {
         .toURL.openConnection().asInstanceOf[HttpURLConnection]
       conn.setRequestMethod("GET")
       // chunked transfer = rows left the driver incrementally, not as one
-      // collected buffer (the response was produced from toLocalIterator)
+      // collected buffer (the response was produced by the wave drain)
       assert(conn.getHeaderField("Transfer-encoding") == "chunked")
       val res = mapper.readTree(conn.getInputStream)
       val expected = spark.read.parquet(s"$sfDir/lineitem.parquet").count()
       assert(res.path("totalRows").asLong() == expected)
       assert(res.path("result").size().toLong == expected)
+    } finally server.stop()
+  }
+
+  /** The jobs Spark started while `body` ran: a listener scoped to the
+    * body, with the bus drained before it is added and after it ran. */
+  private def jobsDuring[A](body: => A): (A, Seq[SparkListenerJobStart]) = {
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.add(js)
+    }
+    val sc = spark.sparkContext
+    TestBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val a = body
+      TestBus.drain(sc)
+      (a, jobs.asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** A Graft whose `customer` table is `customer(sf frame)`, the others
+    * the sf parquet files. */
+  private def graftWithCustomer(customer: DataFrame => DataFrame): Graft = {
+    val cust = customer(spark.read.parquet(s"$sfDir/customer.parquet"))
+    new Graft(TpchCatalog.catalog, t =>
+      if (t == "customer") cust else spark.read.parquet(s"$sfDir/$t.parquet"))(spark)
+  }
+
+  test("a point read whose scan fits in the task slots runs exactly one job") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-point").toString
+    spark.read.parquet(s"$sfDir/customer.parquet").repartition(3)
+      .write.parquet(s"$dir/customer.parquet")
+    val g3 = graftWithCustomer(_ => spark.read.parquet(s"$dir/customer.parquet"))
+    val q = """PREFIX g: <urn:g:> SELECT ?n ?b WHERE {
+              |  <urn:g:cust:7> a g:Customer ; g:name ?n ; g:acctbal ?b }""".stripMargin
+    val parts = g3.sparql(q).queryExecution.executedPlan.execute().getNumPartitions
+    val slots = spark.sparkContext.defaultParallelism
+    assert(parts > 1 && parts <= slots, s"scan partitions $parts, slots $slots")
+    val server = new GraftServer(g3)
+    val port = server.start()
+    try {
+      val url = s"http://127.0.0.1:$port/sparql?query=${enc(q)}"
+      val (res, jobs) = jobsDuring(get(url))
+      assert(res.path("totalRows").asInt() == 1)
+      assert(res.path("result").get(0).path("n").asText() == "Customer#000000007")
+      // one job for the whole scan, not one per partition
+      val tasks = jobs.map(_.stageInfos.map(_.numTasks).sum)
+      assert(tasks == Seq(parts), s"jobs by task count: $tasks")
+    } finally server.stop()
+  }
+
+  test("a result wider than the task slots drains in sorted waves of " +
+    "defaultParallelism partitions") {
+    val slots = spark.sparkContext.defaultParallelism
+    val parts = 3 * slots
+    // range-partitioned on the ORDER BY key and checkpointed with that
+    // partitioning: the sort needs no exchange, so every job of the
+    // request is a drain job
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    val gWide =
+      try graftWithCustomer(_.repartitionByRange(parts, col("c_acctbal")).localCheckpoint())
+      finally spark.conf.unset("spark.sql.adaptive.enabled")
+    val q = """PREFIX g: <urn:g:> SELECT ?c ?b WHERE {
+              |  ?c a g:Customer ; g:acctbal ?b } ORDER BY ?b""".stripMargin
+    val plan = gWide.sparql(q).queryExecution.executedPlan
+    assert(plan.execute().getNumPartitions == parts, plan.treeString)
+    val expected = spark.read.parquet(s"$sfDir/customer.parquet").count()
+    val server = new GraftServer(gWide)
+    val port = server.start()
+    try {
+      val (res, jobs) = jobsDuring(
+        get(s"http://127.0.0.1:$port/sparql?query=${enc(q)}"))
+      val bs = (0 until res.path("result").size())
+        .map(i => res.path("result").get(i).path("b").asDouble())
+      assert(bs.size.toLong == expected)
+      assert(bs == bs.sorted, "rows must stream in ORDER BY order across waves")
+      val tasks = jobs.map(_.stageInfos.map(_.numTasks).sum)
+      assert(tasks.forall(_ <= slots), s"a drain job covered more than $slots partitions: $tasks")
+      assert(tasks.size == (parts + slots - 1) / slots, s"jobs by task count: $tasks")
+      assert(tasks.sum == parts)
     } finally server.stop()
   }
 
