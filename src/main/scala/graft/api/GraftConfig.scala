@@ -112,17 +112,15 @@ object GraftConfig {
             val props = d.path("params").properties().asScala
               .map(e => e.getKey -> e.getValue.asText()).toMap
             JdbcSource(url, param("dbtable", table), props - "dbtable")
-          // a remote SPARQL endpoint as a table — the reference's
-          // SPARQL_Endpoint datasource type (`config/__init__.py` +
-          // `wrappers/triplestore`): `query` defines the table's rows
-          // (totally ordered for stable paging), `schema` is a DDL string
-          // for the variable bindings
+          // a remote SPARQL endpoint as a table: `query` defines the
+          // table's rows, `schema` is a DDL string for the variable
+          // bindings
           case "endpoint" | "sparql_endpoint" =>
             def req(k: String) =
               if (d.path("params").has(k)) d.path("params").path(k).asText()
               else throw new IllegalArgumentException(
                 s"endpoint datasource '$table' needs params.$k")
-            SparqlHttp.pagedSource(url, req("query"),
+            EndpointQuerySource(url, req("query"),
               org.apache.spark.sql.types.StructType.fromDDL(req("schema")),
               param("pageSize", "10000").toInt)
           case other =>

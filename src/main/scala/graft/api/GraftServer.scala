@@ -47,7 +47,7 @@ final class GraftServer(g: Graft, port: Int = 0,
 
   /** Queries answered on `/sparql` since start — lets federation tests
     * assert the dispatch strategy (a bind join sends one request per key
-    * window; a full paged fetch sends gallop probes plus one per page). */
+    * window; a full paged fetch sends one COUNT plus one per page). */
   val queriesServed = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** The most recent `/sparql` query texts (bounded ring) — lets tests pin

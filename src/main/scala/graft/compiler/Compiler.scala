@@ -974,18 +974,17 @@ final class Compiler(catalog: Catalog, load: String => DataFrame,
       !catalog.molecules.exists(m => m.source == src || m.source == name)
   }
 
-  /** Full remote fetch: serialize the pattern to SPARQL text and page it
-    * over HTTP (W3C Federated Query §2 dispatch; rows come back as lexical
-    * forms, joining siblings on term identity like path results). */
+  /** Full remote fetch: ship the pattern as a paged SELECT over its
+    * sorted vars through the shared remote scan (W3C Federated Query §2
+    * dispatch; one COUNT sizes the page plan, pages group into at most
+    * 32 ranges; rows come back as lexical forms, joining siblings on term
+    * identity like path results). */
   private def remoteServiceFetch(src: String, p: Pattern,
                                  silent: Boolean): Compiled = {
     val vars = p.vars.toList.sorted
     require(vars.nonEmpty, s"SERVICE <$src>: pattern binds no variables")
-    val query = SparqlText.selectQuery(vars, p)
     val schema = StructType(vars.map(StructField(_, StringType, nullable = true)))
-    val pageSize = spark.conf.get("graft.service.pageSize", "10000").toInt
-    val df = graft.sources.SparqlHttp.pagedSource(src, query, schema, pageSize)
-      .load(spark)
+    val df = QueryShip.shipPattern(src, p, Nil, schema, QueryShip.GroupShip())
     // Under SILENT the fetch materializes HERE, driver-side: page pulls
     // otherwise run lazily on executors at action time, outside the
     // caller's try, so a remote failure mid-query would fail the whole
@@ -1067,8 +1066,6 @@ final class Compiler(catalog: Catalog, load: String => DataFrame,
     // throws (the Round6 contract: config errors surface, never degrade)
     val windowConf = spark.conf.get("graft.service.bindJoin.window", "auto")
     val maxKeys = spark.conf.get("graft.service.bindJoin.maxKeys", "10000").toInt
-    val maxFetchRows =
-      spark.conf.get("graft.service.bindJoin.maxFetchRows", "1000000").toInt
     // over the key cap a shuffled join over the full paged fetch is the
     // right plan anyway — an explicit branch, not exception control flow:
     // the old catch of IllegalArgumentException also swallowed
@@ -1129,7 +1126,7 @@ final class Compiler(catalog: Catalog, load: String => DataFrame,
       // construction (selective keys are why a bind join was chosen) and
       // by the explicit row cap, past which the distributed full paged
       // fetch is the right plan anyway.
-      if (fetched.length > maxFetchRows) return fullFetch
+      if (fetched.length > Compiler.BindJoinMaxFetchRows) return fullFetch
       val right = spark.createDataFrame(
         java.util.Arrays.asList(fetched: _*), schema)
       Compiled(left.join(right, shared, joinType), lc.sigs -- shared)
@@ -1950,6 +1947,11 @@ final class Compiler(catalog: Catalog, load: String => DataFrame,
 }
 
 object Compiler {
+  /** Row cap on a SERVICE bind join's fetched matches, which land on the
+    * driver as a local relation; past it the distributed full fetch is
+    * the right plan. */
+  val BindJoinMaxFetchRows = 1000000
+
   /** What compiling one BGP decided: the stars it built, or None when
     * join-link pruning proved the BGP empty; the decomposition time; and
     * the selective side, if any, the join loop evaluated at compile time

@@ -14,12 +14,6 @@ import graft.algebra._
   * SERVICE SILENT that degrades to the unit solution per §4. */
 object SparqlText {
 
-  /** A full SELECT over `vars`, totally ordered for stable LIMIT/OFFSET
-    * paging (each page is an independent execution at the endpoint). */
-  def selectQuery(vars: Seq[String], p: Pattern): String =
-    s"SELECT ${vars.map("?" + _).mkString(" ")} WHERE { ${pattern(p)} }" +
-      s" ORDER BY ${vars.map("?" + _).mkString(" ")}"
-
   /** A complete SELECT/ASK query — the whole-query dispatch of
     * [[QueryShip]] (a single-endpoint mediator ships the full query, the
     * FedX-style "exclusive group" at query granularity). Modifier order

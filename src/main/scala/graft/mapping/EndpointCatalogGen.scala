@@ -3,7 +3,7 @@ package graft.mapping
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
-import graft.sources.{DiscoveryTranslators => D, PagedEndpointSource, SparqlHttp}
+import graft.sources.{DiscoveryTranslators => D, SparqlHttp}
 
 /** RDF-MT catalog generation by probing a LIVE SPARQL endpoint over the
   * wire — the end-to-end twin of the reference's `create_rdfmts.py` against
@@ -19,9 +19,10 @@ import graft.sources.{DiscoveryTranslators => D, PagedEndpointSource, SparqlHttp
   * testable against [[graft.api.GraftServer]].
   *
   * Each probed concept becomes a molecule whose backing "table" is a paged
-  * SPARQL fetch (subject + one OPTIONAL per discovered predicate, ORDER BY
-  * subject for stable pagination). The probed cardinality sizes the page
-  * plan directly — no gallop probing — and drives the broadcast hint:
+  * SPARQL scan (subject + one OPTIONAL per discovered predicate, ORDER BY
+  * every fetched variable for stable pagination). The probed cardinality
+  * sizes the page plan of an unfiltered scan — no sizing query — and
+  * drives the broadcast hint:
   * exactly what RDF-MT statistics exist for. Structure is discovered;
   * nothing about the endpoint is declared.
   */
@@ -183,19 +184,6 @@ object EndpointCatalogGen {
       }
     (dt, isUri)
   }
-
-  /** The per-concept fetch: subject + one OPTIONAL per predicate, TOTALLY
-    * ordered — by subject and then every fetched variable, because a
-    * multi-valued predicate fans one subject into several solution rows
-    * and LIMIT/OFFSET pages on a non-unique sort key may drop or
-    * duplicate rows at page boundaries (the reference never pages on a
-    * partial order either: it walks offsets until a short page). */
-  private[graft] def fetchQuery(t: String, cols: List[(String, String)]): String =
-    s"SELECT ?s ${cols.map("?" + _._2).mkString(" ")} WHERE { ?s a " +
-      s"${SparqlHttp.angled(t)} . " +
-      cols.map { case (p, c) =>
-        s"OPTIONAL { ?s ${SparqlHttp.angled(p)} ?$c } " }.mkString +
-      s"} ORDER BY ?s ${cols.map("?" + _._2).mkString(" ")}".stripTrailing()
 
   /** The cheap first pass of discovery — concepts, their predicate lists,
     * cardinalities AND a per-concept VALUE sample (1 + 3·|concepts|

@@ -1941,52 +1941,16 @@ object Lakehouse {
     * MERGE: an update that moved a key's partition would leave the stale
     * copy in the old partition, which this rewrite never opens). The
     * per-partition work is [[mergeUpsert]]'s anti-join ∪ union; a
-    * brand-new partition value inserts wholesale. Returns the committed
-    * snapshot id. */
+    * brand-new partition value inserts wholesale. An empty source is a
+    * committed no-op. Returns the committed snapshot id. */
   def mergeSnapshot(spark: org.apache.spark.sql.SparkSession, root: String,
                     source: DataFrame, keys: Seq[String],
                     partitionCol: String,
-                    branch: String = MainBranch): Int = {
-    require(source.columns.contains(partitionCol),
-      s"source must carry '$partitionCol' as a data column")
-    val baseId = currentSnapshotId(spark, root, branch).getOrElse(
-      throw new IllegalStateException(s"$root has no committed snapshot"))
-    val man = manifestAt(spark, root, Some(baseId), branch)
-    // pin the delta ONCE before the per-partition fan-out: the k touched
-    // partitions each filter the SAME materialized blocks instead of
-    // re-running the (possibly computed — a join/aggregate output, the
-    // normal CDC shape) source plan k times. Without this the docstring's
-    // O(changed partitions) cost claim multiplies the upstream plan by k.
-    // A source the caller already persisted is respected as-is.
-    val pinSource = source.storageLevel ==
-      org.apache.spark.storage.StorageLevel.NONE
-    if (pinSource)
-      source.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // the collect is bounded by the number of TOUCHED PARTITIONS (never
-      // rows) — the same driver-bounded shape as every partition manifest;
-      // it is also the action that materializes the pinned delta
-      val touched = source.select(col(partitionCol)).distinct()
-        .collect().map(x => Option(x.get(0)).map(_.toString).getOrElse(
-          throw new IllegalArgumentException(
-            s"NULL $partitionCol in the merge source — a null partition " +
-              "value has no directory; filter or bucket it explicitly")))
-      // data-driven rels must be path- and manifest-safe BEFORE any write
-      touched.foreach(requireValidPartValue(partitionCol, _))
-      val writes = touched.sorted.toSeq.map { v =>
-        val rel = s"$partitionCol=$v"
-        val delta = source.filter(col(partitionCol) === v)
-        // read under the SNAPSHOT schema: an evolved column null-fills
-        // in old files, so the union with the delta stays aligned
-        val current =
-          if (man.mapping.contains(rel)) readPart(spark, man, root, rel)
-          else delta.limit(0)
-        rel -> mergeUpsert(current, delta, keys)
-      }
-      commitSnapshot(spark, root, writes, expectedSnapshot = Some(baseId),
-        branch = branch)
-    } finally if (pinSource) source.unpersist(blocking = false)
-  }
+                    branch: String = MainBranch): Int =
+    rewriteTouched(spark, root, source, partitionCol, branch) {
+      (current, delta) =>
+        mergeUpsert(current.getOrElse(delta.limit(0)), delta, keys)
+    }
 
   /** CDC batch applied to a snapshot lake, partition-pruned and atomic
     * — [[applyCdc]]'s I/U/D semantics per TOUCHED partition under one
@@ -1999,41 +1963,61 @@ object Lakehouse {
   def applyCdcSnapshot(spark: org.apache.spark.sql.SparkSession,
                        root: String, changes: DataFrame, keys: Seq[String],
                        partitionCol: String, opCol: String = "op",
-                       branch: String = MainBranch): Int = {
-    require(changes.columns.contains(partitionCol),
-      s"changes must carry '$partitionCol' as a data column")
+                       branch: String = MainBranch): Int =
+    rewriteTouched(spark, root, changes, partitionCol, branch) {
+      (current, delta) =>
+        applyCdc(current.getOrElse(delta.drop(opCol).limit(0)), delta,
+          keys, opCol)
+    }
+
+  /** The touched-partition rewrite [[mergeSnapshot]] and
+    * [[applyCdcSnapshot]] share: every partition value `delta` carries is
+    * rewritten as `rewrite(current, its delta rows)` (`current` is None
+    * for a brand-new partition) and all of them commit in one snapshot
+    * pinned to the base they read. An empty delta (streaming triggers
+    * fire on empty sources) is a committed no-op: the base snapshot
+    * already IS the result. */
+  private def rewriteTouched(spark: org.apache.spark.sql.SparkSession,
+                             root: String, delta: DataFrame,
+                             partitionCol: String, branch: String)
+                            (rewrite: (Option[DataFrame], DataFrame) => DataFrame)
+  : Int = {
+    require(delta.columns.contains(partitionCol),
+      s"the delta must carry '$partitionCol' as a data column")
     val baseId = currentSnapshotId(spark, root, branch).getOrElse(
       throw new IllegalStateException(s"$root has no committed snapshot"))
     val man = manifestAt(spark, root, Some(baseId), branch)
-    // same delta-pinning as mergeSnapshot: one evaluation of the change
-    // batch, k cache reads — not k re-runs of the upstream plan
-    val pinChanges = changes.storageLevel ==
-      org.apache.spark.storage.StorageLevel.NONE
-    if (pinChanges)
-      changes.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // pin the delta ONCE before the per-partition fan-out: the k touched
+    // partitions each filter the SAME materialized blocks instead of
+    // re-running the (possibly computed — a join/aggregate output, the
+    // normal CDC shape) delta plan k times. Without this the docstring's
+    // O(changed partitions) cost claim multiplies the upstream plan by k.
+    // A delta the caller already persisted is respected as-is.
+    val pin = delta.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+    if (pin) delta.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val touched = changes.select(col(partitionCol)).distinct()
+      // the collect is bounded by the number of TOUCHED PARTITIONS (never
+      // rows) — the same driver-bounded shape as every partition manifest;
+      // it is also the action that materializes the pinned delta
+      val touched = delta.select(col(partitionCol)).distinct()
         .collect().map(x => Option(x.get(0)).map(_.toString).getOrElse(
           throw new IllegalArgumentException(
-            s"NULL $partitionCol in the change batch — a null partition " +
-              "value has no directory; filter or bucket it explicitly")))
-      // an empty batch (streaming triggers fire on empty sources) is a
-      // committed no-op: the current snapshot already IS the result
-      if (touched.isEmpty)
-        return currentSnapshotId(spark, root, branch).getOrElse(
-          throw new IllegalStateException(s"$root has no committed snapshot"))
+            s"NULL $partitionCol in the delta — a null partition value " +
+              "has no directory; filter or bucket it explicitly")))
+      if (touched.isEmpty) return baseId
+      // data-driven rels must be path- and manifest-safe BEFORE any write
       touched.foreach(requireValidPartValue(partitionCol, _))
       val writes = touched.sorted.toSeq.map { v =>
         val rel = s"$partitionCol=$v"
-        val delta = changes.filter(col(partitionCol) === v)
-        val current =
-          if (man.mapping.contains(rel)) readPart(spark, man, root, rel)
-          else delta.drop(opCol).limit(0)
-        rel -> applyCdc(current, delta, keys, opCol)
+        // read under the SNAPSHOT schema: an evolved column null-fills
+        // in old files, so the union with the delta stays aligned
+        val current = Option.when(man.mapping.contains(rel))(
+          readPart(spark, man, root, rel))
+        rel -> rewrite(current, delta.filter(col(partitionCol) === v))
       }
       commitSnapshot(spark, root, writes, expectedSnapshot = Some(baseId),
         branch = branch)
-    } finally if (pinChanges) changes.unpersist(blocking = false)
+    } finally if (pin) delta.unpersist(blocking = false)
   }
 
   /** Determinism is only knowable AFTER analysis (an unresolved

@@ -6,8 +6,8 @@ package graft.sources
   * sources. The zero-egress container has no live endpoint/Mongo/Neo4j to
   * answer them, so — like [[DocStoreTranslators]] — the emitted query text
   * IS the wrapper logic and the specs assert it; when a store is reachable
-  * the text goes through the injected transport ([[PagedEndpointSource]]'s
-  * seam) and the answers feed `Molecule` construction.
+  * the text goes through a transport ([[SparqlHttp]] for SPARQL
+  * endpoints) and the answers feed `Molecule` construction.
   *
   * SPARQL discovery follows the reference's exact protocol:
   *   - typed concepts + English labels (`get_typed_concepts`, `:127-131`)

@@ -9,10 +9,11 @@ import graft.mapping._
   * 243-343`) re-expressed over the molecule catalog. The zero-egress bench
   * container has no Mongo/Neo4j to connect to, so the translators emit the
   * native queries (an aggregation pipeline / a Cypher statement) and the
-  * specs assert them; transport is the same injected seam as
-  * [[PagedEndpointSource]]. When a store IS reachable, the emitted pipeline
-  * goes to the connector and rows come back through the normal
-  * `load(table)` path — translation, not execution, is the wrapper's logic.
+  * specs assert them; transport is a connector's concern, as
+  * [[SparqlHttp]] is for SPARQL endpoints. When a store IS reachable, the
+  * emitted pipeline goes to the connector and rows come back through the
+  * normal `load(table)` path — translation, not execution, is the
+  * wrapper's logic.
   */
 object DocStoreTranslators {
 

@@ -86,77 +86,28 @@ final case class JdbcSource(url: String, table: String,
   }
 }
 
-/** Remote-endpoint-style paged source — the RDFStore SPARQL-endpoint
-  * wrapper's fetch protocol (`/root/reference/ontario/wrappers/triplestore/
-  * __init__.py:52-119` contactSourceAux: LIMIT/OFFSET pages until a short
-  * page signals exhaustion). `fetchPage(offset, limit)` abstracts the
-  * transport (HTTP + application/sparql-results+json in the reference;
-  * unavailable in this zero-egress environment, injected in tests).
-  *
-  * Unlike the reference — which accumulates every page in client memory
-  * before processing — the fetch is distributed: the driver sizes the
-  * result with O(log N) single-row probes (`LIMIT 1 OFFSET k`, galloping +
-  * binary search — protocol-legal against any LIMIT/OFFSET endpoint), then
-  * each partition pulls exactly one page at compute time, executor-side.
-  * Driver memory is bounded by one probe row; a large endpoint result never
-  * transits the driver at all. `fetchPage` must therefore be serializable
-  * (a transport handle should be constructed inside the closure, not
-  * captured). Pages are assumed stable across the probe/fetch window — the
-  * same snapshot assumption the reference's sequential paging makes. */
-final case class PagedEndpointSource(
-    schema: org.apache.spark.sql.types.StructType,
-    fetchPage: (Long, Int) => Seq[org.apache.spark.sql.Row],
-    pageSize: Int = 10000,
-    /** Result size HINT from the caller — an RDF-MT cardinality probed at
-      * catalog time ([[graft.mapping.EndpointCatalogGen]]) — skips the
-      * sizing probes. It sizes the page PLAN only, never truncates: a
-      * probed concept cardinality counts subjects, while the fetch query
-      * can return more solution rows than subjects (one per subject-value
-      * combination under a multi-valued predicate), so the tail partition
-      * keeps paging past the planned end until a short page proves
-      * exhaustion — the same stop condition the reference's sequential
-      * paging uses (`triplestore/__init__.py:52-119`). */
-    knownTotal: Option[Long] = None) extends SourceSpec {
-  def load(spark: SparkSession): DataFrame = {
-    def exists(off: Long): Boolean = fetchPage(off, 1).nonEmpty
-    val totalRows = knownTotal.getOrElse {
-      if (!exists(0L)) 0L
-      else {
-        var hi = 1L
-        while (exists(hi)) hi *= 2 // gallop: first absent offset is in (hi/2, hi]
-        var lo = hi / 2            // exists(lo) holds
-        while (lo + 1 < hi) {
-          val mid = lo + (hi - lo) / 2
-          if (exists(mid)) lo = mid else hi = mid
-        }
-        hi // offsets 0..hi-1 exist
-      }
-    }
-    if (totalRows == 0L && knownTotal.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    val nPages = math.max(1L, (totalRows + pageSize - 1) / pageSize).toInt
-    val (fp, ps) = (fetchPage, pageSize)
-    val tailed = knownTotal.isDefined // hint may undercount: tail-probe
-    val rdd = spark.sparkContext.parallelize(0 until nPages, nPages)
-      .flatMap { p =>
-        if (p < nPages - 1 || !tailed) fp(p.toLong * ps, ps)
-        else {
-          // tail partition: page until a short page, not until the hint
-          val buf = scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row]()
-          var off = p.toLong * ps
-          var n = ps
-          while (n == ps) {
-            val page = fp(off, ps)
-            buf ++= page
-            n = page.size
-            off += ps
-          }
-          buf
-        }
-      }
-    spark.createDataFrame(rdd, schema)
-  }
+/** A remote SPARQL endpoint as a table — the reference's SPARQL_Endpoint
+  * datasource type (`config/__init__.py` + `wrappers/triplestore`):
+  * `query` defines the table's rows and `schema` types its variable
+  * bindings. The query is parsed once, here, and ships through
+  * [[graft.compiler.QueryShip.ship]], so it pages through the same remote
+  * scan as every other endpoint read (one COUNT, then LIMIT/OFFSET pages
+  * of a totally ordered wrapper); [[graft.compiler.SparqlText]] renders
+  * full IRIs, so no PREFIX line lands inside the wrapper's sub-select. A
+  * query that does not parse or cannot ship fails here, at config load. */
+final case class EndpointQuerySource(endpoint: String, query: String,
+                                     schema: org.apache.spark.sql.types.StructType,
+                                     pageSize: Int = 10000) extends SourceSpec {
+  private val cfg = graft.compiler.QueryShip.Config(endpoint, pageSize)
+  private val parsed = graft.parser.SparqlParser.parse(query).fold(
+    e => throw new IllegalArgumentException(
+      s"endpoint table query does not parse ($e): ${query.take(200)}"),
+    identity)
+  require(graft.compiler.QueryShip.shippable(parsed, cfg),
+    s"endpoint table query cannot ship to $endpoint (SELECT/ASK without " +
+      s"SERVICE, ordered on projected vars): ${query.take(200)}")
+  def load(spark: SparkSession): DataFrame =
+    graft.compiler.QueryShip.ship(parsed, cfg, schema)(spark)
 }
 
 object Sources {

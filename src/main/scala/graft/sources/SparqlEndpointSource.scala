@@ -3,14 +3,11 @@ package graft.sources
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import java.util
-import scala.jdk.CollectionConverters._
 
 /** DataSource V2 connector for a SPARQL-endpoint-backed concept table —
   * the scan side of the reference's triple-store wrapper
@@ -31,14 +28,15 @@ import scala.jdk.CollectionConverters._
   *    pushdown is a transfer optimization, never a correctness bet on a
   *    remote engine's filter semantics.
   *
-  * Paging follows the probed-cardinality plan of [[PagedEndpointSource]]:
-  * `cardinality` sizes the page plan, each page is an independent
-  * LIMIT/OFFSET query pulled executor-side (nothing transits the driver),
-  * the tail partition pages until a short page proves exhaustion. When
-  * filters are pushed the cardinality hint no longer bounds the result, so
-  * the plan is sized by one remote `COUNT(*)` over the exact filtered
-  * solution set instead. Usage (what [[graft.mapping.EndpointCatalogGen]]
-  * binds for every probed concept):
+  * The built scan is the shared remote read ([[SparqlQueryScan]] in
+  * `paged` mode): each page is an independent LIMIT/OFFSET query pulled
+  * executor-side (nothing transits the driver), the tail range pages
+  * until a short page proves exhaustion. The probed `cardinality` is the
+  * scan's size hint — zero planning queries — while no filter applies;
+  * a pushed or runtime filter invalidates it, and one remote `COUNT(*)`
+  * over the exact filtered solution set sizes the plan instead. Usage
+  * (what [[graft.mapping.EndpointCatalogGen]] binds for every probed
+  * concept):
   *
   * {{{
   * spark.read.format("graft.sources.SparqlEndpointSource")
@@ -142,30 +140,32 @@ object SparqlEndpointSource {
     }
   }
 
-  /** The remote query for a pruned/filtered scan: subject pattern + one
-    * OPTIONAL per surviving predicate column + translated FILTERs, totally
-    * ordered over the projected vars for stable LIMIT/OFFSET paging
-    * (duplicate solutions are interchangeable across a page boundary, so
-    * ordering by every projected var suffices). A column referenced only
-    * by a pushed filter keeps its pattern clause (a FILTER over a var with
-    * no pattern would error every row) without joining the projection. */
+  /** The remote query for a pruned/filtered scan as (sel, body, order)
+    * parts: subject pattern + one OPTIONAL per surviving predicate column
+    * + translated FILTERs, totally ordered over the projected vars for
+    * stable LIMIT/OFFSET paging (duplicate solutions are interchangeable
+    * across a page boundary, so ordering by every projected var
+    * suffices). A column referenced only by a pushed filter keeps its
+    * pattern clause (a FILTER over a var with no pattern would error
+    * every row) without joining the projection. */
   private[graft] def buildQuery(tpe: String, cols: List[(String, String)],
                                   required: Seq[String],
                                   filters: Seq[String],
-                                  filterCols: Set[String] = Set.empty): String = {
-    val vars = if (required.isEmpty) Seq("s") else required
+                                  filterCols: Set[String])
+  : (String, String, String) = {
+    val vars = (if (required.isEmpty) Seq("s") else required)
+      .map("?" + _).mkString(" ")
     val kept = cols.filter { case (_, c) =>
       required.contains(c) || filterCols.contains(c)
     }
     // injection guard: tpe/preds are catalog-probed IRIs — data from the
     // endpoint spliced back into query text; a crafted 'IRI' carrying
     // '>' or whitespace must fail loudly, never reach the wire
-    s"SELECT ${vars.map("?" + _).mkString(" ")} WHERE { ?s a " +
-      s"${SparqlHttp.angled(tpe)} . " +
+    val body = s"?s a ${SparqlHttp.angled(tpe)} ." +
       kept.map { case (p, c) =>
-        s"OPTIONAL { ?s ${SparqlHttp.angled(p)} ?$c } " }.mkString +
-      filters.map(f => s"FILTER ($f) ").mkString +
-      s"} ORDER BY ${vars.map("?" + _).mkString(" ")}"
+        s" OPTIONAL { ?s ${SparqlHttp.angled(p)} ?$c }" }.mkString +
+      filters.map(f => s" FILTER ($f)").mkString
+    (vars, body, vars)
   }
 }
 
@@ -220,120 +220,14 @@ private[sources] class SparqlScanBuilder(
 
   override def pushedFilters(): Array[Filter] = pushed
 
-  override def build(): Scan =
-    new SparqlScan(endpoint, tpe, cols, required, sparqlFilters, filterCols,
-      pageSize, cardinality, maxPartitions, types)
-}
-
-private[sources] class SparqlScan(
-    endpoint: String, tpe: String, cols: List[(String, String)],
-    required: StructType, filters: Seq[String], filterCols: Set[String],
-    pageSize: Int, cardinality: Option[Long],
-    maxPartitions: Int = 32,
-    types: Map[String, DataType] = Map.empty)
-  extends Scan with Batch
-    with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering
-    with Serializable {
-
-  /** Bound-join cap: a runtime IN wider than this stops reducing transfer
-    * and starts bloating the remote query — beyond it, keep the full scan
-    * (the shuffled join is the right plan, as the reference's
-    * NestedHashJoinFilter maxKeys guard also concludes). Shared with the
-    * route model so the cost estimate and the runtime never disagree
-    * about when a bound join applies. */
-  private val MaxBoundKeys = graft.compiler.RoutePlanner.BindKeyCap
-
-  // Runtime bound join (FedX §5.3; the reference's NestedHashJoinFilter
-  // ships disjunctive key filters to its wrappers): Spark's dynamic
-  // pruning hands the BUILD side's join-key values to the scan at runtime
-  // as In()/EqualTo() — translated, they become a remote FILTER, so only
-  // matching rows ever transit the wire. Advisory by contract: the join
-  // above re-checks, an untranslatable filter just keeps the full scan.
-  @volatile private var runtimeFilters: Seq[String] = Nil
-  @volatile private var runtimeFilterCols: Set[String] = Set.empty
-
-  override def filterAttributes(): Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    required.fieldNames.map(org.apache.spark.sql.connector.expressions.Expressions.column)
-
-  override def filter(fs: Array[Filter]): Unit = {
-    val ok = fs.toSeq.filter {
-      case In(_, vs) => vs.length <= MaxBoundKeys
-      case _         => true
-    }
-    val translated = ok.map(f => f -> SparqlEndpointSource.toSparql(f, types))
-    runtimeFilters = translated.flatMap(_._2)
-    runtimeFilterCols = translated.collect { case (f, Some(_)) => f }
-      .flatMap(_.references).toSet
+  override def build(): Scan = {
+    val (sel, body, order) = SparqlEndpointSource.buildQuery(tpe, cols,
+      required.fieldNames.toSeq, sparqlFilters, filterCols)
+    val f = if (sparqlFilters.isEmpty) ""
+            else s", pushed: [${sparqlFilters.mkString(" && ")}]"
+    new SparqlQueryScan(endpoint, None, Some(sel), Some(body), Some(order),
+      "paged", required, pageSize, maxPartitions,
+      label = s"sparql:$tpe@$endpoint cols=[${required.fieldNames.mkString(",")}]$f",
+      sizeHint = cardinality.filter(_ => sparqlFilters.isEmpty))
   }
-
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String = {
-    val f = if (filters.isEmpty) "" else s", pushed: [${filters.mkString(" && ")}]"
-    s"sparql:$tpe@$endpoint cols=[${required.fieldNames.mkString(",")}]$f"
-  }
-
-  private def allFilters: Seq[String] = filters ++ runtimeFilters
-
-  private def baseQuery: String = SparqlEndpointSource.buildQuery(
-    tpe, cols, required.fieldNames.toSeq, allFilters,
-    filterCols ++ runtimeFilterCols)
-
-  // one sizing COUNT per Scan INSTANCE, not per physical-plan copy (AQE
-  // re-instantiates BatchScanExec around the same Scan and asks again);
-  // keyed by the runtime-filter state — SupportsRuntimeFiltering.filter
-  // arrives AFTER planning copies may already have sized the unfiltered
-  // scan
-  @volatile private var cachedPartitions: Array[InputPartition] = null
-  @volatile private var cachedFor: Seq[String] = null
-
-  override def planInputPartitions(): Array[InputPartition] = synchronized {
-    if (cachedPartitions == null || cachedFor != allFilters) {
-      cachedPartitions = computePartitions()
-      cachedFor = allFilters
-    }
-    cachedPartitions
-  }
-
-  private def computePartitions(): Array[InputPartition] = {
-    // unfiltered scans ride the probed cardinality (zero planning
-    // queries; the hint may undercount solution rows under multi-valued
-    // predicates, which the tail partition's keep-paging covers). A
-    // pushed filter invalidates the hint, so the plan is sized by one
-    // exact COUNT over the same solution set instead.
-    val total: Long =
-      if (allFilters.isEmpty && cardinality.isDefined) cardinality.get
-      else {
-        val cSchema = StructType(Seq(StructField("count", LongType)))
-        val kept = cols.filter { case (_, c) =>
-          required.fieldNames.contains(c) || filterCols.contains(c) ||
-            runtimeFilterCols.contains(c) }
-        val countQ = "SELECT (COUNT(*) AS ?count) WHERE { ?s a " +
-          s"${SparqlHttp.angled(tpe)} . " +
-          kept.map { case (p, c) =>
-            s"OPTIONAL { ?s ${SparqlHttp.angled(p)} ?$c } " }.mkString +
-          allFilters.map(f => s"FILTER ($f) ").mkString + "}"
-        SparqlHttp.select(endpoint, countQ, cSchema)
-          .headOption.map(_.getLong(0)).getOrElse(0L)
-      }
-    // pages group into at most maxPartitions contiguous ranges, each
-    // walked sequentially ([[SparqlPageRange]]): the cap bounds how many
-    // concurrent requests one scan holds against the endpoint — the tail
-    // range stays open-ended, so a hint undercount (multi-valued
-    // predicates) still pages until a short page proves exhaustion
-    val nPages = math.max(1L, (total + pageSize - 1) / pageSize)
-    val nParts = math.min(nPages, math.max(1, maxPartitions)).toInt
-    val pagesPer = (nPages + nParts - 1) / nParts
-    (0 until nParts).map { i =>
-      val start = i * pagesPer * pageSize
-      val end = if (i == nParts - 1) -1L else (i + 1) * pagesPer * pageSize
-      SparqlPageRange(start, end): InputPartition
-    }.toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    // query text resolves at READER creation: the factory may be built
-    // before SupportsRuntimeFiltering.filter() delivers the bound-join
-    // keys, and task serialization captures this scan's state afterwards
-    new PageRangeReaderFactory(endpoint, () => baseQuery, required, pageSize)
 }

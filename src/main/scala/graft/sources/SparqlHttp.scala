@@ -14,13 +14,12 @@ import java.nio.charset.StandardCharsets.UTF_8
   * form-encoded POST of the query, `Accept: application/sparql-results+json`,
   * and LIMIT/OFFSET appended per page until a short page signals exhaustion.
   *
-  * Used as the fetch function of [[PagedEndpointSource]]: the returned
-  * closures capture only strings + the schema, and construct the
-  * `java.net.http.HttpClient` per call — so they ship to executors and each
-  * partition pulls its own page directly from the endpoint, nothing transits
-  * the driver. Values come back as lexical forms and are cast to the
-  * declared schema column types (the reference instead carries every value
-  * as a string and re-parses downstream).
+  * Used by the remote scan ([[SparqlQueryScan]]) on the executors: each
+  * call constructs its own `java.net.http.HttpClient`, so each partition
+  * pulls its own pages directly from the endpoint and nothing transits the
+  * driver. Values come back as lexical forms and are cast to the declared
+  * schema column types (the reference instead carries every value as a
+  * string and re-parses downstream).
   *
   * Paging is only deterministic when the query carries a total ORDER BY —
   * the same endpoint-snapshot assumption the reference's sequential paging
@@ -81,18 +80,6 @@ object SparqlHttp {
     require(b.isBoolean, s"not an ASK result document: ${resp.body().take(200)}")
     b.asBoolean()
   }
-
-  /** A [[PagedEndpointSource]] over this transport: LIMIT/OFFSET pages of
-    * `query` (which should end in a total ORDER BY for stable pagination).
-    * `knownTotal` (e.g. a probed RDF-MT cardinality) skips the gallop
-    * sizing probes entirely. */
-  def pagedSource(endpoint: String, query: String, schema: StructType,
-                  pageSize: Int = 10000,
-                  knownTotal: Option[Long] = None): PagedEndpointSource =
-    PagedEndpointSource(
-      schema,
-      (offset, limit) => select(endpoint, s"$query LIMIT $limit OFFSET $offset", schema),
-      pageSize, knownTotal)
 
   /** Term-metadata sniff: POST the query and return every binding of
     * `varName` as (term kind, datatype IRI) straight from the SRJ document

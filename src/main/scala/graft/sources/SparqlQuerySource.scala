@@ -12,13 +12,15 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import java.util
 
-/** DataSource V2 scan for a COMPLETE query shipped to a SPARQL endpoint —
-  * the execution side of [[graft.compiler.QueryShip]] (single-endpoint
-  * whole-query dispatch and exclusive-group dispatch, the coarse-grained
-  * forms of the reference's per-star wrapper queries,
-  * `ontario/wrappers/triplestore/__init__.py:125-186`). Three modes, all
-  * lazy (no HTTP until an action) and all executor-side (result rows never
-  * transit the driver):
+/** DataSource V2 scan for a query sent to a SPARQL endpoint — the one
+  * remote read path: whole-query and exclusive-group dispatch
+  * ([[graft.compiler.QueryShip]], the coarse-grained forms of the
+  * reference's per-star wrapper queries,
+  * `ontario/wrappers/triplestore/__init__.py:125-186`), SERVICE full
+  * fetches, config `"endpoint"` tables and the per-concept scans of
+  * [[SparqlEndpointSource]] all read through [[SparqlQueryScan]]. Three
+  * modes, all lazy (no HTTP until an action) and all executor-side
+  * (result rows never transit the driver):
   *
   *  - `paged`: the query ships as (sel, body, order) PARTS — assembled as
   *    `SELECT sel WHERE { body } ORDER BY order` — so runtime bound-join
@@ -26,11 +28,12 @@ import java.util
   *    inject into the pattern: when a selective broadcast build joins this
   *    scan, the build's join-key values arrive as a SPARQL IN and only
   *    matching rows transit. The page plan is sized by one remote COUNT
-  *    over the same (filtered) body. Pages group into at most
-  *    `maxPartitions` contiguous RANGES, each walked sequentially, the
-  *    last open-ended until a short page proves exhaustion
-  *    (`triplestore/__init__.py:52-119` parity) — the cap bounds the
-  *    concurrent requests one scan holds against the endpoint.
+  *    over the same (filtered) body, or by a caller's size hint while no
+  *    filter applies. Pages group into at most `maxPartitions` contiguous
+  *    RANGES, each walked sequentially, the last open-ended until a short
+  *    page proves exhaustion (`triplestore/__init__.py:52-119` parity) —
+  *    the cap bounds the concurrent requests one scan holds against the
+  *    endpoint.
   *  - `single`: the query carries its own LIMIT — one verbatim fetch in one
   *    partition, preserving the query's requested order.
   *  - `ask`: one W3C boolean-document fetch → a 1-row boolean frame.
@@ -58,17 +61,20 @@ private[sources] class SparqlQueryTable(
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
 
-  override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder =
-    () => new SparqlQueryScan(
-      options.get("endpoint"),
-      Option(options.get("query")),
-      Option(options.get("sel")),
-      Option(options.get("body")),
-      Option(options.get("order")),
-      options.get("mode"),
-      tableSchema,
+  override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder = {
+    val endpoint = options.get("endpoint")
+    val mode = options.get("mode")
+    val verbatim = Option(options.get("query"))
+    val sel = Option(options.get("sel"))
+    val body = Option(options.get("body"))
+    val q = verbatim.getOrElse(
+      s"SELECT ${sel.getOrElse("")} WHERE { ${body.getOrElse("")} }")
+    () => new SparqlQueryScan(endpoint, verbatim, sel, body,
+      Option(options.get("order")), mode, tableSchema,
       Option(options.get("pageSize")).map(_.toInt).getOrElse(10000),
-      Option(options.get("maxPartitions")).map(_.toInt).getOrElse(32))
+      Option(options.get("maxPartitions")).map(_.toInt).getOrElse(32),
+      label = s"sparql-query@$endpoint mode=$mode [${q.take(500)}]")
+  }
 }
 
 /** One contiguous page range: offsets `[startOffset, endOffset)` in steps
@@ -77,22 +83,38 @@ private[sources] class SparqlQueryTable(
 private[sources] final case class SparqlPageRange(
     startOffset: Long, endOffset: Long) extends InputPartition
 
+/** `sizeHint` (a concept's probed cardinality) sizes the page plan while
+  * no runtime filter applies — zero planning queries. It plans, never
+  * truncates: a subject count can undercount the solution rows under a
+  * multi-valued predicate, and the open-ended tail range pages past it.
+  * `label` is the plan description. */
 private[sources] class SparqlQueryScan(
     endpoint: String, verbatim: Option[String],
     sel: Option[String], body: Option[String], order: Option[String],
-    mode: String, schema: StructType, pageSize: Int, maxPartitions: Int)
+    mode: String, schema: StructType, pageSize: Int, maxPartitions: Int,
+    label: String, sizeHint: Option[Long] = None)
   extends Scan with Batch
     with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering
     with Serializable {
 
-  /** Bound-join cap, as on the concept scans: wider INs stop reducing
-    * transfer — keep the full scan, the join above re-checks. Shared
-    * with the route model (one source of truth). */
+  /** Bound-join cap: a runtime IN wider than this stops reducing transfer
+    * and starts bloating the remote query — beyond it, keep the full scan
+    * (the shuffled join is the right plan, as the reference's
+    * NestedHashJoinFilter maxKeys guard also concludes). Shared with the
+    * route model so the cost estimate and the runtime never disagree
+    * about when a bound join applies. */
   private val MaxBoundKeys = graft.compiler.RoutePlanner.BindKeyCap
 
   private val types: Map[String, DataType] =
     schema.fields.map(f => f.name -> f.dataType).toMap
 
+  // Runtime bound join (FedX §5.3; the reference's NestedHashJoinFilter
+  // ships disjunctive key filters to its wrappers): Spark's dynamic
+  // pruning hands the BUILD side's join-key values to the scan at runtime
+  // as In()/EqualTo() — translated, they become a remote FILTER over the
+  // scan's own columns, which the body already binds. Advisory by
+  // contract: the join above re-checks, an untranslatable filter just
+  // keeps the full scan.
   @volatile private var runtimeFilters: Seq[String] = Nil
 
   override def filterAttributes(): Array[org.apache.spark.sql.connector.expressions.NamedReference] =
@@ -120,10 +142,7 @@ private[sources] class SparqlQueryScan(
 
   override def readSchema(): StructType = schema
   override def toBatch: Batch = this
-  override def description(): String = {
-    val q = verbatim.getOrElse(s"SELECT ${sel.getOrElse("")} WHERE { ${body.getOrElse("")} }")
-    s"sparql-query@$endpoint mode=$mode [${q.take(500)}]"
-  }
+  override def description(): String = label
 
   // one sizing COUNT per Scan INSTANCE and runtime-filter STATE — AQE
   // re-instantiates BatchScanExec around the same Scan (each copy asks
@@ -144,9 +163,11 @@ private[sources] class SparqlQueryScan(
     case "single" | "ask" =>
       Array(SparqlPageRange(0L, -1L))
     case "paged" =>
-      val cSchema = StructType(Seq(StructField("count", LongType)))
-      val total = SparqlHttp.select(endpoint, countQuery, cSchema)
-        .headOption.map(_.getLong(0)).getOrElse(0L)
+      val total = sizeHint.filter(_ => runtimeFilters.isEmpty).getOrElse {
+        val cSchema = StructType(Seq(StructField("count", LongType)))
+        SparqlHttp.select(endpoint, countQuery, cSchema)
+          .headOption.map(_.getLong(0)).getOrElse(0L)
+      }
       val nPages = math.max(1L, (total + pageSize - 1) / pageSize)
       val nParts = math.min(nPages, math.max(1, maxPartitions)).toInt
       val pagesPer = (nPages + nParts - 1) / nParts
@@ -177,9 +198,6 @@ private[sources] class PageRangeReaderFactory(
     endpoint: String, queryThunk: () => String, schema: StructType,
     pageSize: Int)
   extends PartitionReaderFactory {
-
-  def this(endpoint: String, query: String, schema: StructType,
-           pageSize: Int) = this(endpoint, () => query, schema, pageSize)
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[SparqlPageRange]

@@ -6,7 +6,6 @@ import graft.algebra._
 import graft.api.{Graft, GraftServer, TpchCatalog}
 import graft.decomposer.{Decomposer, ProvablyEmptyException}
 import graft.mapping._
-import graft.sources.SparqlHttp
 
 /** Round-14: inter-concept link metadata wired into join-link pruning
   * (the r13 verdict's top ask), endpoint paging made robust to
@@ -241,8 +240,11 @@ class Round14Spec extends SparkTestBase {
   /** Minimal SPARQL endpoint whose one concept fans out: 3 subjects with
     * 2, 3 and 2 values — 7 solution rows against a subject-count of 3. A
     * GraftServer over tabular molecules can't produce this shape, so the
-    * fixture serves SRJ documents directly, honouring LIMIT/OFFSET. */
-  private def fanOutServer(): (com.sun.net.httpserver.HttpServer, Int) = {
+    * fixture serves SRJ documents directly, honouring LIMIT/OFFSET, and
+    * records every query text it receives. */
+  private def fanOutServer()
+  : (com.sun.net.httpserver.HttpServer, Int, java.util.Queue[String]) = {
+    val received = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val rows = Seq(
       ("urn:t:s1", "a"), ("urn:t:s1", "b"),
       ("urn:t:s2", "c"), ("urn:t:s2", "d"), ("urn:t:s2", "e"),
@@ -254,6 +256,7 @@ class Round14Spec extends SparkTestBase {
         java.nio.charset.StandardCharsets.UTF_8)
       val q = java.net.URLDecoder.decode(
         body.split("&").find(_.startsWith("query=")).get.drop(6), "UTF-8")
+      received.add(q)
       val lim = "LIMIT (\\d+)".r.findFirstMatchIn(q).map(_.group(1).toInt)
         .getOrElse(rows.size)
       val off = "OFFSET (\\d+)".r.findFirstMatchIn(q).map(_.group(1).toInt)
@@ -269,32 +272,58 @@ class Round14Spec extends SparkTestBase {
       ex.getResponseBody.write(doc); ex.close()
     })
     srv.start()
-    (srv, srv.getAddress.getPort)
+    (srv, srv.getAddress.getPort, received)
   }
 
-  test("knownTotal is a plan hint: the tail partition pages past it") {
-    val (srv, port) = fanOutServer()
+  /** A concept scan over `port`, as [[EndpointCatalogGen]] binds one. */
+  private def conceptScan(port: Int, tpe: String,
+                          cols: List[(String, String)], pageSize: Int,
+                          cardinality: Long) =
+    spark.read.format("graft.sources.SparqlEndpointSource")
+      .schema(StructType(("s" :: cols.map(_._2)).map(
+        StructField(_, StringType))))
+      .option("endpoint", s"http://127.0.0.1:$port/sparql")
+      .option("type", tpe)
+      .option("cols", graft.sources.SparqlEndpointSource.encodeCols(cols))
+      .option("pageSize", pageSize.toString)
+      .option("cardinality", cardinality.toString)
+      .load()
+
+  test("the concept scan's cardinality is a plan hint: the tail range pages past it") {
+    val (srv, port, received) = fanOutServer()
     try {
-      val schema = StructType(Seq(StructField("s", StringType),
-        StructField("v", StringType)))
       // probed subject-cardinality 3, page size 2: a truncating reader
-      // would stop at 4 rows; the tail partition must keep paging to 7
-      val df = SparqlHttp.pagedSource(s"http://127.0.0.1:$port/sparql",
-        "SELECT ?s ?v WHERE { ?s <urn:t:p> ?v } ORDER BY ?s ?v", schema,
-        pageSize = 2, knownTotal = Some(3L)).load(spark)
+      // would stop at 4 rows; the tail range must keep paging to 7
+      val df = conceptScan(port, "urn:t:T", List("urn:t:p" -> "v"),
+        pageSize = 2, cardinality = 3L)
       val got = df.collect().map(r => (r.getString(0), r.getString(1))).sorted
       assert(got.length == 7, s"expected all 7 fan-out rows, got ${got.length}")
       assert(got.distinct.length == 7, "no page-boundary duplicates")
+      // the hint replaced the sizing COUNT: pages only
+      import scala.jdk.CollectionConverters._
+      assert(received.asScala.forall(_.contains(" LIMIT 2 OFFSET ")),
+        s"an unfiltered hinted scan sends pages only:\n${received.asScala.mkString("\n")}")
     } finally srv.stop(0)
   }
 
   test("per-concept fetch orders by subject AND every fetched variable") {
-    val q = EndpointCatalogGen.fetchQuery("urn:g:Nation",
-      List("urn:g:name" -> "name", "urn:g:region" -> "region"))
-    assert(q.endsWith("ORDER BY ?s ?name ?region"),
-      s"pagination sort key must be total:\n$q")
-    // no predicates: still subject-ordered, no trailing garbage
-    assert(EndpointCatalogGen.fetchQuery("urn:g:T", Nil).endsWith("ORDER BY ?s"))
+    val (srv, port, received) = fanOutServer()
+    try {
+      import scala.jdk.CollectionConverters._
+      def sent(cols: List[(String, String)]): Seq[String] = {
+        received.clear()
+        conceptScan(port, "urn:g:Nation", cols, pageSize = 10,
+          cardinality = 3L).collect()
+        received.asScala.toSeq
+      }
+      val pages = sent(List("urn:g:name" -> "name", "urn:g:region" -> "region"))
+      assert(pages.nonEmpty && pages.forall(q =>
+        q.startsWith("SELECT ?s ?name ?region WHERE { ?s a <urn:g:Nation> .") &&
+          q.endsWith("ORDER BY ?s ?name ?region LIMIT 10 OFFSET 0")),
+        s"pagination sort key must be total:\n${pages.mkString("\n")}")
+      // no predicates: still subject-ordered, no trailing garbage
+      assert(sent(Nil).forall(_.endsWith("} ORDER BY ?s LIMIT 10 OFFSET 0")))
+    } finally srv.stop(0)
   }
 
   // ---- DSv2 endpoint scan: pruning + filter pushdown ------------------------
@@ -322,18 +351,18 @@ class Round14Spec extends SparkTestBase {
   }
 
   test("buildQuery keeps filter-only columns in the pattern, out of the projection") {
-    val q = graft.sources.SparqlEndpointSource.buildQuery(
+    val (sel, body, order) = graft.sources.SparqlEndpointSource.buildQuery(
       "urn:g:Customer",
       List("urn:g:name" -> "name", "urn:g:mktsegment" -> "mktsegment",
         "urn:g:acctbal" -> "acctbal"),
       required = Seq("s", "name"),
       filters = Seq("STR(?mktsegment) = \"BUILDING\""),
       filterCols = Set("mktsegment"))
-    assert(q.startsWith("SELECT ?s ?name WHERE"))
-    assert(q.contains("OPTIONAL { ?s <urn:g:mktsegment> ?mktsegment }"))
-    assert(!q.contains("acctbal"), s"unused predicate must be pruned:\n$q")
-    assert(q.contains("FILTER (STR(?mktsegment) = \"BUILDING\")"))
-    assert(q.endsWith("ORDER BY ?s ?name"))
+    assert(sel == "?s ?name")
+    assert(body.contains("OPTIONAL { ?s <urn:g:mktsegment> ?mktsegment }"))
+    assert(!body.contains("acctbal"), s"unused predicate must be pruned:\n$body")
+    assert(body.contains("FILTER (STR(?mktsegment) = \"BUILDING\")"))
+    assert(order == "?s ?name")
   }
 
   test("endpoint scans push filters and prune columns into the remote query") {

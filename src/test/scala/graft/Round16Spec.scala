@@ -472,6 +472,20 @@ class Round16Spec extends SparkTestBase {
     assert(e.getMessage.contains("NULL"), e.getMessage)
   }
 
+  test("an empty merge source is a committed no-op, like an empty CDC batch") {
+    import spark.implicits._
+    val root = freshDir("snapmerge-empty")
+    val id = Lakehouse.commitSnapshot(spark, root, Seq(
+      "lang=a" -> part("a", 1L to 10L)))
+    val empty = Seq.empty[(Long, String, String)].toDF("id", "lang", "v")
+    assert(Lakehouse.mergeSnapshot(spark, root, empty, Seq("id"), "lang") == id)
+    assert(Lakehouse.applyCdcSnapshot(spark, root,
+      empty.withColumn("op", lit("U")), Seq("id"), "lang") == id)
+    assert(Lakehouse.currentSnapshotId(spark, root).contains(id),
+      "an empty delta must not commit a snapshot")
+    assert(Lakehouse.readSnapshot(spark, root).count() == 10L)
+  }
+
   test("compactDrifted on a snapshot lake: the sweep rewrites drifted " +
     "partitions and commits ONE snapshot — mid-sweep readers see the " +
     "previous snapshot in full; the re-sweep is a no-op") {

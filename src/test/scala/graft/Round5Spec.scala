@@ -70,7 +70,7 @@ class Round5Spec extends SparkTestBase {
 
   test("SERVICE sharing vars with a sibling compiles to a bind join") {
     // 5 distinct ?r keys, window 20 ⇒ exactly ONE remote request carrying
-    // a VALUES block — not a gallop row-count probe plus paged fetch
+    // a VALUES block — not a sizing COUNT plus paged fetch
     val server = new GraftServer(g)
     val port = server.start()
     try {
@@ -103,7 +103,7 @@ class Round5Spec extends SparkTestBase {
            |  SERVICE <http://127.0.0.1:$port/sparql> { ?r g:name ?rn }
            |} ORDER BY ?r ?rn""".stripMargin)
       val rows = fed.collect().map(_.toSeq).toSeq
-      // full fetch gallops the remote row count, then pages — several requests
+      // full fetch sends one COUNT, then pages — several requests
       assert(server.queriesServed.get() > 1)
       val local = g.sparql(
         """PREFIX g: <urn:g:>
@@ -143,6 +143,72 @@ class Round5Spec extends SparkTestBase {
     }
   }
 
+  test("a SERVICE full fetch and a config endpoint table each send one " +
+    "COUNT plus ceil(n/pageSize) pages, never a LIMIT 1 probe") {
+    val server = new GraftServer(g)
+    val port = server.start()
+    val url = s"http://127.0.0.1:$port/sparql"
+    /** The queries `run` sent to the endpoint. */
+    def sent(run: => Unit): Seq[String] = {
+      val before = server.queriesServed.get()
+      run
+      server.recentQueries.takeRight((server.queriesServed.get() - before).toInt)
+    }
+    def assertPaged(qs: Seq[String], n: Long, pageSize: Int): Unit = {
+      val pages = qs.filter(_.matches(s"(?s).* LIMIT $pageSize OFFSET \\d+"))
+      assert(!qs.exists(_.contains("LIMIT 1 OFFSET")), qs.mkString("\n"))
+      assert(qs.count(_.contains("COUNT(*)")) == 1, qs.mkString("\n"))
+      assert(pages.size == (n + pageSize - 1) / pageSize && qs.size == 1 + pages.size,
+        s"$n rows, pages of $pageSize:\n${qs.mkString("\n")}")
+    }
+    try {
+      // SERVICE over the bind-join key cap: the full fetch of every g:name
+      spark.conf.set("graft.service.bindJoin.maxKeys", "2")
+      val names = g.sparql(
+        "PREFIX g: <urn:g:> SELECT ?r ?rn WHERE { ?r g:name ?rn }").count()
+      val service = sent {
+        assert(g.sparql(
+          s"""PREFIX g: <urn:g:>
+             |SELECT ?r ?rn WHERE {
+             |  ?n g:region ?r .
+             |  SERVICE <$url> { ?r g:name ?rn }
+             |}""".stripMargin).collect().length == 25)
+      }
+      assertPaged(service, names, graft.compiler.QueryShip.GroupShip().pageSize)
+      // a config endpoint table: 25 nations in pages of 10
+      val loaded = graft.api.GraftConfig.parse(
+        s"""{ "datasources": [
+           |    {"table": "remote_nation", "type": "endpoint", "url": "$url",
+           |     "params": {
+           |       "query": "PREFIX g: <urn:g:> SELECT ?k ?nm WHERE { ?n a g:Nation ; g:name ?nm . BIND (STRAFTER(STR(?n), \\"nation:\\") AS ?k) }",
+           |       "schema": "k STRING, nm STRING", "pageSize": "10"}} ],
+           |  "molecules": [
+           |    {"type": "urn:g:RemoteNation", "table": "remote_nation",
+           |     "subject": "urn:g:rnation:{k}",
+           |     "predicates": [{"predicate": "urn:g:name", "column": "nm"}]} ]
+           |}""".stripMargin)(spark)
+      val table = sent {
+        assert(loaded.graft(spark).sparql(
+          "SELECT ?x ?nm WHERE { ?x <urn:g:name> ?nm }").collect().length == 25)
+      }
+      assertPaged(table, 25L, 10)
+    } finally {
+      spark.conf.unset("graft.service.bindJoin.maxKeys")
+      server.stop()
+    }
+  }
+
+  test("a config endpoint table whose query cannot ship fails config loading") {
+    def load(query: String) = graft.api.GraftConfig.parse(
+      s"""{ "datasources": [
+         |    {"table": "t", "type": "endpoint", "url": "http://127.0.0.1:1/sparql",
+         |     "params": {"query": "$query", "schema": "x STRING"}} ] }""".stripMargin)(spark)
+    intercept[IllegalArgumentException](load("SELECT ?x WHERE { ?x"))
+    // SERVICE inside the declared query: its IRI routes elsewhere
+    intercept[IllegalArgumentException](load(
+      "SELECT ?x WHERE { SERVICE <http://127.0.0.1:2/sparql> { ?x ?p ?o } }"))
+  }
+
   test("SparqlText round-trips through the parser") {
     // serialize(parse(q)) must parse back to the SAME algebra — the
     // property that makes SERVICE dispatch trustworthy against any
@@ -170,11 +236,13 @@ class Round5Spec extends SparkTestBase {
   }
 
   test("SERVICE SILENT over an unreachable endpoint degrades to unit") {
-    // port 1 refuses connections; non-SILENT must fail, SILENT must not
+    // port 1 refuses connections; non-SILENT must fail (a lazy remote
+    // scan, so at the action), SILENT must not
     intercept[Exception] {
       g.sparql(
         """PREFIX g: <urn:g:> SELECT ?x WHERE {
           |  SERVICE <http://127.0.0.1:1/sparql> { ?x a g:Nation } }""".stripMargin)
+        .collect()
     }
     val silent = g.sparql(
       """PREFIX g: <urn:g:> SELECT ?r WHERE {

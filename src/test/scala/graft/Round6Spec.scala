@@ -51,14 +51,15 @@ class Round6Spec extends SparkTestBase {
 
   private val limitOffset = """(?s).*LIMIT (\d+) OFFSET (\d+).*""".r
 
+  /** The answer to the remote scan's sizing `COUNT(*)`. */
+  private def counted(n: Long): String = srj(Seq("count"), Seq(Seq(n.toString)))
+
   test("SILENT survives a page-fetch failure after a successful probe") {
-    // probes (LIMIT 1) answer, real pages 500 — before round 6 the page
+    // the sizing COUNT answers, real pages 500 — before round 6 the page
     // pull failed executor-side at action time, outside the SILENT try,
     // and killed the whole query; §4 says degrade to the unit solution
-    withFlakyEndpoint {
-      case limitOffset("1", off) =>
-        Some(srj(Seq("x"), if (off.toLong < 3) Seq(Seq(s"v$off")) else Nil))
-      case _ => None
+    withFlakyEndpoint { q =>
+      if (q.contains("COUNT(*)")) Some(counted(3)) else None
     } { port =>
       intercept[Exception] {
         g.sparql(
@@ -80,8 +81,9 @@ class Round6Spec extends SparkTestBase {
     // at action time when the window flatMap runs on an executor
     withFlakyEndpoint { q =>
       if (q.contains("VALUES")) None
+      else if (q.contains("COUNT(*)")) Some(counted(1))
       else q match {
-        case limitOffset(lim, off) => // probe AND page requests both answer
+        case limitOffset(lim, off) => // sizing COUNT and pages both answer
           Some(srj(Seq("r", "rn"),
             Seq(Seq("u", "n")).slice(off.toInt, off.toInt + lim.toInt)))
         case _ => None

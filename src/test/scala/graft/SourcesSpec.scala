@@ -78,9 +78,9 @@ class SourcesSpec extends SparkTestBase {
     implicit val s = spark
     // the engine is its own endpoint: GraftServer serves the catalog over
     // HTTP, and a second engine instance federates its Nation star through
-    // SparqlHttp + PagedEndpointSource against it — the reference's
-    // triple-store wrapper protocol (LIMIT/OFFSET pages of
-    // sparql-results+json) with zero egress
+    // an EndpointQuerySource against it — the reference's triple-store
+    // wrapper protocol (LIMIT/OFFSET pages of sparql-results+json) with
+    // zero egress
     val server = new graft.api.GraftServer(
       Graft.overParquetDir(TpchCatalog.catalog, sfDir)(spark))
     val port = server.start()
@@ -109,7 +109,7 @@ class SourcesSpec extends SparkTestBase {
       // must not starve the very jobs that answer them
       val fed = new Graft(TpchCatalog.catalog, Sources.registry(Map(
         "supplier" -> ParquetSource(s"$sfDir/supplier.parquet"),
-        "nation" -> SparqlHttp.pagedSource(endpoint, remote, schema, pageSize = 13),
+        "nation" -> EndpointQuerySource(endpoint, remote, schema, pageSize = 13),
         "region" -> ParquetSource(s"$sfDir/region.parquet"))))
       val q =
         """PREFIX g: <urn:g:>
@@ -292,45 +292,5 @@ class SourcesSpec extends SparkTestBase {
       .join(region.filter(col("r_name") === "ASIA"),
         col("n_regionkey") === col("r_regionkey"))
     assert(got.count() == want.count() && got.count() > 0)
-  }
-
-  test("paged endpoint source: distributed pages, driver bounded at one probe row") {
-    implicit val s = spark
-    PagedBacking.rows = spark.read.parquet(s"$sfDir/customer.parquet").collect()
-    PagedBacking.probeCalls.set(0)
-    PagedBacking.pageCalls.set(0)
-    val n = PagedBacking.rows.length
-    val src = PagedEndpointSource(
-      schema = spark.read.parquet(s"$sfDir/customer.parquet").schema,
-      fetchPage = (off, lim) => PagedBacking.fetch(off, lim),
-      pageSize = 100)
-    val g = new Graft(TpchCatalog.catalog, Sources.registry(Map("customer" -> src)))
-    val got = g.sparql(
-      """PREFIX g: <urn:g:>
-        |SELECT ?c ?n WHERE { ?c a g:Customer ; g:name ?n }""".stripMargin)
-    // single action: page-fetch counts must not be inflated by recomputes
-    val fetched = got.select("n").collect()
-    assert(fetched.length == n)
-    // identical rows, not just counts
-    assert(fetched.map(_.getString(0)).sorted.toSeq ==
-      PagedBacking.rows.map(_.getAs[String]("c_name")).sorted.toSeq)
-    // driver-side sizing used only single-row probes — O(log N) of them,
-    // never a full page on the driver
-    assert(PagedBacking.probeCalls.get() <= 2 * (64 - java.lang.Long.numberOfLeadingZeros(n)) + 6)
-    // every full page was fetched exactly once, task-side
-    assert(PagedBacking.pageCalls.get() == (n + 99) / 100)
-  }
-}
-
-/** JVM-shared transport stand-in for the paged-endpoint test: local-mode
-  * tasks deserialize the closure, so counters must live in a static object,
-  * not a captured var. */
-object PagedBacking {
-  @volatile var rows: Array[org.apache.spark.sql.Row] = Array.empty
-  val probeCalls = new java.util.concurrent.atomic.AtomicInteger(0)
-  val pageCalls = new java.util.concurrent.atomic.AtomicInteger(0)
-  def fetch(off: Long, lim: Int): Seq[org.apache.spark.sql.Row] = {
-    (if (lim == 1) probeCalls else pageCalls).incrementAndGet()
-    rows.slice(off.toInt, off.toInt + lim).toSeq
   }
 }

@@ -7,7 +7,7 @@ import graft.sources.DocStoreTranslators._
 
 /** Star → Mongo-pipeline / Cypher translation (the reference's
   * `sparql2mongo.py` / `sparql2cypher.py` wrapper logic; transport is out of
-  * scope in the zero-egress container, as with PagedEndpointSource). */
+  * scope in the zero-egress container). */
 class TranslatorsSpec extends AnyFunSuite {
   private val G = "urn:g:"
   private val cat = TpchCatalog.catalog
