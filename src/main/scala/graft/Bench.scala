@@ -38,9 +38,13 @@ object Bench {
   /** A job as the bus reported it. `executionId` is the SQL execution it
     * ran for and `scope` the outermost operator scope of its last stage's
     * final RDD (`Exchange`, `BroadcastExchange`, …): AQE query-stage jobs
-    * all share one call site, and these two name them. */
+    * all share one call site, and these two name them. `tasks` ended in
+    * its stages, the first launched at `firstLaunchMs` and the last done
+    * at `lastFinishMs`. */
   private final case class Job(startMs: Long, endMs: Long, callSite: String, stages: Int,
-                               executionId: Option[Long], scope: Option[String])
+                               executionId: Option[Long], scope: Option[String],
+                               tasks: Int = 0, firstLaunchMs: Long = Long.MaxValue,
+                               lastFinishMs: Long = 0L)
 
   /** The listener bus's reports, placed in runs by time: a job in the run
     * whose window holds its start, a stage with the first job listing it,
@@ -70,6 +74,11 @@ object Bench {
 
     override def onJobEnd(e: SparkListenerJobEnd): Unit =
       jobs.computeIfPresent(e.jobId, (_, j) => j.copy(endMs = e.time))
+
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      stageJob.asScala.get(e.stageId).foreach(jobs.computeIfPresent(_, (_, j) => j.copy(
+        tasks = j.tasks + 1, firstLaunchMs = j.firstLaunchMs min e.taskInfo.launchTime,
+        lastFinishMs = j.lastFinishMs max e.taskInfo.finishTime)))
 
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
       val i = e.stageInfo
@@ -210,7 +219,9 @@ object Bench {
       val jobs = log.jobList(runs.last).map { j =>
         s"""{"call_site":${js(j.callSite)},"wall_ms":${j.endMs - j.startMs},""" +
           s""""stages":${j.stages},"execution_id":${j.executionId.fold("null")(_.toString)},""" +
-          s""""scope":${j.scope.fold("null")(js)}}"""
+          s""""scope":${j.scope.fold("null")(js)},"tasks":${j.tasks},""" +
+          (if (j.tasks == 0) s""""queue_ms":null,"run_ms":null}"""
+           else s""""queue_ms":${j.firstLaunchMs - j.startMs},"run_ms":${j.lastFinishMs - j.firstLaunchMs}}""")
       }.mkString("[", ",", "]")
       js(k) + ":" + (counters :+ s""""last_run_jobs":$jobs""").mkString("{", ",", "}")
     }.mkString("{", ",", "}")

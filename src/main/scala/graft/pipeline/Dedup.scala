@@ -34,14 +34,6 @@ object Dedup {
       .withColumn("shingles",
         graft.functions.GraftFunctions.shingle_ids(col("text"), k))
 
-  /** MinHash signature: numPerm permutations approximated by seeded
-    * xxhash64 over the 64-bit shingle ids (codegen'd, no UDF):
-    * sig[s] = min over shingles of xxhash64(shingle_id, s). */
-  def withMinhash(shingled: DataFrame, numPerm: Int = 32): DataFrame =
-    shingled.withColumn("minhash", expr(
-      s"transform(sequence(0, ${numPerm - 1}), s -> " +
-        "array_min(transform(shingles, sh -> xxhash64(sh, s))))"))
-
   /** LSH band buckets straight from the shingle-id sets: band j's bucket
     * key hashes the minhash values of its own `numPerm/bands` permutations.
     * Each permutation is used by exactly one band, so Catalyst's
@@ -102,17 +94,20 @@ object Dedup {
     * recomputes its (cheap, counts-only) lineage when consumed —
     * observability is on demand. */
   def candidatePairsWithStats(buckets: DataFrame, maxBucket: Int = 1000): PairsWithStats = {
+    val spark = buckets.sparkSession
+    import spark.implicits._
     val sized = withBucketSize(buckets)
     val capped = sized.filter(col("bucket_size") > maxBucket)
       .select("band", "bh", "bucket_size").distinct()
+    // typed flatMap over the sorted ids, not a nested transform/slice
+    // lambda: Catalyst interprets higher-order functions row by row
     val pairs = sized.filter(col("bucket_size").between(2, maxBucket))
       .groupBy("band", "bh")
       .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-      .select(explode(expr(
-        "flatten(transform(ids, (x, i) -> " +
-          "transform(slice(ids, i + 2, size(ids)), y -> named_struct('a', x, 'b', y))))"))
-        .as("p"))
-      .select(col("p.a").as("a"), col("p.b").as("b"))
+      .select(col("ids")).as[Array[Long]]
+      .flatMap(ids => ids.indices.iterator.flatMap(i =>
+        (i + 1 until ids.length).iterator.map(j => (ids(i), ids(j)))))
+      .toDF("a", "b")
       .distinct()
     PairsWithStats(pairs, capped)
   }
@@ -127,23 +122,10 @@ object Dedup {
                        k: Int = 3, numPerm: Int = 32, bands: Int = 8): DataFrame = {
     // persist the shingle-id sets: three consumers (bucket generation and
     // both sides of the verification join) would otherwise each re-run the
-    // split+hash scan — the most expensive stage of the pipeline
+    // split+hash scan — the most expensive stage of the pipeline. The
+    // verified pair list is materialized while the cache is hot.
     val shingled = withShingles(docs, k).select(col("doc_id"), col("shingles")).persist()
-    val out = verifiedNearDupsFromShingled(shingled, threshold, numPerm, bands)
-    shingled.unpersist()
-    out
-  }
-
-  /** [[verifiedNearDups]] over an already-computed (and caller-persisted)
-    * `(doc_id, shingles)` frame — the seam that lets
-    * [[dedupCorpusWithContainment]] derive shingles and containment grams
-    * in ONE pass over the survivor text instead of one scan per edge
-    * generator. The verified pair list is materialized (localCheckpoint)
-    * while the caller's cache is hot; the caller owns the unpersist. */
-  private def verifiedNearDupsFromShingled(shingled: DataFrame,
-                                           threshold: Double, numPerm: Int,
-                                           bands: Int): DataFrame =
-    candidatePairs(lshBuckets(shingled, numPerm, bands))
+    val out = candidatePairs(lshBuckets(shingled, numPerm, bands))
       .join(shingled.select(col("doc_id").as("a"), col("shingles").as("sa")), "a")
       .join(shingled.select(col("doc_id").as("b"), col("shingles").as("sb")), "b")
       .withColumn("jaccard",
@@ -152,6 +134,9 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
       .select(col("a"), col("b"), col("jaccard"))
       .localCheckpoint()
+    shingled.unpersist()
+    out
+  }
 
   /** Collapse near-dup pairs into clusters. Returns (doc_id, canonical_id)
     * for every document; canonical_id = min doc_id of its component — the
@@ -650,18 +635,17 @@ object Dedup {
     * crawl duplication) die on the fixed-width digest groupBy BEFORE
     * anything pays shingle hashing, and the near-dup stage — whose
     * candidate generation is the expensive part — sees each distinct
-    * text once. Consumption discipline: the exact-survivor frame is
-    * persisted for the pipeline's internal consumers (shingle cache
-    * fill, canonical-id assignment, survivor-id materialization — three
-    * different projections Catalyst cannot merge into one exchange),
-    * the tiny survivor-id list is checkpointed eagerly while that cache
-    * is hot, and the cache is released before returning — the final
-    * corpus-sized result re-derives exactKeep's lineage exactly once at
-    * the caller's action, so one `dedupCorpus` call costs two corpus
-    * scans total and pins nothing in executor storage afterwards. */
+    * text once. Consumption discipline: the input's `doc_id`, `text`
+    * and md5 digest are derived once into a cache that the digest
+    * groupBy and the exact-survivor join (shingle cache fill, canonical-id
+    * assignment) all read; the tiny survivor-id list is checkpointed
+    * eagerly while that cache is hot, and the cache is released before
+    * returning. The result is `docs` joined to those ids, so one call
+    * scans `docs` twice — once into the cache, once at the caller's
+    * action — and pins nothing but the id checkpoint afterwards. */
   def dedupCorpus(docs: DataFrame, threshold: Double = 0.7, k: Int = 3,
                   numPerm: Int = 32, bands: Int = 8): DataFrame =
-    dedupStaged(docs, ek => verifiedNearDups(ek, threshold, k, numPerm, bands))
+    docs.join(dedupIds(docs, threshold, k, numPerm, bands), Seq("doc_id"))
 
   /** [[dedupCorpus]] with the asymmetric edge set folded in: near-dup
     * pairs UNION [[containmentPairs]] (quoted-subset documents — the
@@ -680,9 +664,9 @@ object Dedup {
                                  k: Int = 3, numPerm: Int = 32, bands: Int = 8,
                                  tau: Double = 0.9, containK: Int = 8,
                                  maxDf: Long = 256, minGrams: Long = 3): DataFrame =
-    dedupStaged(docs, ek => {
+    docs.join(dedupStaged(docs, ek => {
       // the two edge generators are INDEPENDENT eager jobs over the same
-      // persisted survivor frame (each fills its OWN derived cache and
+      // survivor frame (each fills its OWN derived cache and
       // materializes its pair list via localCheckpoint) — submitted from
       // two driver threads so the second job's tasks back-fill executors
       // freed by the first job's stragglers (the overlap-independent-jobs
@@ -707,7 +691,7 @@ object Dedup {
       val contR = scala.util.Try(scala.concurrent.Await
         .result(cont, scala.concurrent.duration.Duration.Inf))
       nearR.get.unionByName(contR.get)
-    })
+    }), Seq("doc_id"))
 
   /** Shared lazy daemon pool for the overlapped edge generators — a
     * per-call `newFixedThreadPool` churned two threads per invocation
@@ -718,35 +702,41 @@ object Dedup {
       java.util.concurrent.Executors.newFixedThreadPool(2,
         r => { val t = new Thread(r, "dedup-edges"); t.setDaemon(true); t }))
 
+  /** Survivor ids of [[dedupCorpus]] — its staging without the join back
+    * to the corpus, for a caller that joins its own (wider) input. */
+  private[pipeline] def dedupIds(docs: DataFrame, threshold: Double = 0.7, k: Int = 3,
+                                 numPerm: Int = 32, bands: Int = 8): DataFrame =
+    dedupStaged(docs, ek => verifiedNearDups(ek, threshold, k, numPerm, bands))
+
   /** Shared staging of the end-to-end dedup compositions: exact → edge
     * generation over exact survivors → components → canonical filter.
-    * `edgesOf` receives the PERSISTED exact-survivor frame and returns
-    * the duplicate-pair edge list (columns `a`, `b`). */
+    * `edgesOf` receives the exact-survivor frame (`doc_id`, `text`) and
+    * returns the duplicate-pair edge list (columns `a`, `b`). Returns the
+    * checkpointed survivor ids (`doc_id`) and pins nothing else. */
   private def dedupStaged(docs: DataFrame,
                           edgesOf: DataFrame => DataFrame): DataFrame = {
-    val exactKeep = docs.join(
-      exactGroups(docs).select(col("keep_id").as("doc_id")), Seq("doc_id"))
+    // derive once: the input (its filters included) is scanned and hashed
+    // a single time into this cache; the digest groupBy and the
+    // exact-survivor join both read it
+    val hashed = docs.select(col("doc_id"), col("text"), md5(col("text")).as("text_hash"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val exactKeep = hashed.join(
+      hashed.groupBy("text_hash").agg(min(col("doc_id")).as("doc_id")).select("doc_id"),
+      Seq("doc_id")).select("doc_id", "text")
     val pairs = edgesOf(exactKeep)
     val canon = canonicalIds(exactKeep, pairs)
     val keepIds = canon
       .filter(col("canonical_id") === col("doc_id")).select("doc_id")
       .localCheckpoint()
-    // keepIds (survivor ids only — the one block the result still needs)
-    // is materialized above, so the edge list's checkpoint blocks
-    // ([[verifiedNearDups]] / [[containmentPairs]] output) and the
-    // distributed-components label cache are dead weight from here:
-    // release them NOW rather than waiting for the GC-driven
-    // ContextCleaner (periodic GC is 30 min — repeated compositions in
-    // one session otherwise stack dead checkpoint blocks that evict the
-    // next call's live persists; round-8 bench measured exactly that as
-    // run-over-run growth on this family).
+    // everything but keepIds is dead weight now: release it rather than
+    // wait for the GC-driven ContextCleaner (periodic GC is 30 min —
+    // repeated compositions in one session otherwise stack dead blocks
+    // that evict the next call's live persists; round-8 bench measured
+    // exactly that as run-over-run growth on this family)
     org.apache.spark.sql.GraftBridge.freeCheckpoint(pairs)
     canon.unpersist()
-    exactKeep.unpersist()
-    // post-unpersist, this re-derives the exact-survivor lineage once at
-    // the caller's action (no pinned blocks survive the call)
-    exactKeep.join(keepIds, Seq("doc_id"))
+    hashed.unpersist()
+    keepIds
   }
 
   /** Cross-corpus boilerplate removal — the segment-level member of the
@@ -1087,25 +1077,11 @@ object Dedup {
     // (fixed-width digests, spills clean), collapse the result while the
     // cache is hot — the verified pair list is orders of magnitude
     // smaller than the gram stream, the same lifecycle discipline as
-    // [[verifiedNearDups]] — and release.
+    // [[verifiedNearDups]] — and release. Keeping the grams as ARRAYS
+    // makes `b_size` a map-only `size(cgrams)` (the digests are distinct
+    // per doc by construction) instead of a groupBy over the exploded stream.
     val grammed = withCGrams(docs, k).select(col("doc_id"), col("cgrams"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = containmentPairsFromGramArrays(grammed, tau, maxDf, minGrams)
-    grammed.unpersist()
-    out
-  }
-
-  /** [[containmentPairs]] over an already-computed (caller-persisted)
-    * `(doc_id, cgrams)` frame — the shared-derivation seam of
-    * [[dedupCorpusWithContainment]]. Keeping the grams as ARRAYS until
-    * this point also makes `b_size` a map-only `size(cgrams)` instead of
-    * a corpus-wide groupBy over the exploded stream (the digests are
-    * distinct per doc by construction, so the counts are identical) —
-    * one full shuffle less than the r20 shape. The pair list
-    * materializes eagerly (localCheckpoint); the caller owns the cache. */
-  private def containmentPairsFromGramArrays(grammed: DataFrame, tau: Double,
-                                             maxDf: Long,
-                                             minGrams: Long): DataFrame = {
     val grams = grammed.select(col("doc_id"), explode(col("cgrams")).as("g"))
     val sizes = grammed.select(col("doc_id"),
       size(col("cgrams")).cast("long").as("b_size"))
@@ -1117,12 +1093,14 @@ object Dedup {
       .join(eligible.select(col("g"), col("doc_id").as("b")), Seq("g"))
       .filter(col("a") =!= col("b"))
       .groupBy("a", "b").agg(count(lit(1)).as("shared"))
-    shared.join(sizes.withColumnRenamed("doc_id", "b"), Seq("b"))
+    val out = shared.join(sizes.withColumnRenamed("doc_id", "b"), Seq("b"))
       .filter(col("b_size") >= minGrams &&
         col("shared") >= ceil(lit(tau) * col("b_size")))
       .select(col("a"), col("b"), col("shared").cast("long").as("shared"),
         col("b_size").cast("long").as("b_size"))
       .localCheckpoint()
+    grammed.unpersist()
+    out
   }
 
   /** Exact symmetric n-gram Jaccard near-dup pairs — the deterministic

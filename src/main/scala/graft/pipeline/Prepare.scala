@@ -27,7 +27,13 @@ object Prepare {
     * quality-passing, exact- and near-dup-free, deterministically split.
     * Every stage is individually oracle-gated; `doc_prepare_corpus`
     * gates the composition end-to-end (funnel rules + dedup closure +
-    * split coin recomputed in one SQL chain). */
+    * split coin recomputed in one SQL chain).
+    *
+    * Requires `doc_id` to be unique. The result joins the RAW `docs` to
+    * the dedup survivor ids: those ids are a subset of the funnel
+    * survivors, so the rows equal those of the filtered input, and the
+    * final scan reads only `doc_id` and `source` — the text is read and
+    * funnelled once, inside the dedup staging. */
   def prepareCorpus(docs: DataFrame, valFrac: Double = 0.1,
                     testFrac: Double = 0.1, salt: String = "prep",
                     threshold: Double = 0.7): DataFrame = {
@@ -36,8 +42,8 @@ object Prepare {
     // is unique), without joining the corpus against its own projection
     // (guide §2.4): one map-only filter instead of a corpus-sized join
     val kept = docs.filter(TextAnalysis.funnelFirstFail.isNull)
-    val deduped = Dedup.dedupCorpus(kept, threshold)
-    Mixture.splitAssign(deduped, valFrac, testFrac, salt)
+    val ids = Dedup.dedupIds(kept, threshold)
+    Mixture.splitAssign(docs.join(ids, Seq("doc_id")), valFrac, testFrac, salt)
   }
 
   /** Snapshot diff between two corpus versions — the incremental-curation

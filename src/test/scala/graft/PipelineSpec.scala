@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.pipeline._
 
@@ -736,6 +737,155 @@ class PipelineSpec extends SparkTestBase {
     assert(got.columns.toSeq == Seq("doc_id", "text"))
     assert(got.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
       == Seq(1L, 2L, 5L))
+  }
+
+  // ---- dedup staging: survivor ids, derive once -----------------------------
+
+  /** Words of document `d`'s text: `n` tokens that occur in no other text. */
+  private def words(d: Int, n: Int): Seq[String] = (0 until n).map(i => s"d${d}w$i")
+
+  /** The staging edge cases in one parquet file: a funnel-rejected exact
+    * twin holding the lower id, a near-dup chain whose ends are not
+    * near-dups of each other, exact and near duplicates mixed in one
+    * component, and a quoted-subset pair. */
+  private lazy val edgeCorpus = {
+    val s = spark
+    import s.implicits._
+    val chain0 = words(10, 40)
+    val chain1 = chain0.patch(5, Seq("c1a", "c1b"), 2)
+    val chain2 = chain1.patch(25, Seq("c2a", "c2b"), 2)
+    val mixed = words(20, 40)
+    val mixedNear = mixed.patch(12, Seq("m1a", "m1b"), 2)
+    val quote = words(31, 22)
+    def t(ws: Seq[String]) = ws.mkString(" ")
+    val path = s"${System.getProperty("java.io.tmpdir")}/graft_dedup_edges_${System.nanoTime()}"
+    Seq(
+      (1L, t(words(1, 30)), "twin", "de"),   // funnel rejects it, lower id
+      (2L, t(words(1, 30)), "twin", "en"),   // its exact twin passes
+      (3L, t(words(3, 30)), "base", "en"),
+      (4L, "too short to keep", "junk", "en"),
+      (10L, t(chain0), "chain", "en"),
+      (11L, t(chain1), "chain", "en"),
+      (12L, t(chain2), "chain", "en"),
+      (19L, t(mixedNear), "mixed", "en"),    // near of 20, lowest id
+      (20L, t(mixed), "mixed", "en"),
+      (21L, t(mixed), "mixed", "en"),        // exact of 20
+      (22L, t(mixedNear), "mixed", "en"),    // exact of 19
+      (30L, t(words(30, 10) ++ quote ++ words(32, 10)), "cont", "en"),
+      (31L, t(quote), "cont", "en")          // quoted whole inside 30
+    ).toDF("doc_id", "text", "source", "lang").coalesce(1).write.parquet(path)
+    spark.read.parquet(path)
+  }
+
+  /** Reference staging: the exact-survivor frame itself, joined to the
+    * canonical ids of the components over `edgesOf`'s pairs. */
+  private def stagedReference(docs: DataFrame, edgesOf: DataFrame => DataFrame) = {
+    val exactKeep = docs.join(
+      Dedup.exactGroups(docs).select(col("keep_id").as("doc_id")), Seq("doc_id"))
+    val canon = Dedup.canonicalIds(exactKeep, edgesOf(exactKeep))
+    exactKeep.join(
+      canon.filter(col("canonical_id") === col("doc_id")).select("doc_id"), Seq("doc_id"))
+  }
+
+  private def rowSet(df: DataFrame) = df.collect().map(_.toSeq).toSet
+  private def idSet(df: DataFrame) =
+    df.select("doc_id").collect().map(_.getLong(0)).toSet
+
+  test("dedup staging edge cases: rows equal the reference staging") {
+    val near = (ek: DataFrame) => Dedup.verifiedNearDups(ek)
+    val both = (ek: DataFrame) => Dedup.verifiedNearDups(ek)
+      .select("a", "b").unionByName(Dedup.containmentPairs(ek).select("a", "b"))
+    // the chain holds only through its middle: 10~11 and 11~12, not 10~12
+    val chainPairs = Dedup.verifiedNearDups(edgeCorpus.filter(col("source") === "chain"))
+      .select("a", "b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(chainPairs == Set((10L, 11L), (11L, 12L)), s"chain pairs: $chainPairs")
+
+    val plain = Dedup.dedupCorpus(edgeCorpus)
+    assert(plain.columns.toSeq == edgeCorpus.columns.toSeq)
+    assert(rowSet(plain) == rowSet(stagedReference(edgeCorpus, near)))
+    assert(idSet(plain) == Set(1L, 3L, 4L, 10L, 19L, 30L, 31L))
+
+    val withCont = Dedup.dedupCorpusWithContainment(edgeCorpus)
+    assert(withCont.columns.toSeq == edgeCorpus.columns.toSeq)
+    assert(rowSet(withCont) == rowSet(stagedReference(edgeCorpus, both)))
+    assert(idSet(withCont) == Set(1L, 3L, 4L, 10L, 19L, 30L))
+
+    // the funnel runs before the hashing: doc 1 would win the exact group
+    // over the unfiltered corpus, so its twin 2 must be the one kept
+    val kept = edgeCorpus.join(TextAnalysis.filterFunnel(edgeCorpus)
+      .filter(col("keep")).select("doc_id"), Seq("doc_id"))
+    val prepared = Prepare.prepareCorpus(edgeCorpus)
+    assert(prepared.columns.toSeq == Seq("doc_id", "source", "split"))
+    assert(rowSet(prepared) == rowSet(
+      Mixture.splitAssign(stagedReference(kept, near), 0.1, 0.1, "prep")))
+    assert(idSet(prepared) == Set(2L, 3L, 10L, 19L, 30L, 31L))
+  }
+
+  test("prepareCorpus reads text once: its plan scans no text and hashes nothing") {
+    import org.apache.spark.sql.catalyst.expressions.Md5
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val out = Prepare.prepareCorpus(docs)
+    out.collect()
+    val plan = out.queryExecution.executedPlan
+    val helper = new AdaptiveSparkPlanHelper {}
+    val scans = helper.collectWithSubqueries(plan) { case f: FileSourceScanExec => f }
+    assert(scans.nonEmpty, plan.treeString)
+    assert(scans.forall(!_.requiredSchema.fieldNames.contains("text")),
+      s"the returned frame re-reads the text:\n${plan.treeString}")
+    // the split coin hashes doc_id; no digest of the text may remain
+    def hashesText(e: org.apache.spark.sql.catalyst.expressions.Expression) = e.exists {
+      case m: Md5 => m.references.exists(_.name == "text")
+      case _      => false
+    }
+    assert(helper.collectWithSubqueries(plan) {
+      case p if p.expressions.exists(hashesText) => p
+    }.isEmpty, s"the returned frame re-hashes the text:\n${plan.treeString}")
+  }
+
+  test("dedupCorpus pins nothing but its survivor-id checkpoint") {
+    val sc = spark.sparkContext
+    def cached = sc.getPersistentRDDs.keySet.toSet
+    val before = cached
+    val got = Dedup.dedupCorpus(docs)
+    val pinned = cached -- before
+    assert(pinned.size == 1, s"cached RDDs left behind: $pinned")
+    assert(got.count() > 0)
+    org.apache.spark.sql.GraftBridge.freeCheckpoint(got)
+    assert((cached -- before).isEmpty,
+      "the one RDD left behind must be the checkpoint the result reads")
+  }
+
+  test("candidate pairs: typed expansion equals the transform/slice expression") {
+    val s = spark
+    import s.implicits._
+    val cap = 8
+    // bucket j of band 0 holds j members (0 to 6, then cap and cap + 1);
+    // band 1 regroups the same ids, so pairs repeat across bands
+    val sizes = (0 to 6) ++ Seq(cap, cap + 1)
+    val band0 = sizes.zipWithIndex.flatMap { case (n, j) =>
+      (0 until n).map(i => (100L * j + i, 0, j.toLong)) }
+    val band1 = band0.map { case (id, _, _) => (id, 1, id % 7) }
+    val buckets = (band0 ++ band1).toDF("doc_id", "band", "bh")
+    val got = Dedup.candidatePairsWithStats(buckets, cap).pairs
+    val want = buckets.groupBy("band", "bh")
+      .agg(count(lit(1)).as("n"), sort_array(collect_list(col("doc_id"))).as("ids"))
+      .filter(col("n").between(2, cap))
+      .select(explode(expr(
+        "flatten(transform(ids, (x, i) -> " +
+          "transform(slice(ids, i + 2, size(ids)), y -> named_struct('a', x, 'b', y))))"))
+        .as("p"))
+      .select(col("p.a").as("a"), col("p.b").as("b"))
+      .distinct()
+    assert(got.schema == want.schema)
+    val rows = got.as[(Long, Long)].collect()
+    assert(rows.length == rows.distinct.length)
+    assert(rows.toSet == want.as[(Long, Long)].collect().toSet)
+    // the bucket at the cap pairs up; the one past it only through band 1
+    def bandZeroOnly(j: Long) = rows.exists { case (a, b) =>
+      a / 100 == j && b / 100 == j && a % 7 != b % 7 }
+    assert(bandZeroOnly(7) && !bandZeroOnly(8))
+    assert(!got.queryExecution.executedPlan.toString.contains("lambdafunction"))
   }
 
   test("store admits are idempotent; compaction preserves verdicts") {
