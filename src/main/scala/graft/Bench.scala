@@ -217,7 +217,8 @@ object Bench {
         js(key) + ":" + perRun.map(_(i)).mkString("[", ",", "]")
       }
       val jobs = log.jobList(runs.last).map { j =>
-        s"""{"call_site":${js(j.callSite)},"wall_ms":${j.endMs - j.startMs},""" +
+        s"""{"call_site":${js(j.callSite)},"start_ms":${j.startMs - runs.last.startMs},""" +
+          s""""wall_ms":${j.endMs - j.startMs},""" +
           s""""stages":${j.stages},"execution_id":${j.executionId.fold("null")(_.toString)},""" +
           s""""scope":${j.scope.fold("null")(js)},"tasks":${j.tasks},""" +
           (if (j.tasks == 0) s""""queue_ms":null,"run_ms":null}"""

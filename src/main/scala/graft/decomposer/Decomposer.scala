@@ -247,7 +247,4 @@ object Decomposer {
     }
     current.toList
   }
-
-  /** Star-to-star connection vars (getStarsConnections, Decomposer.py:138-170). */
-  def sharedVars(a: Star, b: Star): Set[String] = a.vars intersect b.vars
 }

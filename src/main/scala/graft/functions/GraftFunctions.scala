@@ -2,9 +2,11 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 /** Native Catalyst expressions for pipeline hot paths.
@@ -465,6 +467,161 @@ object GraftFunctions {
     GraftBridge.column(RepetitionStats(GraftBridge.expression(text)))
   }
 
+  private val TooShort = org.apache.spark.unsafe.types.UTF8String.fromString("too_short")
+  private val TooLong = org.apache.spark.unsafe.types.UTF8String.fromString("too_long")
+  private val LowDiversity =
+    org.apache.spark.unsafe.types.UTF8String.fromString("low_diversity")
+  private val NonEnglish =
+    org.apache.spark.unsafe.types.UTF8String.fromString("non_english")
+  private val English = org.apache.spark.unsafe.types.UTF8String.fromString("en")
+
+  /** The quality funnel's first failing rule in ONE pass per row —
+    * value-identical to the `when` chain over `w = split(lower(text),
+    * '\s+')`: `too_short` (|w| < 20), `too_long` (length(text) > 500),
+    * `low_diversity` (distinct(w) × 3 < |w|), `non_english` (lang ≠ 'en');
+    * NULL when the document is kept. The text is lowered exactly as
+    * Spark's `lower` does, into a reused buffer ([[lowerInto]]; `icuLower`
+    * is the session's ICU case-mapping setting, which `lower` reads too:
+    * JVM and ICU case tables disagree on some code points), and cut into
+    * byte spans by [[wsTokens]]. Each rule returns as soon as it decides:
+    * distinct tokens are counted only past the first two rules, and only
+    * until the count clears the threshold.
+    * The distinct set compares token bytes exactly, so a hash collision
+    * cannot change a count. A NULL text decides none of the text rules and
+    * a NULL lang passes the last one, as the chain's NULL comparisons do
+    * under ANSI `size`. Called from generated code. */
+  def funnelFirstFail(text: org.apache.spark.unsafe.types.UTF8String,
+                      lang: org.apache.spark.unsafe.types.UTF8String,
+                      icuLower: Boolean): org.apache.spark.unsafe.types.UTF8String = {
+    if (text != null) {
+      val len = lowerInto(text, icuLower)
+      val low = LowerBufLocal.get()
+      val n = wsTokens(low, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, len,
+        record = true)
+      if (n < 20) return TooShort
+      if (text.numChars() > 500) return TooLong
+      if (distinctTokensBelow(low, n, (n + 2) / 3)) return LowDiversity
+    }
+    if (lang != null && !lang.equals(English)) NonEnglish else null
+  }
+
+  def funnel_first_fail(text: Column, lang: Column): Column = {
+    import org.apache.spark.sql.GraftBridge
+    GraftBridge.column(
+      FunnelFirstFail(GraftBridge.expression(text), GraftBridge.expression(lang)))
+  }
+
+  /** `lower(text)`'s UTF-8 bytes into the thread-local [[LowerBufLocal]]
+    * (grown as needed); returns their length. Both case mappings lower
+    * ASCII text byte by byte (A–Z only), so only other text pays for
+    * Spark's `lower` and its copy. */
+  private def lowerInto(text: org.apache.spark.unsafe.types.UTF8String,
+                        icuLower: Boolean): Int = {
+    val ascii = text.isFullAscii
+    val low = if (ascii) text
+      else org.apache.spark.sql.catalyst.util.CollationSupport.Lower.exec(text,
+        org.apache.spark.sql.catalyst.util.CollationFactory.UTF8_BINARY_COLLATION_ID, icuLower)
+    val len = low.numBytes()
+    var buf = LowerBufLocal.get()
+    if (buf.length < len) {
+      buf = new Array[Byte](math.max(len, buf.length * 2))
+      LowerBufLocal.set(buf)
+    }
+    low.writeToMemory(buf, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET)
+    if (ascii) {
+      var i = 0
+      while (i < len) {
+        if (buf(i) >= 'A' && buf(i) <= 'Z') buf(i) = (buf(i) + 32).toByte
+        i += 1
+      }
+    }
+    len
+  }
+
+  /** `size(split(lower(text), '\s+'))` as a byte scan: lowering maps no
+    * character to or from the six ASCII whitespace bytes, so the raw text
+    * has the same token count. Called from generated code. */
+  def wsTokenCount(text: org.apache.spark.unsafe.types.UTF8String): Long =
+    wsTokens(text.getBaseObject, text.getBaseOffset, text.numBytes(), record = false).toLong
+
+  def ws_token_count(text: Column): Column = {
+    import org.apache.spark.sql.GraftBridge
+    GraftBridge.column(WsTokenCount(GraftBridge.expression(text)))
+  }
+
+  @inline private def isWs(b: Byte): Boolean = b == ' ' || (b >= 9 && b <= 13)
+
+  /** Token count of `split(s, '\s+', -1)` over the `len` bytes at (base,
+    * off): cut at maximal runs of the six ASCII bytes Java's `\s` matches
+    * (` \t\n\x0B\f\r`), leading and trailing empty tokens kept, `""` one
+    * token. UTF-8 lead and continuation bytes are ≥ 0x80, so a multi-byte
+    * character is never cut. With `record`, token i's byte span from `off`
+    * is [cuts(2i), cuts(2i+1)) in the thread-local [[CutsLocal]]. */
+  private def wsTokens(base: AnyRef, off: Long, len: Int, record: Boolean): Int = {
+    var cuts = CutsLocal.get()
+    var n = 0
+    var start = 0
+    var i = 0
+    while (i <= len) {
+      if (i == len || isWs(org.apache.spark.unsafe.Platform.getByte(base, off + i))) {
+        if (record) {
+          if (2 * n + 2 > cuts.length) {
+            cuts = java.util.Arrays.copyOf(cuts, cuts.length * 2)
+            CutsLocal.set(cuts)
+          }
+          cuts(2 * n) = start
+          cuts(2 * n + 1) = i
+        }
+        n += 1
+        i += 1
+        while (i < len && isWs(org.apache.spark.unsafe.Platform.getByte(base, off + i))) i += 1
+        start = i
+      } else i += 1
+    }
+    n
+  }
+
+  /** Whether the first `n` recorded tokens of `b` hold fewer than `need`
+    * distinct byte strings; stops at the `need`-th. An open-addressing set
+    * of token indices (0 = empty) in the thread-local [[SlotsLocal]],
+    * sized for ≤ 0.5 load at `need` entries. */
+  private def distinctTokensBelow(b: Array[Byte], n: Int, need: Int): Boolean = {
+    val cuts = CutsLocal.get()
+    var cap = 16
+    while (cap < 2 * need) cap <<= 1
+    var slots = SlotsLocal.get()
+    if (slots.length < cap) { slots = new Array[Int](cap); SlotsLocal.set(slots) }
+    else java.util.Arrays.fill(slots, 0, cap, 0)
+    val mask = cap - 1
+    var distinct = 0
+    var t = 0
+    while (t < n && distinct < need) {
+      val from = cuts(2 * t)
+      val until = cuts(2 * t + 1)
+      var idx = org.apache.spark.unsafe.hash.Murmur3_x86_32.hashUnsafeBytes(b,
+        org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + from, until - from, 42) & mask
+      var found = false
+      while (!found && slots(idx) != 0) {
+        val u = slots(idx) - 1
+        found = java.util.Arrays.equals(b, cuts(2 * u), cuts(2 * u + 1), b, from, until)
+        idx = (idx + 1) & mask
+      }
+      if (!found) { slots(idx) = t + 1; distinct += 1 }
+      t += 1
+    }
+    distinct < need
+  }
+
+  private val LowerBufLocal = new ThreadLocal[Array[Byte]] {
+    override def initialValue(): Array[Byte] = new Array[Byte](1024)
+  }
+  private val CutsLocal = new ThreadLocal[Array[Int]] {
+    override def initialValue(): Array[Int] = new Array[Int](256)
+  }
+  private val SlotsLocal = new ThreadLocal[Array[Int]] {
+    override def initialValue(): Array[Int] = new Array[Int](64)
+  }
+
   /** First 8 md5 bytes big-endian as a signed long — the same 64 bits the
     * hex-prefix-16 contract digest spells in hex. */
   private def digestPrefixLong(d: Array[Byte]): Long =
@@ -824,6 +981,81 @@ final case class RepetitionStats(child: Expression)
 
   override protected def withNewChildInternal(
       newChild: Expression): RepetitionStats = copy(child = newChild)
+}
+
+/** (text, lang) → the quality funnel's first failing rule, NULL when the
+  * document is kept (see [[GraftFunctions.funnelFirstFail]]); one
+  * codegen'd call per row. Not null-intolerant: a NULL lang still lets the
+  * text rules decide. */
+final case class FunnelFirstFail(left: Expression, right: Expression)
+  extends BinaryExpression {
+
+  // the case mapping `lower` itself would use in this session
+  private lazy val icuLower =
+    SQLConf.get.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED)
+
+  override def dataType: DataType = StringType
+
+  override def nullable: Boolean = true
+
+  override def checkInputDataTypes()
+  : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    (left.dataType, right.dataType) match {
+      case (StringType, StringType) =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+      case other =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+          s"funnel_first_fail expects (string, string), got $other")
+    }
+
+  override def eval(input: InternalRow): Any =
+    GraftFunctions.funnelFirstFail(
+      left.eval(input).asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
+      right.eval(input).asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
+      icuLower)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val t = left.genCode(ctx)
+    val l = right.genCode(ctx)
+    ev.copy(code = code"""
+      |${t.code}
+      |${l.code}
+      |${CodeGenerator.javaType(dataType)} ${ev.value} =
+      |  graft.functions.GraftFunctions.funnelFirstFail(
+      |    ${t.isNull} ? null : ${t.value}, ${l.isNull} ? null : ${l.value}, $icuLower);
+      |boolean ${ev.isNull} = ${ev.value} == null;""".stripMargin)
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): FunnelFirstFail =
+    copy(left = newLeft, right = newRight)
+}
+
+/** string → `size(split(lower(text), '\s+'))` as a long (see
+  * [[GraftFunctions.wsTokenCount]]); one codegen'd call per row. */
+final case class WsTokenCount(child: Expression) extends UnaryExpression {
+
+  override def dataType: DataType = LongType
+
+  override def checkInputDataTypes()
+  : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = child.dataType match {
+    case StringType =>
+      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+    case other =>
+      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+        s"ws_token_count expects string, got $other")
+  }
+
+  override protected def nullSafeEval(input: Any): Any =
+    GraftFunctions.wsTokenCount(
+      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = graft.functions.GraftFunctions.wsTokenCount($c);")
+
+  override protected def withNewChildInternal(newChild: Expression): WsTokenCount =
+    copy(child = newChild)
 }
 
 /** string → array of distinct character q-grams (see

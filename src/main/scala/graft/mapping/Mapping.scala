@@ -134,10 +134,4 @@ final case class Catalog(molecules: List[Molecule],
   val predIndex: Map[String, List[Molecule]] =
     molecules.flatMap(m => m.predicates.keys.map(_ -> m))
       .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-
-  /** Molecules whose predicate set covers all given predicates
-    * (`find_rdfmt_by_preds` semantics — intersection of posting lists). */
-  def findByPreds(preds: Set[String]): List[Molecule] =
-    if (preds.isEmpty) molecules
-    else molecules.filter(m => preds.subsetOf(m.predicates.keySet))
 }

@@ -225,23 +225,27 @@ object Dedup {
     * tool for identical text. */
   def simhashNearDupsWithStats(docs: DataFrame, maxHamming: Int = 3,
                                maxBucket: Int = 1000): PairsWithStats = {
-    val banded = simhash(docs).select(col("doc_id"), col("simhash"),
-      explode(expr("transform(sequence(0, 3), j -> " +
-        "named_struct('band', j, 'bh', (simhash >> (j*16)) & 65535))")).as("bb"))
-      .select(col("doc_id"), col("simhash"), col("bb.band").as("band"), col("bb.bh").as("bh"))
+    val spark = docs.sparkSession
+    import spark.implicits._
+    // typed flatMaps, not transform/slice lambdas: Catalyst interprets
+    // higher-order functions row by row. A NULL text has no fingerprint,
+    // so no band bucket could hold it (the size join is an equi-join).
+    val banded = simhash(docs).filter(col("simhash").isNotNull).as[(Long, Long)]
+      .flatMap { case (id, sh) =>
+        Iterator.tabulate(4)(j => (id, sh, j, (sh >> (j * 16)) & 65535L)) }
+      .toDF("doc_id", "simhash", "band", "bh")
     val sized = withBucketSize(banded)
     val capped = sized.filter(col("bucket_size") > maxBucket)
       .select("band", "bh", "bucket_size").distinct()
     val pairs = sized.filter(col("bucket_size").between(2, maxBucket))
       .groupBy("band", "bh")
       .agg(sort_array(collect_list(struct(col("doc_id"), col("simhash")))).as("ms"))
-      .select(explode(expr(
-        "flatten(transform(ms, (x, i) -> " +
-          "transform(slice(ms, i + 2, size(ms)), y -> named_struct(" +
-          "'a', x.doc_id, 'b', y.doc_id, " +
-          "'hamming', bit_count(x.simhash ^ y.simhash)))))")).as("p"))
-      .filter(col("p.hamming") <= maxHamming)
-      .select(col("p.a").as("a"), col("p.b").as("b"), col("p.hamming").as("hamming"))
+      .select(col("ms.doc_id"), col("ms.simhash")).as[(Array[Long], Array[Long])]
+      .flatMap { case (ids, shs) =>
+        ids.indices.iterator.flatMap(i => (i + 1 until ids.length).iterator
+          .map(j => (ids(i), ids(j), java.lang.Long.bitCount(shs(i) ^ shs(j))))
+          .filter(_._3 <= maxHamming)) }
+      .toDF("a", "b", "hamming")
       .distinct()
     PairsWithStats(pairs, capped)
   }
@@ -969,11 +973,6 @@ object Dedup {
     if (twoPassRecommended(docs.sparkSession, window))
       exactSubstrSpansTwoPass(docs, window, g, k)
     else exactSubstrSpans(docs, window, stride = 1)
-
-  /** Regime-steering face of the rewrite, same dispatch rule. */
-  def exactSubstrCleanAuto(docs: DataFrame, window: Int = 40,
-                           g: Int = 16, k: Int = 8): DataFrame =
-    removeSpans(docs, exactSubstrSpansAuto(docs, window, g, k))
 
   /** (doc_id, pos, g) window occurrences — digests via ONE native
     * codegen'd pass per document (the interpreted transform-HOF chain it

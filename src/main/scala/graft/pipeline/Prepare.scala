@@ -6,9 +6,10 @@ import org.apache.spark.sql.functions._
 /** One-call corpus preparation — the composition a training-data team
   * actually deploys, in the order that minimizes work at 100 TB:
   *
-  *   1. quality funnel ([[TextAnalysis.filterFunnel]]) — map-only column
-  *      predicates kill the junk tail FIRST, so nothing downstream pays
-  *      for documents that were never going to ship;
+  *   1. quality funnel ([[TextAnalysis.filterFunnel]]'s rules) — one
+  *      native kernel per document kills the junk tail FIRST, returning as
+  *      soon as a rule decides, so nothing downstream pays for documents
+  *      that were never going to ship;
   *   2. full dedup ([[Dedup.dedupCorpus]]) over the survivors — exact
   *      digest groupBy, then banded near-dup, then components;
   *   3. deterministic split ([[Mixture.splitAssign]]) — the keyed-coin

@@ -203,24 +203,6 @@ object Search {
     spark.table(table)
   }
 
-  /** Restore the one-file-per-bucket layout after append growth — the
-    * [[graft.pipeline.Dedup.compactStore]] analogue for the term index
-    * (each [[addToTermIndex]] adds one file per touched bucket; a crawl
-    * appending daily degrades probe scans within weeks). Offline rewrite
-    * under the tmp/bak swap via [[graft.sources.Bucketing
-    * .compactInPlace]]: bucket pruning and the Exchange-free df
-    * aggregation live in the bucket spec, which the swap preserves —
-    * only the file count changes. */
-  def compactTermIndex(spark: SparkSession, dir: String,
-                       buckets: Int = 16): Unit = {
-    val layout = s"term@$buckets"
-    val table = Bucketing.tableName(dir, "term_index", layout)
-    require(spark.catalog.tableExists(table),
-      s"term index $table not registered — call buildTermIndex first")
-    Bucketing.compactInPlace(spark, table, Seq("term"), buckets,
-      termIndexPath(dir, layout))
-  }
-
   /** [[keywordStats]] served from a [[buildTermIndex]] table instead of
     * the corpus: identical output contract (the oracle row pins parity
     * with the scan path), but the only I/O is the query terms' buckets.

@@ -50,33 +50,27 @@ object TextAnalysis {
     * a production pipeline needs beyond a bare keep flag — a
     * `groupBy(first_fail)` of this output IS the funnel report that says
     * where the corpus is being lost, and rule order is explicit so the
-    * numbers are stable when rules are added. Pure column expressions,
-    * map-only; rule predicates are integer/string comparisons, so the
-    * attribution is exact across engines. */
-  def filterFunnel(docs: DataFrame): DataFrame = {
-    val w = split(lower(col("text")), "\\s+")
-    val nTok = size(w).cast("long")
-    docs.select(col("doc_id"), nTok.as("n_tokens"),
+    * numbers are stable when rules are added. Map-only: the rules run as
+    * one native kernel per row ([[graft.functions.FunnelFirstFail]]) and
+    * the token count as a byte scan; the rules are integer and string
+    * comparisons over `split(lower(text), '\s+')`, so the attribution is
+    * exact across engines. */
+  def filterFunnel(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"),
+        graft.functions.GraftFunctions.ws_token_count(col("text")).as("n_tokens"),
         funnelFirstFail.as("first_fail"))
       .withColumn("keep", col("first_fail").isNull)
-  }
 
   /** The funnel's first-failing-rule expression over a raw docs row —
     * shared with [[graft.pipeline.Prepare.prepareCorpus]], whose keep
     * step is `filter(funnelFirstFail.isNull)`: a doc_id-unique corpus
     * makes that filter row-identical to the semi-join on the funnel's
     * keep ids, without re-joining the corpus against its own projection
-    * (guide §2.4 — remove shuffles outright). */
-  private[pipeline] def funnelFirstFail: Column = {
-    val w = split(lower(col("text")), "\\s+")
-    val nTok = size(w).cast("long")
-    val nChars = length(col("text")).cast("long")
-    val nDistinct = size(array_distinct(w)).cast("long")
-    when(nTok < 20, "too_short")
-      .when(nChars > 500, "too_long")
-      .when(nDistinct * 3 < nTok, "low_diversity")
-      .when(col("lang") =!= "en", "non_english")
-  }
+    * (guide §2.4 — remove shuffles outright). Rules, in order:
+    * `too_short` (< 20 tokens), `too_long` (> 500 chars), `low_diversity`
+    * (distinct tokens × 3 < tokens), `non_english` (lang ≠ 'en'). */
+  private[pipeline] def funnelFirstFail: Column =
+    graft.functions.GraftFunctions.funnel_first_fail(col("text"), col("lang"))
 
   /** Salient terms per document — keyword extraction with an INTEGER-only
     * ordering (tf desc, then df asc, then term), so the ranking is exact

@@ -110,11 +110,6 @@ object SparqlHttp {
     }
   }
 
-  /** First-binding convenience over [[sniffTerms]]. */
-  def sniffTerm(endpoint: String, query: String,
-                varName: String): Option[(String, Option[String])] =
-    sniffTerms(endpoint, query, varName).headOption
-
   private val castWarned = new java.util.concurrent.atomic.AtomicBoolean(false)
 
   /** Lexical → Spark value under the declared schema type. DEFENSIVE: the

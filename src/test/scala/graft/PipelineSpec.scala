@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.pipeline._
 
@@ -290,6 +290,103 @@ class PipelineSpec extends SparkTestBase {
     val joined = hof.join(native, "doc_id")
     assert(joined.count() == docs.count())
     assert(joined.filter(not(col("expected") === col("got"))).count() == 0)
+  }
+
+  /** The funnel as the `when` chain over `split(lower(text), '\s+')` that
+    * the native kernel replaced: the reference its rows must equal. */
+  private def funnelChain: Column = {
+    val w = split(lower(col("text")), "\\s+")
+    val nTok = size(w).cast("long")
+    val nChars = length(col("text")).cast("long")
+    val nDistinct = size(array_distinct(w)).cast("long")
+    when(nTok < 20, "too_short")
+      .when(nChars > 500, "too_long")
+      .when(nDistinct * 3 < nTok, "low_diversity")
+      .when(col("lang") =!= "en", "non_english")
+  }
+
+  /** A corpus that reaches every funnel rule: token counts around 20,
+    * lengths past 500 chars, small vocabularies with case variants, all
+    * six `\s` bytes and U+00A0 as separators, mixed languages and NULLs. */
+  private lazy val funnelCorpus: DataFrame = {
+    val s = spark
+    import s.implicits._
+    val rnd = new scala.util.Random(11)
+    val seps = Seq(" ", " ", " ", "  ", "\t", "\n", "\u000B", "\f", "\r", " \r\n", "\u00a0")
+    // half the rows are all ASCII: `lower` takes its byte-wise path there
+    val alphabets = Seq("abyz",
+      "abz\u00e4\u0130\u00df\u03a3\u03c3\u00e9\u65e5\ua7c0\ua7c1")
+    def word(letters: String): String =
+      Seq.fill(1 + rnd.nextInt(16))(letters(rnd.nextInt(letters.length))).mkString
+    // case variants of one word are distinct tokens until `lower` merges them
+    def variant(w: String): String = w.map(c => if (rnd.nextInt(4) == 0) c.toUpper else c)
+    val generated = (1 to 3000).map { id =>
+      val letters = alphabets(rnd.nextInt(2))
+      val vocab = Seq.fill(Seq(2, 6, 12, 200)(rnd.nextInt(4)))(word(letters))
+      val toks = Seq.fill(rnd.nextInt(48))(variant(vocab(rnd.nextInt(vocab.length))))
+      val body = toks.map(_ + seps(rnd.nextInt(seps.length))).mkString
+      val text = (if (rnd.nextInt(8) == 0) seps(rnd.nextInt(seps.length)) else "") + body
+      val lang = Seq("en", "en", "en", "de", null)(rnd.nextInt(5))
+      (id.toLong, if (rnd.nextInt(300) == 0) null else text, lang)
+    }
+    def distinctWords(n: Int, tag: String) = (1 to n).map(i => s"$tag$i")
+    val twenty = distinctWords(20, "w").mkString(" ")
+    // 20 tokens of 24 chars and 19 spaces are 499 chars; pad the last one
+    def charsLong(chars: Int, pad: Char) =
+      distinctWords(20, "m").map(_.padTo(24, pad)).mkString(" ").padTo(chars, pad)
+    // 21 tokens, 7 distinct as written but 6 once `lower` merges a pair
+    def mergedByLower(a: String, b: String) =
+      Seq.fill(3)(Seq(a, b) ++ distinctWords(5, "p")).flatten.mkString(" ")
+    val edge = Seq(
+      " " + twenty, twenty + " ", twenty.replace(" ", "  "), "", " ", "\t\n",
+      distinctWords(20, "t").mkString("\t"), distinctWords(20, "n").mkString("\n"),
+      distinctWords(20, "v").mkString("\u000B"), distinctWords(20, "f").mkString("\f"),
+      distinctWords(20, "r").mkString("\r"), distinctWords(20, "s").mkString(" "),
+      distinctWords(40, "b").mkString("\u00a0"),  // one token
+      distinctWords(40, "c").grouped(2).map(_.mkString("\u00a0")).mkString(" "),
+      mergedByLower("Ab", "aB"),  // all ASCII
+      mergedByLower("\u00e4b", "\u00c4b"),  // Ä / ä
+      mergedByLower("\u0130x", "i\u0307x"),  // İ lowers to i + U+0307
+      // U+A7C0 lowers to U+A7C1 under ICU case mapping, not under the JVM's
+      mergedByLower("\ua7c0q", "\ua7c1q"),
+      distinctWords(19, "e").mkString(" "), distinctWords(20, "e").mkString(" "),
+      distinctWords(21, "e").mkString(" "),
+      charsLong(500, 'x'), charsLong(501, 'x'),
+      charsLong(500, '\u00e9'), charsLong(501, '\u65e5'),
+      // distinct × 3 == tokens passes; one more repeat fails
+      Seq.fill(3)(distinctWords(7, "d")).flatten.mkString(" "),
+      (Seq.fill(3)(distinctWords(7, "d")).flatten :+ "d1").mkString(" ")
+    ).zipWithIndex.flatMap { case (t, i) =>
+      Seq((-10L * i - 1, t, "en"), (-10L * i - 2, t, "de")) }
+    val nulls = Seq[(Long, String, String)]((-1001L, null, "en"), (-1002L, null, "de"),
+      (-1003L, null, null), (-1004L, twenty + " x", null), (-1005L, twenty + " x", "de"))
+    // bytes that are not UTF-8: a truncated lead byte before a space
+    val invalid = spark.range(1).select(lit(-2001L).as("doc_id"),
+      expr("cast(unhex('41c320e08042' || repeat('20e2', 24)) as string)").as("text"),
+      lit("en").as("lang"))
+    (generated ++ edge ++ nulls).toDF("doc_id", "text", "lang").unionByName(invalid)
+  }
+
+  test("native funnel_first_fail equals the when chain on every row") {
+    val expected = funnelCorpus.select(col("doc_id"), funnelChain.as("want"),
+      size(split(lower(col("text")), "\\s+")).cast("long").as("want_n"))
+    val coverage = expected.groupBy("want").count().collect()
+      .map(r => Option(r.getString(0)).getOrElse("kept") -> r.getLong(1)).toMap
+    assert(Seq("too_short", "too_long", "low_diversity", "non_english", "kept")
+      .forall(r => coverage.getOrElse(r, 0L) >= 5), s"rules not all reached: $coverage")
+    // generated code and the interpreted eval path must both agree
+    for (wholeStage <- Seq("true", "false")) {
+      spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+      try {
+        val got = TextAnalysis.filterFunnel(funnelCorpus)
+        val bad = expected.join(got, "doc_id").filter(
+          !(col("want") <=> col("first_fail")) || !(col("want_n") <=> col("n_tokens")) ||
+            !(col("keep") === col("want").isNull))
+        assert(got.count() == funnelCorpus.count())
+        assert(bad.count() == 0, s"wholeStage=$wholeStage mismatches:\n" +
+          bad.limit(10).collect().mkString("\n"))
+      } finally spark.conf.unset("spark.sql.codegen.wholeStage")
+    }
   }
 
   test("ivfpq ADC ranks a planted near-duplicate first") {
@@ -886,6 +983,54 @@ class PipelineSpec extends SparkTestBase {
       a / 100 == j && b / 100 == j && a % 7 != b % 7 }
     assert(bandZeroOnly(7) && !bandZeroOnly(8))
     assert(!got.queryExecution.executedPlan.toString.contains("lambdafunction"))
+  }
+
+  test("simhash pairs: typed banding and expansion equal the transform/slice expressions") {
+    val s = spark
+    import s.implicits._
+    val cap = 8
+    val base = (1 to 40).map(i => s"word$i")
+    // cluster j holds j texts that differ in one trailing token (0 to 6
+    // members), then identical clones at the cap and one past it
+    val near = (0 to 6).flatMap(j => (0 until j).map(i =>
+      (100L * j + i, (base.map(_ + s"c$j") :+ s"tail$i").mkString(" "))))
+    val clones = Seq(cap, cap + 1).zipWithIndex.flatMap { case (n, k) =>
+      (0 until n).map(i => (1000L * (k + 1) + i, base.mkString(" ") + s" clone$k")) }
+    val docs = (near ++ clones :+ (9999L, null)).toDF("doc_id", "text")
+    for (maxHamming <- Seq(3, 16)) {
+      val got = Dedup.simhashNearDupsWithStats(docs, maxHamming, cap)
+      val banded = Dedup.simhash(docs).select(col("doc_id"), col("simhash"),
+        explode(expr("transform(sequence(0, 3), j -> " +
+          "named_struct('band', j, 'bh', (simhash >> (j*16)) & 65535))")).as("bb"))
+        .select(col("doc_id"), col("simhash"), col("bb.band").as("band"),
+          col("bb.bh").as("bh"))
+      val sized = banded.join(
+        banded.groupBy("band", "bh").agg(count(lit(1)).as("bucket_size")), Seq("band", "bh"))
+      val wantCapped = sized.filter(col("bucket_size") > cap)
+        .select("band", "bh", "bucket_size").distinct()
+      val want = sized.filter(col("bucket_size").between(2, cap))
+        .groupBy("band", "bh")
+        .agg(sort_array(collect_list(struct(col("doc_id"), col("simhash")))).as("ms"))
+        .select(explode(expr(
+          "flatten(transform(ms, (x, i) -> " +
+            "transform(slice(ms, i + 2, size(ms)), y -> named_struct(" +
+            "'a', x.doc_id, 'b', y.doc_id, " +
+            "'hamming', bit_count(x.simhash ^ y.simhash)))))")).as("p"))
+        .filter(col("p.hamming") <= maxHamming)
+        .select(col("p.a").as("a"), col("p.b").as("b"), col("p.hamming").as("hamming"))
+        .distinct()
+      assert(got.pairs.schema.map(_.dataType) == want.schema.map(_.dataType))
+      val rows = got.pairs.as[(Long, Long, Int)].collect()
+      assert(rows.length == rows.distinct.length)
+      assert(rows.toSet == want.as[(Long, Long, Int)].collect().toSet, s"maxHamming=$maxHamming")
+      assert(got.cappedBuckets.collect().map(_.toSeq).toSet ==
+        wantCapped.collect().map(_.toSeq).toSet)
+      assert(!got.pairs.queryExecution.executedPlan.toString.contains("lambdafunction"))
+    }
+    // the clone bucket at the cap pairs up; the one past it is capped
+    val pairs = Dedup.simhashNearDups(docs, 3, cap).as[(Long, Long, Int)].collect()
+    assert(pairs.count(p => p._1 / 1000 == 1) == cap * (cap - 1) / 2)
+    assert(!pairs.exists(_._1 / 1000 == 2))
   }
 
   test("store admits are idempotent; compaction preserves verdicts") {

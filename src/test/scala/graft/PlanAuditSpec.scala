@@ -434,6 +434,31 @@ class PlanAuditSpec extends SparkTestBase {
       s"native NfcNormalize must stay inside codegen:\n$plan")
   }
 
+  test("the quality funnel plans as one native kernel: no split, no array_distinct") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val sc = spark.sparkContext
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    // every SQL execution the calls start, cache fills and checkpoints included
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.add(s.physicalPlanDescription)
+        case _ =>
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      graft.pipeline.Prepare.prepareCorpus(t("documents")).collect()
+      graft.pipeline.TextAnalysis.filterFunnel(t("documents")).collect()
+      org.apache.spark.TestBus.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val all = plans.asScala.toSeq
+    all.foreach(p => assert(!p.contains("array_distinct") && !p.contains("split("),
+      s"the funnel runs as an array-expression chain:\n$p"))
+    assert(all.exists(_.contains("funnelfirstfail(")), all.mkString("\n"))
+  }
+
   test("corpusDiff is a single digest join: no window, no cartesian") {
     val docs = t("documents")
     val plan = executed(graft.pipeline.Prepare.corpusDiff(
