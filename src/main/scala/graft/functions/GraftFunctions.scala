@@ -479,27 +479,30 @@ object GraftFunctions {
     * value-identical to the `when` chain over `w = split(lower(text),
     * '\s+')`: `too_short` (|w| < 20), `too_long` (length(text) > 500),
     * `low_diversity` (distinct(w) × 3 < |w|), `non_english` (lang ≠ 'en');
-    * NULL when the document is kept. The text is lowered exactly as
-    * Spark's `lower` does, into a reused buffer ([[lowerInto]]; `icuLower`
-    * is the session's ICU case-mapping setting, which `lower` reads too:
-    * JVM and ICU case tables disagree on some code points), and cut into
-    * byte spans by [[wsTokens]]. Each rule returns as soon as it decides:
-    * distinct tokens are counted only past the first two rules, and only
-    * until the count clears the threshold.
-    * The distinct set compares token bytes exactly, so a hash collision
-    * cannot change a count. A NULL text decides none of the text rules and
-    * a NULL lang passes the last one, as the chain's NULL comparisons do
-    * under ANSI `size`. Called from generated code. */
+    * NULL when the document is kept. The first two rules read the raw
+    * text: lowering maps no character to or from the six whitespace bytes,
+    * so the token count scans the raw bytes and stops at 20, and `length`
+    * counts the original characters. Only a text that passes both (at most
+    * 500 chars) is lowered, with Spark's own `lower` (`icuLower` is the
+    * session's ICU case-mapping setting, which `lower` reads too: JVM and
+    * ICU case tables disagree on some code points), and its tokens cut in
+    * place by [[wsTokens]]; so the scratch arrays stay a few KB. Distinct
+    * tokens are counted only until the count clears the threshold, in a set
+    * that compares token bytes exactly, so a hash collision cannot change a
+    * count. A NULL text decides none of the text rules and a NULL lang
+    * passes the last one, as the chain's NULL comparisons do under ANSI
+    * `size`. Called from generated code. */
   def funnelFirstFail(text: org.apache.spark.unsafe.types.UTF8String,
                       lang: org.apache.spark.unsafe.types.UTF8String,
                       icuLower: Boolean): org.apache.spark.unsafe.types.UTF8String = {
     if (text != null) {
-      val len = lowerInto(text, icuLower)
-      val low = LowerBufLocal.get()
-      val n = wsTokens(low, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, len,
-        record = true)
-      if (n < 20) return TooShort
+      if (wsTokens(text.getBaseObject, text.getBaseOffset, text.numBytes(), 20,
+          record = false) < 20) return TooShort
       if (text.numChars() > 500) return TooLong
+      val low = org.apache.spark.sql.catalyst.util.CollationSupport.Lower.exec(text,
+        org.apache.spark.sql.catalyst.util.CollationFactory.UTF8_BINARY_COLLATION_ID, icuLower)
+      val n = wsTokens(low.getBaseObject, low.getBaseOffset, low.numBytes(), Int.MaxValue,
+        record = true)
       if (distinctTokensBelow(low, n, (n + 2) / 3)) return LowDiversity
     }
     if (lang != null && !lang.equals(English)) NonEnglish else null
@@ -511,38 +514,12 @@ object GraftFunctions {
       FunnelFirstFail(GraftBridge.expression(text), GraftBridge.expression(lang)))
   }
 
-  /** `lower(text)`'s UTF-8 bytes into the thread-local [[LowerBufLocal]]
-    * (grown as needed); returns their length. Both case mappings lower
-    * ASCII text byte by byte (A–Z only), so only other text pays for
-    * Spark's `lower` and its copy. */
-  private def lowerInto(text: org.apache.spark.unsafe.types.UTF8String,
-                        icuLower: Boolean): Int = {
-    val ascii = text.isFullAscii
-    val low = if (ascii) text
-      else org.apache.spark.sql.catalyst.util.CollationSupport.Lower.exec(text,
-        org.apache.spark.sql.catalyst.util.CollationFactory.UTF8_BINARY_COLLATION_ID, icuLower)
-    val len = low.numBytes()
-    var buf = LowerBufLocal.get()
-    if (buf.length < len) {
-      buf = new Array[Byte](math.max(len, buf.length * 2))
-      LowerBufLocal.set(buf)
-    }
-    low.writeToMemory(buf, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET)
-    if (ascii) {
-      var i = 0
-      while (i < len) {
-        if (buf(i) >= 'A' && buf(i) <= 'Z') buf(i) = (buf(i) + 32).toByte
-        i += 1
-      }
-    }
-    len
-  }
-
   /** `size(split(lower(text), '\s+'))` as a byte scan: lowering maps no
     * character to or from the six ASCII whitespace bytes, so the raw text
     * has the same token count. Called from generated code. */
   def wsTokenCount(text: org.apache.spark.unsafe.types.UTF8String): Long =
-    wsTokens(text.getBaseObject, text.getBaseOffset, text.numBytes(), record = false).toLong
+    wsTokens(text.getBaseObject, text.getBaseOffset, text.numBytes(), Int.MaxValue,
+      record = false).toLong
 
   def ws_token_count(text: Column): Column = {
     import org.apache.spark.sql.GraftBridge
@@ -552,17 +529,19 @@ object GraftFunctions {
   @inline private def isWs(b: Byte): Boolean = b == ' ' || (b >= 9 && b <= 13)
 
   /** Token count of `split(s, '\s+', -1)` over the `len` bytes at (base,
-    * off): cut at maximal runs of the six ASCII bytes Java's `\s` matches
-    * (` \t\n\x0B\f\r`), leading and trailing empty tokens kept, `""` one
-    * token. UTF-8 lead and continuation bytes are ≥ 0x80, so a multi-byte
-    * character is never cut. With `record`, token i's byte span from `off`
-    * is [cuts(2i), cuts(2i+1)) in the thread-local [[CutsLocal]]. */
-  private def wsTokens(base: AnyRef, off: Long, len: Int, record: Boolean): Int = {
+    * off), stopping once it reaches `max`: cut at maximal runs of the six
+    * ASCII bytes Java's `\s` matches (` \t\n\x0B\f\r`), leading and
+    * trailing empty tokens kept, `""` one token. UTF-8 lead and
+    * continuation bytes are ≥ 0x80, so a multi-byte character is never cut.
+    * With `record`, token i's byte span from `off` is [cuts(2i),
+    * cuts(2i+1)) in the thread-local [[CutsLocal]]. */
+  private def wsTokens(base: AnyRef, off: Long, len: Int, max: Int,
+                       record: Boolean): Int = {
     var cuts = CutsLocal.get()
     var n = 0
     var start = 0
     var i = 0
-    while (i <= len) {
+    while (i <= len && n < max) {
       if (i == len || isWs(org.apache.spark.unsafe.Platform.getByte(base, off + i))) {
         if (record) {
           if (2 * n + 2 > cuts.length) {
@@ -581,11 +560,14 @@ object GraftFunctions {
     n
   }
 
-  /** Whether the first `n` recorded tokens of `b` hold fewer than `need`
+  /** Whether the first `n` recorded tokens of `s` hold fewer than `need`
     * distinct byte strings; stops at the `need`-th. An open-addressing set
     * of token indices (0 = empty) in the thread-local [[SlotsLocal]],
     * sized for ≤ 0.5 load at `need` entries. */
-  private def distinctTokensBelow(b: Array[Byte], n: Int, need: Int): Boolean = {
+  private def distinctTokensBelow(s: org.apache.spark.unsafe.types.UTF8String,
+                                  n: Int, need: Int): Boolean = {
+    val base = s.getBaseObject
+    val off = s.getBaseOffset
     val cuts = CutsLocal.get()
     var cap = 16
     while (cap < 2 * need) cap <<= 1
@@ -597,13 +579,15 @@ object GraftFunctions {
     var t = 0
     while (t < n && distinct < need) {
       val from = cuts(2 * t)
-      val until = cuts(2 * t + 1)
-      var idx = org.apache.spark.unsafe.hash.Murmur3_x86_32.hashUnsafeBytes(b,
-        org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + from, until - from, 42) & mask
+      val len = cuts(2 * t + 1) - from
+      var idx = org.apache.spark.unsafe.hash.Murmur3_x86_32.hashUnsafeBytes(base,
+        off + from, len, 42) & mask
       var found = false
       while (!found && slots(idx) != 0) {
         val u = slots(idx) - 1
-        found = java.util.Arrays.equals(b, cuts(2 * u), cuts(2 * u + 1), b, from, until)
+        found = cuts(2 * u + 1) - cuts(2 * u) == len &&
+          org.apache.spark.unsafe.array.ByteArrayMethods.arrayEquals(
+            base, off + cuts(2 * u), base, off + from, len)
         idx = (idx + 1) & mask
       }
       if (!found) { slots(idx) = t + 1; distinct += 1 }
@@ -612,9 +596,6 @@ object GraftFunctions {
     distinct < need
   }
 
-  private val LowerBufLocal = new ThreadLocal[Array[Byte]] {
-    override def initialValue(): Array[Byte] = new Array[Byte](1024)
-  }
   private val CutsLocal = new ThreadLocal[Array[Int]] {
     override def initialValue(): Array[Int] = new Array[Int](256)
   }

@@ -225,27 +225,24 @@ object Dedup {
     * tool for identical text. */
   def simhashNearDupsWithStats(docs: DataFrame, maxHamming: Int = 3,
                                maxBucket: Int = 1000): PairsWithStats = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    // typed flatMaps, not transform/slice lambdas: Catalyst interprets
-    // higher-order functions row by row. A NULL text has no fingerprint,
-    // so no band bucket could hold it (the size join is an equi-join).
-    val banded = simhash(docs).filter(col("simhash").isNotNull).as[(Long, Long)]
-      .flatMap { case (id, sh) =>
-        Iterator.tabulate(4)(j => (id, sh, j, (sh >> (j * 16)) & 65535L)) }
-      .toDF("doc_id", "simhash", "band", "bh")
+    // plain codegen'd expressions, not transform/slice lambdas: Catalyst
+    // interprets higher-order functions row by row
+    val banded = simhash(docs).select(col("doc_id"), col("simhash"),
+        explode(array((0 until 4).map(j => struct(lit(j).as("band"),
+          shiftright(col("simhash"), j * 16).bitwiseAND(65535L).as("bh"))): _*)).as("bb"))
+      .select(col("doc_id"), col("simhash"), col("bb.band").as("band"), col("bb.bh").as("bh"))
     val sized = withBucketSize(banded)
     val capped = sized.filter(col("bucket_size") > maxBucket)
       .select("band", "bh", "bucket_size").distinct()
+    // each member x against the members sorted after it
     val pairs = sized.filter(col("bucket_size").between(2, maxBucket))
       .groupBy("band", "bh")
       .agg(sort_array(collect_list(struct(col("doc_id"), col("simhash")))).as("ms"))
-      .select(col("ms.doc_id"), col("ms.simhash")).as[(Array[Long], Array[Long])]
-      .flatMap { case (ids, shs) =>
-        ids.indices.iterator.flatMap(i => (i + 1 until ids.length).iterator
-          .map(j => (ids(i), ids(j), java.lang.Long.bitCount(shs(i) ^ shs(j))))
-          .filter(_._3 <= maxHamming)) }
-      .toDF("a", "b", "hamming")
+      .select(col("ms"), posexplode(col("ms")).as(Seq("i", "x")))
+      .select(col("x"), explode(slice(col("ms"), col("i") + 2, size(col("ms")))).as("y"))
+      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"),
+        bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))).as("hamming"))
+      .filter(col("hamming") <= maxHamming)
       .distinct()
     PairsWithStats(pairs, capped)
   }

@@ -313,7 +313,7 @@ class PipelineSpec extends SparkTestBase {
     import s.implicits._
     val rnd = new scala.util.Random(11)
     val seps = Seq(" ", " ", " ", "  ", "\t", "\n", "\u000B", "\f", "\r", " \r\n", "\u00a0")
-    // half the rows are all ASCII: `lower` takes its byte-wise path there
+    // half the rows are all ASCII, half mix in letters that lowering rewrites
     val alphabets = Seq("abyz",
       "abz\u00e4\u0130\u00df\u03a3\u03c3\u00e9\u65e5\ua7c0\ua7c1")
     def word(letters: String): String =
@@ -353,6 +353,10 @@ class PipelineSpec extends SparkTestBase {
       distinctWords(21, "e").mkString(" "),
       charsLong(500, 'x'), charsLong(501, 'x'),
       charsLong(500, '\u00e9'), charsLong(501, '\u65e5'),
+      // past 500 chars: too few tokens still fails first; many tokens, or
+      // a long first token, fail too_long before any lowering
+      distinctWords(10, "L").map(_.padTo(90, 'Z')).mkString(" "),
+      distinctWords(3000, "G").mkString(" "), "Q" * 800 + " " + twenty,
       // distinct × 3 == tokens passes; one more repeat fails
       Seq.fill(3)(distinctWords(7, "d")).flatten.mkString(" "),
       (Seq.fill(3)(distinctWords(7, "d")).flatten :+ "d1").mkString(" ")
@@ -364,7 +368,10 @@ class PipelineSpec extends SparkTestBase {
     val invalid = spark.range(1).select(lit(-2001L).as("doc_id"),
       expr("cast(unhex('41c320e08042' || repeat('20e2', 24)) as string)").as("text"),
       lit("en").as("lang"))
-    (generated ++ edge ++ nulls).toDF("doc_id", "text", "lang").unionByName(invalid)
+    // an RDD, not a local Seq: the optimizer folds projections over a
+    // LocalRelation by interpreted eval, so no generated code would run
+    spark.sparkContext.parallelize(generated ++ edge ++ nulls, 4)
+      .toDF("doc_id", "text", "lang").unionByName(invalid)
   }
 
   test("native funnel_first_fail equals the when chain on every row") {
@@ -374,19 +381,43 @@ class PipelineSpec extends SparkTestBase {
       .map(r => Option(r.getString(0)).getOrElse("kept") -> r.getLong(1)).toMap
     assert(Seq("too_short", "too_long", "low_diversity", "non_english", "kept")
       .forall(r => coverage.getOrElse(r, 0L) >= 5), s"rules not all reached: $coverage")
-    // generated code and the interpreted eval path must both agree
-    for (wholeStage <- Seq("true", "false")) {
+    // generated code (whole-stage and per-expression) and the interpreted
+    // eval path must all agree: with whole-stage codegen off, projections
+    // and filters still compile their expressions unless the factory mode
+    // is NO_CODEGEN
+    for ((wholeStage, factory) <- Seq("true" -> "FALLBACK", "false" -> "FALLBACK",
+        "false" -> "NO_CODEGEN")) {
       spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+      spark.conf.set("spark.sql.codegen.factoryMode", factory)
       try {
         val got = TextAnalysis.filterFunnel(funnelCorpus)
         val bad = expected.join(got, "doc_id").filter(
           !(col("want") <=> col("first_fail")) || !(col("want_n") <=> col("n_tokens")) ||
             !(col("keep") === col("want").isNull))
         assert(got.count() == funnelCorpus.count())
-        assert(bad.count() == 0, s"wholeStage=$wholeStage mismatches:\n" +
+        assert(bad.count() == 0, s"wholeStage=$wholeStage factoryMode=$factory mismatches:\n" +
           bad.limit(10).collect().mkString("\n"))
-      } finally spark.conf.unset("spark.sql.codegen.wholeStage")
+      } finally {
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+      }
     }
+    // and each expression's own eval, called on the raw bytes of every row
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.StringType
+    import org.apache.spark.unsafe.types.UTF8String
+    val rows = expected.join(funnelCorpus, "doc_id")
+      .select(col("text").cast("binary"), col("lang"), col("want"), col("want_n")).collect()
+    val evalBad = rows.filter { r =>
+      val text = Literal(Option(r.getAs[Array[Byte]](0)).map(UTF8String.fromBytes).orNull,
+        StringType)
+      val lang = Literal(Option(r.getString(1)).map(UTF8String.fromString).orNull, StringType)
+      val first = graft.functions.FunnelFirstFail(text, lang).eval()
+      val n = graft.functions.WsTokenCount(text).eval()
+      Option(first).map(_.toString) != Option(r.getString(2)) || n != r.get(3)
+    }
+    assert(rows.length == funnelCorpus.count())
+    assert(evalBad.isEmpty, "eval mismatches:\n" + evalBad.take(10).mkString("\n"))
   }
 
   test("ivfpq ADC ranks a planted near-duplicate first") {
@@ -985,7 +1016,7 @@ class PipelineSpec extends SparkTestBase {
     assert(!got.queryExecution.executedPlan.toString.contains("lambdafunction"))
   }
 
-  test("simhash pairs: typed banding and expansion equal the transform/slice expressions") {
+  test("simhash pairs: lambda-free banding and expansion equal the transform/slice expressions") {
     val s = spark
     import s.implicits._
     val cap = 8
