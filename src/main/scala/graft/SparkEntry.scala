@@ -851,7 +851,7 @@ object SparkEntry {
     "sparql_path_closure" -> ((s, d) => graft(s, d).sparql(SPARQL_PATH_CLOSURE)),
     // deep-chain closure: the catalog graph has diameter ~3, so the
     // hybrid iteration's doubling branch (Compiler.closure, rounds past
-    // graft.path.doublingAfter=4) never runs under the driver gate on the
+    // its first 4 semi-naive rounds) never runs under the driver gate on the
     // other path rows. This fixture derives a diameter-256 successor
     // chain from the 257 smallest orderkeys and closes it through the
     // SPARQL path machinery: semi-naive reaches depth 5 in 4 rounds, then

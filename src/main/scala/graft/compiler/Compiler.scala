@@ -740,7 +740,7 @@ final class Compiler(catalog: Catalog, load: String => DataFrame,
   }
 
   /** Transitive closure, HYBRID semi-naive → path doubling. The first
-    * `graft.path.doublingAfter` rounds are classic semi-naive (frontier ⋈
+    * 4 rounds (`switchAfter`) are classic semi-naive (frontier ⋈
     * base edges): on the shallow graphs real catalogs produce (diameter
     * 2-5), every round's right side is the small fixed edge set and the
     * fixpoint lands before the switch — measured A/B at sf0.1, pure
@@ -798,7 +798,7 @@ final class Compiler(catalog: Catalog, load: String => DataFrame,
     // without it the except/union cross-references grow the logical plan
     // exponentially with depth (plan stringification alone OOMs past ~25
     // rounds). The follow-up isEmpty probe only touches the cached blocks.
-    val switchAfter = spark.conf.get("graft.path.doublingAfter", "4").toInt
+    val switchAfter = 4
     // NOTE (r21, measured dead end): batching TWO doubling steps per
     // materialization barrier (step 2 lazily referencing step 1's
     // frontier; one checkpoint + one emptiness probe per batch) is

@@ -2,10 +2,10 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-/** SparkSessionExtensions hook: makes graft's native expressions available
-  * to pure-SQL users:
+/** SparkSessionExtensions hook: makes graft's native kernels
+  * ([[GraftFunctions.sqlFunctions]]) available to pure-SQL users:
   *
   * {{{
   * SparkSession.builder()
@@ -16,83 +16,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
   * }}}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("minhash_bands"),
-      new ExpressionInfo(classOf[MinHashBands].getName, "minhash_bands"),
-      (children: Seq[Expression]) => {
-        def intArg(i: Int, default: Int): Int = children.lift(i) match {
-          case Some(Literal(v: Int, _)) => v
-          case Some(other) => throw new IllegalArgumentException(
-            s"minhash_bands argument ${i + 1} must be an integer literal, got $other")
-          case None => default
-        }
-        MinHashBands(children.head, intArg(1, 32), intArg(2, 8))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("shingle_ids"),
-      new ExpressionInfo(classOf[ShingleIds].getName, "shingle_ids"),
-      (children: Seq[Expression]) => {
-        val k = children.lift(1) match {
-          case Some(Literal(v: Int, _)) => v
-          case Some(other) => throw new IllegalArgumentException(
-            s"shingle_ids argument 2 must be an integer literal, got $other")
-          case None => 3
-        }
-        ShingleIds(children.head, k)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-      (children: Seq[Expression]) => SimHash64(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("simhash_md5"),
-      new ExpressionInfo(classOf[SimHashMd5].getName, "simhash_md5"),
-      (children: Seq[Expression]) => SimHashMd5(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("hashed_quality"),
-      new ExpressionInfo(classOf[HashedQuality].getName, "hashed_quality"),
-      (children: Seq[Expression]) => {
-        val buckets = children.lift(1) match {
-          case Some(Literal(v: Int, _)) => v
-          case Some(other) => throw new IllegalArgumentException(
-            s"hashed_quality argument 2 must be an integer literal, got $other")
-          case None => 1024
-        }
-        HashedQuality(children.head, buckets)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("nfc_normalize"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "nfc_normalize"),
-      (children: Seq[Expression]) => NfcNormalize(children.head)))
-    // blocklist_terms(text, 'a', 'b', ...): varargs of string literals
-    // compile into one cached Aho–Corasick automaton
-    ext.injectFunction((
-      new FunctionIdentifier("blocklist_terms"),
-      new ExpressionInfo(classOf[BlocklistTerms].getName, "blocklist_terms"),
-      (children: Seq[Expression]) => {
-        val terms = children.tail.map {
-          case Literal(v: org.apache.spark.unsafe.types.UTF8String, _) =>
-            v.toString
-          case other => throw new IllegalArgumentException(
-            s"blocklist_terms terms must be string literals, got $other")
-        }
-        BlocklistTerms(children.head, terms)
-      }))
-    // topk_ids(score, id, k) aggregate: ids of the k highest scores
-    // (score DESC, id ASC), bounded map-side heaps
-    ext.injectFunction((
-      new FunctionIdentifier("topk_ids"),
-      new ExpressionInfo(classOf[TopKIds].getName, "topk_ids"),
-      (children: Seq[Expression]) => {
-        val k = children.lift(2) match {
-          case Some(Literal(v: Int, _)) => v
-          case Some(other) => throw new IllegalArgumentException(
-            s"topk_ids argument 3 must be an integer literal, got $other")
-          case None => throw new IllegalArgumentException(
-            "topk_ids needs (score, id, k)")
-        }
-        TopKIds(children.head, children(1), k)
-      }))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftFunctions.sqlFunctions.foreach { case (name, build) =>
+      ext.injectFunction((new FunctionIdentifier(name),
+        new ExpressionInfo(GraftFunctions.getClass.getName.stripSuffix("$"), name), build))
+    }
 }

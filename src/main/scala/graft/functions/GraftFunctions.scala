@@ -1,25 +1,54 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.util.{ArrayData, CollationFactory, CollationSupport, GenericArrayData}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expressions for pipeline hot paths.
+/** Native kernels for pipeline hot paths.
   *
   * Spark's higher-order array functions (`transform`/`aggregate`/
   * `array_min`) are CodegenFallback — every lambda application is an
   * interpreted call with boxing. For MinHash (numPerm × |shingles| hash
   * evaluations per row) that interpretive overhead dominates the whole
-  * dedup pipeline, so the signature→band computation is one native
-  * expression with a primitive long loop and real codegen: the loop below
-  * runs inside whole-stage codegen via a static method call, no boxing.
+  * dedup pipeline, so the signature→band computation is one static helper
+  * with a primitive long loop. Each snake_case builder below is a
+  * [[kernel]] call of its helper: generated code (whole-stage included)
+  * calls the helper directly, no boxing.
   */
 object GraftFunctions {
+
+  /** `GraftFunctions.<method>(args…)` as a column — Spark's own
+    * `StaticInvoke`: a direct static call in generated code, a reflective
+    * one in interpreted eval. `inputTypes` are the method's parameter
+    * types, so the analyzer casts implicitly and refuses what it cannot
+    * cast; a NULL argument gives NULL without a call unless
+    * `propagateNull` is off. */
+  private def kernel(method: String, dataType: DataType, args: Seq[Column],
+                     inputTypes: Seq[DataType], propagateNull: Boolean = true,
+                     returnNullable: Boolean = false): Column =
+    GraftBridge.staticInvoke(GraftFunctions.getClass, dataType, method, args,
+      inputTypes, propagateNull, returnNullable)
+
+  private val Longs = ArrayType(LongType, containsNull = false)
+
+  /** A Catalyst literal as a column: resolved as built, unlike `lit`'s
+    * column node, so a kernel's expression also evaluates unanalyzed. */
+  private def literal(v: Any): Column = GraftBridge.column(Literal(v))
+
+  /** The session's `spark.sql.icu.caseMappings.enabled` as a literal, read
+    * when a lowering builder's column is built — the case mapping Spark's
+    * own `lower` uses in that session. */
+  private def icuLower: Column = literal(SQLConf.get.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED))
+
+  /** `lower(text)` exactly as Spark's: JVM and ICU case tables disagree on
+    * some code points (U+A7C0, U+1C89, U+10570, …), and `icuLower` picks
+    * the one the session's `lower` uses. */
+  private def lowered(text: UTF8String, icuLower: Boolean): UTF8String =
+    CollationSupport.Lower.exec(text, CollationFactory.UTF8_BINARY_COLLATION_ID, icuLower)
 
   /** splitmix64 finalizer — the permutation family for MinHash. */
   @inline def mix64(z0: Long): Long = {
@@ -58,20 +87,59 @@ object GraftFunctions {
     new GenericArrayData(out)
   }
 
-  /** Register SQL-callable functions on an existing session (cluster-wide
-    * registration goes through [[GraftExtensions]] via
-    * spark.sql.extensions). */
+  /** The SQL surface: name → builder over the call's argument
+    * expressions. [[GraftExtensions]] injects it into new sessions (via
+    * `spark.sql.extensions`) and [[register]] adds it to a running one. */
+  val sqlFunctions: Seq[(String, Seq[Expression] => Expression)] = {
+    import GraftBridge.expression
+    Seq[(String, SqlArgs => Expression)](
+      "minhash_bands" -> (a => expression(minhash_bands(a.col(0), a.int(1, 32), a.int(2, 8)))),
+      "shingle_ids" -> (a => expression(shingle_ids(a.col(0), a.int(1, 3)))),
+      "simhash64" -> (a => expression(simhash(a.col(0)))),
+      "simhash_md5" -> (a => expression(simhash_md5(a.col(0)))),
+      "hashed_quality" -> (a => expression(hashed_quality(a.col(0), a.int(1, 1024)))),
+      "nfc_normalize" -> (a => expression(nfc_normalize(a.col(0)))),
+      // blocklist_terms(text, 'a', 'b', ...): varargs of string literals
+      // compile into one cached Aho–Corasick automaton
+      "blocklist_terms" -> (a => expression(blocklist_terms(a.col(0), a.strings(1)))),
+      // topk_ids(score, id, k) aggregate: ids of the k highest scores
+      // (score DESC, id ASC), bounded map-side heaps
+      "topk_ids" -> (a => TopKIds(a.expr(0), a.expr(1),
+        a.int(2, throw new IllegalArgumentException("topk_ids needs (score, id, k)"))))
+    ).map { case (name, build) =>
+      name -> ((args: Seq[Expression]) => build(new SqlArgs(name, args)))
+    }
+  }
+
+  /** One SQL call's arguments; integer and term parameters must be
+    * literals, since they shape the kernel rather than feed it per row. */
+  private final class SqlArgs(name: String, args: Seq[Expression]) {
+    def expr(i: Int): Expression = args(i)
+    def col(i: Int): Column = GraftBridge.column(args(i))
+    def int(i: Int, default: => Int): Int = args.lift(i) match {
+      case Some(Literal(v: Int, _)) => v
+      case Some(other) => throw new IllegalArgumentException(
+        s"$name argument ${i + 1} must be an integer literal, got $other")
+      case None => default
+    }
+    def strings(from: Int): Seq[String] = args.drop(from).map {
+      case Literal(v: UTF8String, _) => v.toString
+      case other => throw new IllegalArgumentException(
+        s"$name arguments from ${from + 1} on must be string literals, got $other")
+    }
+  }
+
+  /** Register [[sqlFunctions]] on an existing session (cluster-wide
+    * registration goes through [[GraftExtensions]]). */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_bands",
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        MinHashBands(children.head, 32, 8),
-      "scala_udf")
+    sqlFunctions.foreach { case (name, build) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, build, "scala_udf")
+    }
 
   def minhash_bands(shingleIds: Column, numPerm: Int = 32, bands: Int = 8): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(
-      MinHashBands(GraftBridge.expression(shingleIds), numPerm, bands))
+    require(numPerm % bands == 0, "numPerm must be divisible by bands")
+    kernel("minhashBands", Longs, Seq(shingleIds, literal(numPerm), literal(bands)),
+      Seq(Longs, IntegerType, IntegerType))
   }
 
   /** 64-bit SimHash from token hashes: each bit position tallies ±1 votes
@@ -99,10 +167,8 @@ object GraftFunctions {
     fp
   }
 
-  def simhash(tokenHashes: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(SimHash64(GraftBridge.expression(tokenHashes)))
-  }
+  def simhash(tokenHashes: Column): Column =
+    kernel("simhash64", LongType, Seq(tokenHashes), Seq(Longs))
 
   private val Md5Local = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =
@@ -117,8 +183,8 @@ object GraftFunctions {
     * near-dup path (the round-3 judge's top ask; xxhash64 seeding was not
     * reproducible outside Spark). One codegen'd primitive loop per row — no
     * interpreted HOF lambda per token. Called from generated code. */
-  def simhashMd5(text: org.apache.spark.unsafe.types.UTF8String): Long = {
-    val tokens = text.toLowerCase.split(WhitespaceRe, -1)
+  def simhashMd5(text: UTF8String, icuLower: Boolean): Long = {
+    val tokens = lowered(text, icuLower).split(WhitespaceRe, -1)
     val md = Md5Local.get()
     val votes = new Array[Int](64)
     var i = 0
@@ -143,10 +209,8 @@ object GraftFunctions {
     fp
   }
 
-  def simhash_md5(text: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(SimHashMd5(GraftBridge.expression(text)))
-  }
+  def simhash_md5(text: Column): Column =
+    kernel("simhashMd5", LongType, Seq(text, icuLower), Seq(StringType, BooleanType))
 
   /** Unicode NFC normalization (canonical composition) — called from
     * generated code. Already-normalized strings (the overwhelming
@@ -162,10 +226,8 @@ object GraftFunctions {
       java.text.Normalizer.normalize(s, java.text.Normalizer.Form.NFC))
   }
 
-  def nfc_normalize(text: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(NfcNormalize(GraftBridge.expression(text)))
-  }
+  def nfc_normalize(text: Column): Column =
+    kernel("nfcNormalize", StringType, Seq(text), Seq(StringType))
 
   private val WhitespaceRe =
     org.apache.spark.unsafe.types.UTF8String.fromString("\\s+")
@@ -178,8 +240,8 @@ object GraftFunctions {
     * `split(lower(text), '\s+')` — but as one primitive loop per row
     * instead of an interpreted lambda per shingle. Called from generated
     * code. */
-  def shingleIds(text: org.apache.spark.unsafe.types.UTF8String, k: Int): ArrayData = {
-    val tokens = text.toLowerCase.split(WhitespaceRe, -1)
+  def shingleIds(text: UTF8String, k: Int, icuLower: Boolean): ArrayData = {
+    val tokens = lowered(text, icuLower).split(WhitespaceRe, -1)
     val n = tokens.length
     val windows = math.max(n - k + 1, 1)
     val out = new Array[Long](windows)
@@ -199,10 +261,9 @@ object GraftFunctions {
     new GenericArrayData(dedup.result())
   }
 
-  def shingle_ids(text: Column, k: Int = 3): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(ShingleIds(GraftBridge.expression(text), k))
-  }
+  def shingle_ids(text: Column, k: Int = 3): Column =
+    kernel("shingleIds", Longs, Seq(text, literal(k), icuLower),
+      Seq(StringType, IntegerType, BooleanType))
 
   /** Word k-gram md5-prefix digests as longs — bit-for-bit the
     * `substring(md5(concat_ws(' ', slice(w, i, k))), 1, 16)` contract
@@ -215,9 +276,9 @@ object GraftFunctions {
     * gram map stages — the [[substrWindowHashes]] finding). `distinct`
     * mirrors `array_distinct` (first-occurrence order). Called from
     * generated code. */
-  def wordGramDigests(text: org.apache.spark.unsafe.types.UTF8String,
-                      k: Int, distinct: Boolean): ArrayData = {
-    val tokens = text.toLowerCase.split(WhitespaceRe, -1)
+  def wordGramDigests(text: UTF8String, k: Int, distinct: Boolean,
+                      icuLower: Boolean): ArrayData = {
+    val tokens = lowered(text, icuLower).split(WhitespaceRe, -1)
     val n = tokens.length
     val windows = math.max(n - k + 1, 1)
     val md = Md5Local.get()
@@ -315,12 +376,9 @@ object GraftFunctions {
       if (m == out.length) out else java.util.Arrays.copyOf(out, m)
   }
 
-  def word_gram_digests(text: Column, k: Int,
-                        distinct: Boolean): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(
-      WordGramDigests(GraftBridge.expression(text), k, distinct))
-  }
+  def word_gram_digests(text: Column, k: Int, distinct: Boolean): Column =
+    kernel("wordGramDigests", Longs, Seq(text, literal(k), literal(distinct), icuLower),
+      Seq(StringType, IntegerType, BooleanType, BooleanType))
 
   /** Every `stride`-th `window`-character substring's md5-prefix digest
     * as a SIGNED 64-BIT LONG — bit-for-bit the first 16 hex chars of the
@@ -405,11 +463,9 @@ object GraftFunctions {
     new GenericArrayData(seen.toArray.asInstanceOf[Array[Any]])
   }
 
-  def char_grams_distinct(text: Column, q: Int): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(
-      CharGramsDistinct(GraftBridge.expression(text), q))
-  }
+  def char_grams_distinct(text: Column, q: Int): Column =
+    kernel("charGramsDistinct", ArrayType(StringType, containsNull = false),
+      Seq(text, literal(q)), Seq(StringType, IntegerType))
 
   /** Per-document repetition statistics in ONE in-row pass — value-
     * identical to the explode→count→aggregate chain over
@@ -423,9 +479,8 @@ object GraftFunctions {
     * equal-adjacency matters), so counts are EXACT: no hashing is
     * involved anywhere. Returns a struct of five longs. Called from
     * generated code. */
-  def repetitionStats(text: org.apache.spark.unsafe.types.UTF8String)
-  : InternalRow = {
-    val tokens = text.toLowerCase.split(WhitespaceRe, -1)
+  def repetitionStats(text: UTF8String, icuLower: Boolean): InternalRow = {
+    val tokens = lowered(text, icuLower).split(WhitespaceRe, -1)
     val n = tokens.length
     def runStats(arr: Array[org.apache.spark.unsafe.types.UTF8String])
     : (Long, Long) = {
@@ -462,10 +517,10 @@ object GraftFunctions {
       Array[Any](n.toLong, uDistinct, uTop, m.toLong, bTop))
   }
 
-  def repetition_stats(text: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(RepetitionStats(GraftBridge.expression(text)))
-  }
+  def repetition_stats(text: Column): Column =
+    kernel("repetitionStats", StructType(Seq("n_tokens", "n_distinct_tokens",
+      "top_unigram_n", "n_bigrams", "top_bigram_n").map(StructField(_, LongType, nullable = false))),
+      Seq(text, icuLower), Seq(StringType, BooleanType))
 
   private val TooShort = org.apache.spark.unsafe.types.UTF8String.fromString("too_short")
   private val TooLong = org.apache.spark.unsafe.types.UTF8String.fromString("too_long")
@@ -483,10 +538,9 @@ object GraftFunctions {
     * text: lowering maps no character to or from the six whitespace bytes,
     * so the token count scans the raw bytes and stops at 20, and `length`
     * counts the original characters. Only a text that passes both (at most
-    * 500 chars) is lowered, with Spark's own `lower` (`icuLower` is the
-    * session's ICU case-mapping setting, which `lower` reads too: JVM and
-    * ICU case tables disagree on some code points), and its tokens cut in
-    * place by [[wsTokens]]; so the scratch arrays stay a few KB. Distinct
+    * 500 chars) is lowered, with Spark's own `lower` ([[lowered]]), and
+    * its tokens cut in place by [[wsTokens]]; so the scratch arrays stay a
+    * few KB. Distinct
     * tokens are counted only until the count clears the threshold, in a set
     * that compares token bytes exactly, so a hash collision cannot change a
     * count. A NULL text decides none of the text rules and a NULL lang
@@ -499,8 +553,7 @@ object GraftFunctions {
       if (wsTokens(text.getBaseObject, text.getBaseOffset, text.numBytes(), 20,
           record = false) < 20) return TooShort
       if (text.numChars() > 500) return TooLong
-      val low = org.apache.spark.sql.catalyst.util.CollationSupport.Lower.exec(text,
-        org.apache.spark.sql.catalyst.util.CollationFactory.UTF8_BINARY_COLLATION_ID, icuLower)
+      val low = lowered(text, icuLower)
       val n = wsTokens(low.getBaseObject, low.getBaseOffset, low.numBytes(), Int.MaxValue,
         record = true)
       if (distinctTokensBelow(low, n, (n + 2) / 3)) return LowDiversity
@@ -508,11 +561,10 @@ object GraftFunctions {
     if (lang != null && !lang.equals(English)) NonEnglish else null
   }
 
-  def funnel_first_fail(text: Column, lang: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(
-      FunnelFirstFail(GraftBridge.expression(text), GraftBridge.expression(lang)))
-  }
+  /** Not NULL-propagating: a NULL lang still lets the text rules decide. */
+  def funnel_first_fail(text: Column, lang: Column): Column =
+    kernel("funnelFirstFail", StringType, Seq(text, lang, icuLower),
+      Seq(StringType, StringType, BooleanType), propagateNull = false, returnNullable = true)
 
   /** `size(split(lower(text), '\s+'))` as a byte scan: lowering maps no
     * character to or from the six ASCII whitespace bytes, so the raw text
@@ -521,10 +573,8 @@ object GraftFunctions {
     wsTokens(text.getBaseObject, text.getBaseOffset, text.numBytes(), Int.MaxValue,
       record = false).toLong
 
-  def ws_token_count(text: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(WsTokenCount(GraftBridge.expression(text)))
-  }
+  def ws_token_count(text: Column): Column =
+    kernel("wsTokenCount", LongType, Seq(text), Seq(StringType))
 
   @inline private def isWs(b: Byte): Boolean = b == ' ' || (b >= 9 && b <= 13)
 
@@ -611,11 +661,9 @@ object GraftFunctions {
       ((d(4) & 0xffL) << 24) | ((d(5) & 0xffL) << 16) |
       ((d(6) & 0xffL) << 8) | (d(7) & 0xffL)
 
-  def substr_window_hashes(text: Column, window: Int, stride: Int): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(
-      SubstrWindowHashes(GraftBridge.expression(text), window, stride))
-  }
+  def substr_window_hashes(text: Column, window: Int, stride: Int): Column =
+    kernel("substrWindowHashes", Longs, Seq(text, literal(window), literal(stride)),
+      Seq(StringType, IntegerType, IntegerType))
 
   /** WINNOWED anchored window digests — the sound sampling layer under
     * [[graft.pipeline.Dedup.exactSubstrSpansTwoPass]] (Schleimer,
@@ -703,12 +751,9 @@ object GraftFunctions {
     new GenericArrayData(out.toArray)
   }
 
-  def winnowed_window_hashes(text: Column, window: Int, k: Int,
-                             g: Int): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(
-      WinnowedWindowHashes(GraftBridge.expression(text), window, k, g))
-  }
+  def winnowed_window_hashes(text: Column, window: Int, k: Int, g: Int): Column =
+    kernel("winnowedWindowHashes", Longs, Seq(text, literal(window), literal(k), literal(g)),
+      Seq(StringType, IntegerType, IntegerType, IntegerType))
 
   /** Slot-weight tables for the hashing-trick quality scorer, keyed by
     * bucket count: weight(b) = first-2-md5-bytes("qw"+b) % 17 - 8 — the
@@ -735,9 +780,8 @@ object GraftFunctions {
     * (`aggregate(transform(...))`) evaluates an interpreted lambda with
     * TWO md5-hex round-trips per token and measured ~11× slower at sf1g.
     * Called from generated code. */
-  def hashedQuality(text: org.apache.spark.unsafe.types.UTF8String,
-                    buckets: Int): ArrayData = {
-    val tokens = text.toLowerCase.split(WhitespaceRe, -1)
+  def hashedQuality(text: UTF8String, buckets: Int, icuLower: Boolean): ArrayData = {
+    val tokens = lowered(text, icuLower).split(WhitespaceRe, -1)
     val w = weightsFor(buckets)
     val md = Md5Local.get()
     var n = 0L
@@ -757,10 +801,9 @@ object GraftFunctions {
     new GenericArrayData(Array(n, sum))
   }
 
-  def hashed_quality(text: Column, buckets: Int = 1024): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(HashedQuality(GraftBridge.expression(text), buckets))
-  }
+  def hashed_quality(text: Column, buckets: Int = 1024): Column =
+    kernel("hashedQuality", Longs, Seq(text, literal(buckets), icuLower),
+      Seq(StringType, IntegerType, BooleanType))
 
   /** Compiled Aho–Corasick automaton over a fixed term list — the
     * classic multi-pattern matcher: one pass over the text finds every
@@ -826,453 +869,30 @@ object GraftFunctions {
 
   private val acCache =
     new java.util.concurrent.ConcurrentHashMap[String, AcAutomaton]()
+  // the last key a thread used, by identity: a literal argument is the same
+  // object on every row, so the per-row lookup neither decodes nor hashes it
+  private val acLast = new ThreadLocal[(UTF8String, AcAutomaton)]
 
   /** Distinct blocklist terms present in `text` — one Aho–Corasick pass
     * regardless of blocklist size, where the OR-chain alternative rescans
     * the text once PER TERM (a production NSFW/spam blocklist holds
-    * thousands). `termsKey` is the \u0001-joined term list; it travels as
-    * a codegen reference object and the compiled automaton is cached per
-    * executor. Called from generated code. */
-  def blocklistTerms(text: org.apache.spark.unsafe.types.UTF8String,
-                     termsKey: String): Long = {
-    val ac = acCache.computeIfAbsent(termsKey,
-      k => new AcAutomaton(k.split('\u0001').filter(_.nonEmpty)))
-    ac.distinctTerms(text.toString).toLong
+    * thousands). `termsKey` is the \u0001-joined term list, a literal of
+    * the column; the compiled automaton is cached per executor. Called
+    * from generated code. */
+  def blocklistTerms(text: UTF8String, termsKey: UTF8String): Long = {
+    var last = acLast.get()
+    if (last == null || (last._1 ne termsKey)) {
+      last = termsKey -> acCache.computeIfAbsent(termsKey.toString,
+        k => new AcAutomaton(k.split('\u0001').filter(_.nonEmpty)))
+      acLast.set(last)
+    }
+    last._2.distinctTerms(text.toString).toLong
   }
 
   def blocklist_terms(text: Column, terms: Seq[String]): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(BlocklistTerms(GraftBridge.expression(text), terms))
+    require(terms.nonEmpty && terms.forall(t => t.nonEmpty && !t.contains('\u0001')),
+      "blocklist terms must be non-empty and free of U+0001")
+    kernel("blocklistTerms", LongType, Seq(text, literal(terms.mkString("\u0001"))),
+      Seq(StringType, StringType))
   }
-}
-
-/** array<long> shingle ids → array<long> of LSH band bucket hashes. */
-final case class MinHashBands(child: Expression, numPerm: Int, bands: Int)
-    extends UnaryExpression {
-
-  require(numPerm % bands == 0, "numPerm must be divisible by bands")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes()
-  : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"minhash_bands expects array<bigint>, got $other")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    GraftFunctions.minhashBands(input.asInstanceOf[ArrayData], numPerm, bands)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.GraftFunctions.minhashBands($c, $numPerm, $bands);")
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashBands =
-    copy(child = newChild)
-}
-
-/** string → array<long> distinct word-k-gram shingle ids (whole-stage
-  * codegen via a static helper — the dedup pipeline's hottest map). */
-final case class ShingleIds(child: Expression, k: Int) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes()
-  : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = child.dataType match {
-    case StringType =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"shingle_ids expects string, got $other")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    GraftFunctions.shingleIds(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.GraftFunctions.shingleIds($c, $k);")
-
-  override protected def withNewChildInternal(newChild: Expression): ShingleIds =
-    copy(child = newChild)
-}
-
-/** string → array of word k-gram md5-prefix digests as longs (see
-  * [[GraftFunctions.wordGramDigests]]); one codegen'd call per row. */
-final case class WordGramDigests(child: Expression, k: Int,
-                                 distinct: Boolean) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes()
-  : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = child.dataType match {
-    case StringType =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"word_gram_digests expects string, got $other")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    GraftFunctions.wordGramDigests(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      k, distinct)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.GraftFunctions" +
-        s".wordGramDigests($c, $k, $distinct);")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): WordGramDigests = copy(child = newChild)
-}
-
-/** string → struct of five per-document repetition statistics (see
-  * [[GraftFunctions.repetitionStats]]); one codegen'd call per row. */
-final case class RepetitionStats(child: Expression)
-  extends UnaryExpression {
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_tokens", LongType, nullable = false),
-    StructField("n_distinct_tokens", LongType, nullable = false),
-    StructField("top_unigram_n", LongType, nullable = false),
-    StructField("n_bigrams", LongType, nullable = false),
-    StructField("top_bigram_n", LongType, nullable = false)))
-
-  override def checkInputDataTypes()
-  : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = child.dataType match {
-    case StringType =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"repetition_stats expects string, got $other")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    GraftFunctions.repetitionStats(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.GraftFunctions.repetitionStats($c);")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): RepetitionStats = copy(child = newChild)
-}
-
-/** (text, lang) → the quality funnel's first failing rule, NULL when the
-  * document is kept (see [[GraftFunctions.funnelFirstFail]]); one
-  * codegen'd call per row. Not null-intolerant: a NULL lang still lets the
-  * text rules decide. */
-final case class FunnelFirstFail(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  // the case mapping `lower` itself would use in this session
-  private lazy val icuLower =
-    SQLConf.get.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED)
-
-  override def dataType: DataType = StringType
-
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes()
-  : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (StringType, StringType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"funnel_first_fail expects (string, string), got $other")
-    }
-
-  override def eval(input: InternalRow): Any =
-    GraftFunctions.funnelFirstFail(
-      left.eval(input).asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      right.eval(input).asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      icuLower)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val t = left.genCode(ctx)
-    val l = right.genCode(ctx)
-    ev.copy(code = code"""
-      |${t.code}
-      |${l.code}
-      |${CodeGenerator.javaType(dataType)} ${ev.value} =
-      |  graft.functions.GraftFunctions.funnelFirstFail(
-      |    ${t.isNull} ? null : ${t.value}, ${l.isNull} ? null : ${l.value}, $icuLower);
-      |boolean ${ev.isNull} = ${ev.value} == null;""".stripMargin)
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): FunnelFirstFail =
-    copy(left = newLeft, right = newRight)
-}
-
-/** string → `size(split(lower(text), '\s+'))` as a long (see
-  * [[GraftFunctions.wsTokenCount]]); one codegen'd call per row. */
-final case class WsTokenCount(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes()
-  : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = child.dataType match {
-    case StringType =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"ws_token_count expects string, got $other")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    GraftFunctions.wsTokenCount(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.GraftFunctions.wsTokenCount($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): WsTokenCount =
-    copy(child = newChild)
-}
-
-/** string → array of distinct character q-grams (see
-  * [[GraftFunctions.charGramsDistinct]]); one codegen'd call per row. */
-final case class CharGramsDistinct(child: Expression, q: Int)
-  extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def checkInputDataTypes()
-  : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = child.dataType match {
-    case StringType =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"char_grams_distinct expects string, got $other")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    GraftFunctions.charGramsDistinct(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], q)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.GraftFunctions" +
-        s".charGramsDistinct($c, $q);")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): CharGramsDistinct = copy(child = newChild)
-}
-
-/** string → array of md5-prefix-64-bit window digests as longs (see
-  * [[GraftFunctions.substrWindowHashes]]); one codegen'd call per row. */
-final case class SubstrWindowHashes(child: Expression, window: Int,
-                                    stride: Int) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes()
-  : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = child.dataType match {
-    case StringType =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"substr_window_hashes expects string, got $other")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    GraftFunctions.substrWindowHashes(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      window, stride)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.GraftFunctions" +
-        s".substrWindowHashes($c, $window, $stride);")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): SubstrWindowHashes = copy(child = newChild)
-}
-
-/** string → array of winnowed anchor digests as longs (see
-  * [[GraftFunctions.winnowedWindowHashes]]); one codegen'd call per
-  * row. */
-final case class WinnowedWindowHashes(child: Expression, window: Int,
-                                      k: Int, g: Int)
-  extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes()
-  : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = child.dataType match {
-    case StringType =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"winnowed_window_hashes expects string, got $other")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    GraftFunctions.winnowedWindowHashes(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      window, k, g)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.GraftFunctions" +
-        s".winnowedWindowHashes($c, $window, $k, $g);")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): WinnowedWindowHashes = copy(child = newChild)
-}
-
-/** array<long> token hashes → 64-bit SimHash fingerprint. */
-final case class SimHash64(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes()
-  : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"simhash expects array<bigint>, got $other")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    GraftFunctions.simhash64(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.GraftFunctions.simhash64($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash64 =
-    copy(child = newChild)
-}
-
-/** string → 64-bit SimHash with the md5-derived engine-portable token hash
-  * (see [[GraftFunctions.simhashMd5]]). */
-final case class SimHashMd5(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes()
-  : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = child.dataType match {
-    case StringType =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"simhash_md5 expects string, got $other")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    GraftFunctions.simhashMd5(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.GraftFunctions.simhashMd5($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): SimHashMd5 =
-    copy(child = newChild)
-}
-
-/** string → NFC-normalized string (see [[GraftFunctions.nfcNormalize]]). */
-final case class NfcNormalize(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-
-  override def checkInputDataTypes()
-  : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = child.dataType match {
-    case StringType =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"nfc_normalize expects string, got $other")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    GraftFunctions.nfcNormalize(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.GraftFunctions.nfcNormalize($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): NfcNormalize =
-    copy(child = newChild)
-}
-
-/** string → array<long> [n_tokens, w_sum] for the hashing-trick quality
-  * scorer (see [[GraftFunctions.hashedQuality]]). */
-final case class HashedQuality(child: Expression, buckets: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes()
-  : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = child.dataType match {
-    case StringType =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"hashed_quality expects string, got $other")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    GraftFunctions.hashedQuality(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], buckets)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.GraftFunctions.hashedQuality($c, $buckets);")
-
-  override protected def withNewChildInternal(newChild: Expression): HashedQuality =
-    copy(child = newChild)
-}
-
-/** string → count of DISTINCT blocklist terms appearing as substrings —
-  * one Aho–Corasick pass over the text however many terms the blocklist
-  * holds (the OR-chain alternative rescans the text once per term; a
-  * production NSFW/spam blocklist holds thousands). The term list ships
-  * as a codegen reference object (its U+0001-joined form) and the
-  * automaton compiles once per executor
-  * ([[GraftFunctions.blocklistTerms]]' cache). */
-final case class BlocklistTerms(child: Expression, terms: Seq[String])
-    extends UnaryExpression {
-
-  require(terms.nonEmpty &&
-    terms.forall(t => t.nonEmpty && !t.contains('\u0001')),
-    "blocklist terms must be non-empty and free of U+0001")
-
-  private val termsKey = terms.mkString("\u0001")
-
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes()
-  : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = child.dataType match {
-    case StringType =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"blocklist_terms expects string, got $other")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    GraftFunctions.blocklistTerms(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], termsKey)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("blocklistTermsKey", termsKey, "java.lang.String")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.GraftFunctions.blocklistTerms($c, $ref);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): BlocklistTerms =
-    copy(child = newChild)
 }

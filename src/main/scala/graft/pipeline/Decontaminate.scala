@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * Scale shape: the benchmark side is small by construction (eval suites
   * are thousands of documents, the corpus is the 100 TB side), so its
   * distinct k-gram id set broadcasts; the corpus streams once, map-only,
-  * through shingling ([[graft.functions.ShingleIds]], codegen'd 64-bit
+  * through shingling ([[graft.functions.GraftFunctions.shingle_ids]], codegen'd 64-bit
   * gram ids — grams never shuffle as strings) and a broadcast semi-join,
   * then one aggregation keyed on doc_id. No corpus-side shuffle carries
   * more than (doc_id, gram_id) for the *matching* grams.

@@ -24,7 +24,7 @@ object Dedup {
   /** Word k-shingle set per document (distinct, lower-cased), reduced to
     * 64-bit shingle ids: each shingle string is hashed exactly once; all
     * downstream minhash permutations mix the cheap long id, not the string.
-    * One native codegen'd expression per row ([[graft.functions.ShingleIds]]
+    * One native codegen'd kernel per row ([[graft.functions.GraftFunctions.shingle_ids]]
     * — bit-identical to the interpreted HOF chain, equivalence pinned in
     * `PipelineSpec`). Repartitioned on doc_id so a single input file still
     * fans out across the cluster for the hash-heavy map stages. */
@@ -199,7 +199,7 @@ object Dedup {
   /** 64-bit SimHash per document: per-token hash, each bit position votes
     * ±1 (duplicate tokens weight naturally), sign of the vote sum becomes
     * the bit. Map-only, one native codegen'd expression per row
-    * ([[graft.functions.SimHashMd5]]) — no explode, no 64-counter shuffle,
+    * ([[graft.functions.GraftFunctions.simhash_md5]]) — no explode, no 64-counter shuffle,
     * no interpreted HOF. The token hash is md5-derived and therefore
     * engine-portable: the exhaustive DuckDB hamming-pair oracle reproduces
     * the fingerprints bit-identically and gate-checks the whole near-dup

@@ -1504,9 +1504,8 @@ object Lakehouse {
     * skip-columns-only scan), sidecars written per (gen dir, column).
     * Values bloom as their CANONICAL STRING (integrals print exactly),
     * so the probe side needs no hash-compatibility with any engine
-    * internals — both sides go through the public sketch API. Filter
-    * size comes from `graft.lake.bloomItemsPerFile` (default 200k) and
-    * `graft.lake.bloomFpp` (default 0.03) — size for the file-row
+    * internals — both sides go through the public sketch API. Filters
+    * are sized for 200k items at 3% false positives — the file-row
     * TARGET, not the corpus. The collect is bounded by file count ×
     * column count × filter bytes (KBs per file; at 10⁶ files shard the
     * sidecar build per partition — documented, not yet needed). */
@@ -1516,8 +1515,8 @@ object Lakehouse {
                           readSchema: Option[org.apache.spark.sql.types.StructType]
                          ): Map[String, Set[String]] = {
     if (cols.isEmpty || dirToRel.isEmpty) return Map.empty
-    val n = spark.conf.get("graft.lake.bloomItemsPerFile", "200000").toLong
-    val fpp = spark.conf.get("graft.lake.bloomFpp", "0.03").toDouble
+    val n = 200000L
+    val fpp = 0.03
     val reader = readSchema.fold(spark.read)(spark.read.schema)
     val src = reader.parquet(dirToRel.keys.toSeq.sorted: _*)
       .select(col("_metadata.file_path").as("__f") +:
@@ -1568,8 +1567,8 @@ object Lakehouse {
   }
 
   /** Sidecars are immutable with their generation — cache parses.
-    * Byte-bounded LRU (`graft.lake.bloomCacheBytes`, default 64 MB —
-    * sidecars are kilobytes each, so the default holds the whole skip
+    * Byte-bounded LRU (64 MB — sidecars are kilobytes each, so that
+    * holds the whole skip
     * layer of a 10⁴-partition lake), accounted by the filters'
     * serialized size. The r18 shape (128-entry cap, full `clear()` when
     * exceeded) thrashed at exactly the scale the skip layer targets:
@@ -1577,7 +1576,7 @@ object Lakehouse {
     * sequentially, on the driver, at plan time. */
   private[graft] val bloomCache = new ByteLruCache[
     (String, String), Map[String, org.apache.spark.util.sketch.BloomFilter]](
-    () => confLong("graft.lake.bloomCacheBytes", 64L << 20),
+    () => 64L << 20,
     m => m.valuesIterator.map(_.bitSize() / 8 + 64L).sum + 64L)
 
   private def parseBloomSidecar(fs: org.apache.hadoop.fs.FileSystem,
@@ -3234,6 +3233,8 @@ object Lakehouse {
     * committed state, and skips. */
   private[graft] val IvmEpochProp = "graft.ivm.epoch"
   private[graft] val IvmBucketCol = "bucket"
+  /** Snapshots an aggregate table's retention GC keeps: the reader window. */
+  private val IvmKeepSnapshots = 10
   /** Names the state layout owns — a user column so named would be
     * silently replaced by the layout's own hash/staging columns. */
   private[graft] val IvmReservedCols: Set[String] =
@@ -3334,21 +3335,12 @@ object Lakehouse {
     delta.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     var recPinned: Option[DataFrame] = None
     var foldsPinned: Seq[DataFrame] = Nil
-    // retention GC, shared by the narrow and wide write paths: the
-    // walk is O(stateBuckets), so it SKIPS while nothing is over
-    // retention, and wide tables can amortize it further
-    // (`graft.lake.ivm.gcEveryEpochs`: run every Nth over-retention
-    // epoch — retention then floats between keep and keep+N, which
-    // only widens the reader window)
+    // retention GC (the newest 10 snapshots), shared by the narrow and
+    // wide write paths: the walk is O(stateBuckets), so it SKIPS while
+    // nothing is over retention
     def maybeGc(): Unit = {
-      val keep = spark.conf.get("graft.lake.ivm.keepSnapshots", "10").toInt
-      if (keep > 0) {
-        val kept = snapIds(fsOf(spark, td), td)
-        val every =
-          spark.conf.get("graft.lake.ivm.gcEveryEpochs", "1").toInt
-        if (kept.size > keep && (kept.size - keep) % math.max(1, every)
-          == 0) { snapshotGc(spark, tableDir, keep); () }
-      }
+      val kept = snapIds(fsOf(spark, td), td)
+      if (kept.size > IvmKeepSnapshots) { snapshotGc(spark, tableDir, IvmKeepSnapshots); () }
     }
     try {
       // bounded by min(changed groups, buckets) — never rows
@@ -3554,7 +3546,7 @@ object Lakehouse {
     * the same manifest CAS (crash-safe exactly-once, no marker files).
     * Readers ([[readAggregate]]) are snapshot-isolated: they resolve a
     * committed manifest whose generations GC keeps for
-    * `graft.lake.ivm.keepSnapshots` epochs (default 10), and time
+    * 10 epochs, and time
     * travel over the state's own history comes free.
     *
     * Beyond the additive COUNT/SUM family (AVG = sum/count
@@ -3664,7 +3656,7 @@ object Lakehouse {
   /** The current state of a [[maintainAggregate]] table: a LAZY
     * snapshot-lake read of the newest committed state (bucket column
     * dropped). Snapshot-isolated — the resolved manifest's generations
-    * survive `graft.lake.ivm.keepSnapshots` (default 10) further
+    * survive 10 further
     * maintenance epochs before GC can reclaim them, so act on the
     * result within that window (or persist/collect it) when the
     * maintainer runs concurrently. Time travel over the state's own

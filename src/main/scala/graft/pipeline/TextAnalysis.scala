@@ -26,8 +26,8 @@ object TextAnalysis {
       length(col("text")).cast("long").as("n_chars"))
 
   /** Canonical text normalization — the first map of every ingest: Unicode
-    * NFC composition (native codegen'd expression,
-    * [[graft.functions.NfcNormalize]] — é as e+◌́ and é as one codepoint
+    * NFC composition (native codegen'd kernel,
+    * [[graft.functions.GraftFunctions.nfc_normalize]] — é as e+◌́ and é as one codepoint
     * must dedup/shingle identically), control characters to spaces, space
     * runs collapsed, ends trimmed. Map-only and engine-portable: the
     * DuckDB oracle is `nfc_normalize` + the same two regexes (explicit
@@ -51,7 +51,7 @@ object TextAnalysis {
     * `groupBy(first_fail)` of this output IS the funnel report that says
     * where the corpus is being lost, and rule order is explicit so the
     * numbers are stable when rules are added. Map-only: the rules run as
-    * one native kernel per row ([[graft.functions.FunnelFirstFail]]) and
+    * one native kernel per row ([[graft.functions.GraftFunctions.funnel_first_fail]]) and
     * the token count as a byte scan; the rules are integer and string
     * comparisons over `split(lower(text), '\s+')`, so the attribution is
     * exact across engines. */

@@ -6,7 +6,9 @@ import org.apache.spark.SparkEnv
 import org.apache.spark.io.CompressionCodec
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.types.DataType
 
 /** Bridge into the classic Column ↔ Expression converters, which are
   * `private[sql]` in Spark 4 (Column is Connect-neutral there). This is the
@@ -15,6 +17,16 @@ import org.apache.spark.sql.execution.SQLExecution
 object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  /** A call of the static method `method` of `cls` (a Scala object's class
+    * too: Spark drops its trailing `$`) as a Column: Spark's
+    * `StaticInvoke`, whose `inputTypes` parameter is the `private[sql]`
+    * `AbstractDataType`. */
+  def staticInvoke(cls: Class[_], dataType: DataType, method: String, args: Seq[Column],
+                   inputTypes: Seq[DataType], propagateNull: Boolean,
+                   returnNullable: Boolean): Column =
+    column(StaticInvoke(cls, dataType, method, args.map(expression), inputTypes,
+      propagateNull, returnNullable))
 
   /** Release the block-manager blocks behind a `localCheckpoint()`ed frame.
     * Checkpoint blocks are otherwise reclaimed only by the GC-driven

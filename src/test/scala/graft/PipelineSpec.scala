@@ -273,8 +273,12 @@ class PipelineSpec extends SparkTestBase {
     import org.apache.spark.sql.functions._
     val s = spark
     import s.implicits._
-    // edge rows beside the corpus: empty text, and fewer tokens than k
-    val edge = Seq(-1L -> "", -2L -> "solo", -3L -> "Two Words", -4L -> "  lead gap")
+    // edge rows beside the corpus: empty text, fewer tokens than k, and
+    // U+A7C0/U+A7C1 tokens that merge only under Spark's (ICU) `lower`; an
+    // RDD, so the optimizer cannot fold their projection by interpreted eval
+    val edge = spark.sparkContext.parallelize(Seq(-1L -> "", -2L -> "solo",
+      -3L -> "Two Words", -4L -> "  lead gap",
+      -5L -> "\ua7c0q \ua7c1q \ua7c0q \ua7c1q \ua7c0q", -6L -> "\ua7c1q \ua7c0Q x"), 2)
       .toDF("doc_id", "text")
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))
@@ -402,22 +406,72 @@ class PipelineSpec extends SparkTestBase {
         spark.conf.unset("spark.sql.codegen.factoryMode")
       }
     }
-    // and each expression's own eval, called on the raw bytes of every row
+    // and each builder's expression's own eval, called on the raw bytes of every row
+    import org.apache.spark.sql.GraftBridge
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.types.StringType
     import org.apache.spark.unsafe.types.UTF8String
     val rows = expected.join(funnelCorpus, "doc_id")
       .select(col("text").cast("binary"), col("lang"), col("want"), col("want_n")).collect()
     val evalBad = rows.filter { r =>
-      val text = Literal(Option(r.getAs[Array[Byte]](0)).map(UTF8String.fromBytes).orNull,
-        StringType)
-      val lang = Literal(Option(r.getString(1)).map(UTF8String.fromString).orNull, StringType)
-      val first = graft.functions.FunnelFirstFail(text, lang).eval()
-      val n = graft.functions.WsTokenCount(text).eval()
+      val text = GraftBridge.column(Literal(
+        Option(r.getAs[Array[Byte]](0)).map(UTF8String.fromBytes).orNull, StringType))
+      val lang = GraftBridge.column(Literal(
+        Option(r.getString(1)).map(UTF8String.fromString).orNull, StringType))
+      val first = GraftBridge.expression(
+        graft.functions.GraftFunctions.funnel_first_fail(text, lang)).eval()
+      val n = GraftBridge.expression(graft.functions.GraftFunctions.ws_token_count(text)).eval()
       Option(first).map(_.toString) != Option(r.getString(2)) || n != r.get(3)
     }
     assert(rows.length == funnelCorpus.count())
     assert(evalBad.isEmpty, "eval mismatches:\n" + evalBad.take(10).mkString("\n"))
+  }
+
+  test("every native kernel: whole-stage, per-expression and no codegen give the same rows") {
+    val F = graft.functions.GraftFunctions
+    val text = col("text")
+    // each builder's column, and the helper its generated code must call
+    val kernels = Seq(
+      F.shingle_ids(text, 3) -> "shingleIds",
+      F.minhash_bands(F.shingle_ids(text, 3), 32, 8) -> "minhashBands",
+      F.funnel_first_fail(text, col("lang")) -> "funnelFirstFail",
+      F.ws_token_count(text) -> "wsTokenCount",
+      F.repetition_stats(text) -> "repetitionStats",
+      F.word_gram_digests(text, 3, distinct = true) -> "wordGramDigests",
+      F.char_grams_distinct(text, 4) -> "charGramsDistinct",
+      F.substr_window_hashes(text, 16, 8) -> "substrWindowHashes",
+      F.winnowed_window_hashes(text, 24, 5, 8) -> "winnowedWindowHashes",
+      F.simhash(F.shingle_ids(text, 2)) -> "simhash64",
+      F.simhash_md5(text) -> "simhashMd5",
+      F.nfc_normalize(text) -> "nfcNormalize",
+      F.hashed_quality(text, 64) -> "hashedQuality",
+      F.blocklist_terms(text, Seq("ab", "yz", "\ua7c1")) -> "blocklistTerms")
+    // funnelCorpus is an RDD, so every mode below runs its own evaluator
+    def frame = funnelCorpus.select(col("doc_id") +: kernels.zipWithIndex.map {
+      case ((k, _), i) => k.as(s"k$i") }: _*)
+    val code = org.apache.spark.sql.execution.debug.codegenString(
+      frame.queryExecution.executedPlan)
+    kernels.foreach { case (_, helper) =>
+      assert(code.contains(s"graft.functions.GraftFunctions.$helper("),
+        s"no direct $helper call in the whole-stage code")
+    }
+    def rows(wholeStage: String, factory: String) = {
+      spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+      spark.conf.set("spark.sql.codegen.factoryMode", factory)
+      try frame.orderBy("doc_id").collect().toSeq
+      finally {
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+      }
+    }
+    val whole = rows("true", "FALLBACK")
+    assert(whole.length == funnelCorpus.count())
+    for ((wholeStage, factory) <- Seq("false" -> "FALLBACK", "false" -> "NO_CODEGEN")) {
+      val got = rows(wholeStage, factory)
+      val bad = whole.zip(got).filter { case (a, b) => a != b }
+      assert(got.length == whole.length && bad.isEmpty,
+        s"wholeStage=$wholeStage factoryMode=$factory differs:\n" + bad.take(3).mkString("\n"))
+    }
   }
 
   test("ivfpq ADC ranks a planted near-duplicate first") {

@@ -431,7 +431,7 @@ class PlanAuditSpec extends SparkTestBase {
       s"normalization must stay map-only:\n$plan")
     // `*(1)` is the whole-stage-codegen stage marker in simpleString plans
     assert(plan.contains("*(1)"),
-      s"native NfcNormalize must stay inside codegen:\n$plan")
+      s"native nfc_normalize must stay inside codegen:\n$plan")
   }
 
   test("the quality funnel plans as one native kernel: no split, no array_distinct") {
@@ -456,7 +456,7 @@ class PlanAuditSpec extends SparkTestBase {
     val all = plans.asScala.toSeq
     all.foreach(p => assert(!p.contains("array_distinct") && !p.contains("split("),
       s"the funnel runs as an array-expression chain:\n$p"))
-    assert(all.exists(_.contains("funnelfirstfail(")), all.mkString("\n"))
+    assert(all.exists(_.contains("GraftFunctions.funnelFirstFail(")), all.mkString("\n"))
   }
 
   test("corpusDiff is a single digest join: no window, no cartesian") {
@@ -486,37 +486,8 @@ class PlanAuditSpec extends SparkTestBase {
   }
 
   test("extension-injected SQL functions: shingle_ids / simhash64 / minhash_bands") {
-    val ext = new graft.functions.GraftExtensions
-    // session already exists; register via the same builders the extension uses
+    // the same table GraftExtensions injects into new sessions
     graft.functions.GraftFunctions.register(spark)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingle_ids",
-      (cs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.ShingleIds(cs.head, 3), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64",
-      (cs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.SimHash64(cs.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hashed_quality",
-      (cs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.HashedQuality(cs.head, 1024), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nfc_normalize",
-      (cs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.NfcNormalize(cs.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "blocklist_terms",
-      (cs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.BlocklistTerms(cs.head, cs.tail.map {
-          case org.apache.spark.sql.catalyst.expressions.Literal(
-            v: org.apache.spark.unsafe.types.UTF8String, _) => v.toString
-          case other => sys.error(s"non-literal term $other")
-        }), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "topk_ids",
-      (cs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.TopKIds(cs.head, cs(1), 2), "scala_udf")
     val r = spark.sql(
       "SELECT size(shingle_ids('a b c d')) AS ns, simhash64(array(1L, 2L)) AS sh, " +
         "hashed_quality('a b c d') AS hq, nfc_normalize('café') AS nn, " +
@@ -528,10 +499,9 @@ class PlanAuditSpec extends SparkTestBase {
     assert(r.getLong(4) == 1L) // 'bad' present, 'worse' absent
     // the aggregate form: top-2 ids by score through SQL
     val agg = spark.sql(
-      "SELECT topk_ids(s, i) AS top FROM VALUES (1.0D, 10L), (3.0D, 30L), " +
+      "SELECT topk_ids(s, i, 2) AS top FROM VALUES (1.0D, 10L), (3.0D, 30L), " +
         "(2.0D, 20L) AS t(s, i)")
       .collect()(0).getSeq[Long](0)
     assert(agg == Seq(30L, 20L))
-    assert(ext != null)
   }
 }

@@ -69,19 +69,26 @@ class Round9Spec extends SparkTestBase {
   }
 
   test("native hashed_quality is bit-identical to the interpreted HOF chain") {
+    import spark.implicits._
     val buckets = 1024
+    // tokens that Spark's (ICU) `lower` rewrites and the JVM's case tables
+    // do not: U+A7C0, U+1C89 and U+10570 each lower only under ICU
+    val edge = spark.sparkContext.parallelize(Seq(
+      -1L -> "\ua7c0q \ua7c1q \ua7c0r \ua7c0s \u1c89a \ud801\udd70b",
+      -2L -> "\ua7c0Q  \ua7c1q x \ua7c0\ua7c0"), 2).toDF("doc_id", "text")
+    val corpus = docs.select("doc_id", "text").unionByName(edge)
     val weightOf = // the SQL-oracle arithmetic, evaluated interpreted
       s"(CAST(conv(substring(md5(concat('qw', CAST(" +
         s"CAST(conv(substring(md5(t), 1, 8), 16, 10) AS BIGINT) % $buckets" +
         s" AS STRING))), 1, 4), 16, 10) AS BIGINT) % 17) - 8"
-    val hof = docs
+    val hof = corpus
       .select(col("doc_id"),
         expr("filter(split(lower(text), '\\\\s+'), x -> length(x) > 0)").as("w"))
       .select(col("doc_id"), size(col("w")).cast("long").as("n_tokens"),
         expr(s"aggregate(transform(w, t -> $weightOf), 0L, (acc, x) -> acc + x)")
           .as("w_sum"))
       .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    val native = TextAnalysis.modelQuality(docs, buckets)
+    val native = TextAnalysis.modelQuality(corpus, buckets)
       .select("doc_id", "n_tokens", "w_sum")
       .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(native.toSeq == hof.toSeq,
