@@ -1568,9 +1568,8 @@ object Lakehouse {
 
   /** Sidecars are immutable with their generation — cache parses.
     * Byte-bounded LRU (64 MB — sidecars are kilobytes each, so that
-    * holds the whole skip
-    * layer of a 10⁴-partition lake), accounted by the filters'
-    * serialized size. The r18 shape (128-entry cap, full `clear()` when
+    * holds the whole skip layer of a 10⁴-partition lake), accounted by
+    * the filters' serialized size. The r18 shape (128-entry cap, full `clear()` when
     * exceeded) thrashed at exactly the scale the skip layer targets:
     * every point query on a >128-dir lake re-read nearly every sidecar,
     * sequentially, on the driver, at plan time. */
@@ -3545,9 +3544,8 @@ object Lakehouse {
     * commits atomically with the last-folded-epoch watermark riding
     * the same manifest CAS (crash-safe exactly-once, no marker files).
     * Readers ([[readAggregate]]) are snapshot-isolated: they resolve a
-    * committed manifest whose generations GC keeps for
-    * 10 epochs, and time
-    * travel over the state's own history comes free.
+    * committed manifest whose generations GC keeps for 10 epochs, and
+    * time travel over the state's own history comes free.
     *
     * Beyond the additive COUNT/SUM family (AVG = sum/count
     * downstream), `minCols`/`maxCols` maintain per-group MIN/MAX by
@@ -3656,10 +3654,9 @@ object Lakehouse {
   /** The current state of a [[maintainAggregate]] table: a LAZY
     * snapshot-lake read of the newest committed state (bucket column
     * dropped). Snapshot-isolated — the resolved manifest's generations
-    * survive 10 further
-    * maintenance epochs before GC can reclaim them, so act on the
-    * result within that window (or persist/collect it) when the
-    * maintainer runs concurrently. Time travel over the state's own
+    * survive 10 further maintenance epochs before GC can reclaim them,
+    * so act on the result within that window (or persist/collect it)
+    * when the maintainer runs concurrently. Time travel over the state's own
     * history: `readSnapshot(spark, tableDir, asOf = …)`. */
   def readAggregate(spark: org.apache.spark.sql.SparkSession,
                     tableDir: String): DataFrame = {
